@@ -32,16 +32,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from typhoon_ocr_spark.operators import dedup, relational, similarity, textstats
 from typhoon_ocr_spark.operators.extract import extract_documents
-from typhoon_ocr_spark.plans.session import PipelineConfig, build_session
+from typhoon_ocr_spark.plans.session import build_session
 from typhoon_ocr_spark.sources.fixtures import tier_dir_for_sf
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# A/B hook for the optional page-spread exchange (BENCH.md); default
-# follows PipelineConfig (spread ON — the measured 32-core winner)
-PIPE_CONFIG = PipelineConfig(
-    page_spread=os.environ.get("SPARK_GRAFT_PAGE_SPREAD", "1") == "1"
-)
 
 
 def _sf_label(sf_dir: str) -> float:
@@ -57,7 +52,7 @@ def run_extraction(spark, pages_path: str, out_dir: str) -> tuple:
     write IS part of the pipeline at 100 TB). Returns (seconds, docs)."""
     pages = spark.read.parquet(pages_path)
     t0 = time.time()
-    extract_documents(pages, PIPE_CONFIG).write.mode("overwrite").parquet(out_dir)
+    extract_documents(pages).write.mode("overwrite").parquet(out_dir)
     wall = time.time() - t0
     n_docs = spark.read.parquet(out_dir).count()
     return wall, n_docs
@@ -196,14 +191,14 @@ def scale_run(cores: int, cluster: bool = False) -> None:
         phase = os.environ.get("SPARK_GRAFT_SCALE_PHASE", "full")
         warm = os.path.join(out, "_warm")
         warm_slice = pages.limit(64 * cores).repartition(2 * cores)
-        extract_documents(warm_slice, PIPE_CONFIG).write.mode("overwrite").parquet(warm)
+        extract_documents(warm_slice).write.mode("overwrite").parquet(warm)
         run_dir = os.path.join(out, "run")
         if phase == "parse":
             from typhoon_ocr_spark.operators.extract import extract_pages
 
-            job = extract_pages(pages, PIPE_CONFIG)
+            job = extract_pages(pages)
         else:
-            job = extract_documents(pages, PIPE_CONFIG)
+            job = extract_documents(pages)
         t0 = time.time()
         if phase == "full":
             job.write.mode("overwrite").parquet(run_dir)

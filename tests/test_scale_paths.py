@@ -24,6 +24,24 @@ def test_salted_spread_is_byte_identical(spark, fixture_dir):
     assert expected.join(salted, DOC_KEYS, "left_anti").count() == 0
 
 
+def test_salt_replaces_the_gated_spread(spark, fixture_dir):
+    """salt_buckets already spreads the parse stage, so the gated
+    unsplittable-input spread must not add a second blob shuffle: on
+    the single-file fixture (where the gate fires) exactly one exchange
+    sits below the parse UDF."""
+    pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
+    assert len(pages.inputFiles()) < spark.sparkContext.defaultParallelism
+    df = extract_documents(pages, PipelineConfig(salt_buckets=4))
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    parse = next(
+        i for i, l in enumerate(lines)
+        if "ArrowEvalPython" in l and "stage_pages_udf" in l
+    )
+    below = [l for l in lines[parse + 1:] if "Exchange" in l]
+    assert len(below) == 1
+    assert "xxhash64" in below[0]
+
+
 def test_bucketed_join_has_no_exchange(spark, fixture_dir):
     """Equally-bucketed tables join without shuffling either side."""
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))

@@ -6,6 +6,7 @@ directions, per url and per (url, page).
 """
 
 import os
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -84,44 +85,89 @@ def test_scan_prunes_columns(frames):
     assert "warc_ts" not in read_schema and "lang" not in read_schema
 
 
+@contextmanager
+def _page_spread_uncoalesced(spark):
+    """AQE legitimately coalesces the small fixture's (url, page)
+    rebalance to one partition; switch the coalesce off for the block
+    so the spread runs over spark.sql.shuffle.partitions tasks."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_skew_doc_pages_spread_across_partitions(frames):
-    """With the page-spread exchange enabled, pages of the giant
-    skew-cohort document must fan out over many partitions — the
-    skew-defusal dial the north rule names (config-gated after the
-    round-2 A/B; BENCH.md)."""
+    """Pages of the giant skew-cohort document must fan out over many
+    partitions: the (url, page) hashing of the page rebalance is the
+    skew defusal the north rule names."""
     pages = frames[0]
-    page_frame = extract_pages(pages, PipelineConfig(page_spread=True))
-    skew_url = (
-        page_frame.groupBy("url").count().orderBy(F.desc("count")).first()["url"]
-    )
-    n_parts = (
-        page_frame.filter(F.col("url") == skew_url)
-        .select(F.spark_partition_id().alias("pid"))
-        .distinct()
-        .count()
-    )
+    with _page_spread_uncoalesced(pages.sparkSession):
+        # non-default budget: the cached fixture frame must not stand in
+        page_frame = extract_pages(pages, PipelineConfig(anchor_budget=4001))
+        skew_url = (
+            page_frame.groupBy("url").count().orderBy(F.desc("count")).first()["url"]
+        )
+        n_parts = (
+            page_frame.filter(F.col("url") == skew_url)
+            .select(F.spark_partition_id().alias("pid"))
+            .distinct()
+            .count()
+        )
     assert n_parts > 1, "giant document stayed on one partition"
 
 
-def test_spread_disabled_is_byte_identical(frames):
-    """The spread dial must never change output bytes, only placement."""
-    pages, _, _, expected_docs, _ = frames
-    docs = extract_documents(pages, PipelineConfig(page_spread=True))
-    assert docs.join(expected_docs, DOC_KEYS, "left_anti").count() == 0
-    assert expected_docs.join(docs, DOC_KEYS, "left_anti").count() == 0
+def test_forced_page_spread_is_byte_identical(frames):
+    """Spread over every shuffle partition, the element-IR (linearize)
+    path must still match the oracle byte for byte: placement never
+    changes output bytes. A low spread threshold sends every pdf over
+    4 pages through the element-IR path (and keeps the cached fixture
+    frames from standing in)."""
+    pages, _, _, expected_docs, expected_pages = frames
+    config = PipelineConfig(spread_page_threshold=4)
+    with _page_spread_uncoalesced(pages.sparkSession):
+        page_frame = extract_pages(pages, config)
+        n_parts = (
+            page_frame.select(F.spark_partition_id()).distinct().count()
+        )
+        assert n_parts > 1
+        got = page_frame.select(*PAGE_KEYS)
+        exp = expected_pages.select(*PAGE_KEYS)
+        cond = [got[k].eqNullSafe(exp[k]) for k in PAGE_KEYS]
+        assert got.join(exp, cond, "left_anti").count() == 0
+        assert exp.join(got, cond, "left_anti").count() == 0
+        docs = extract_documents(pages, config)
+        assert docs.join(expected_docs, DOC_KEYS, "left_anti").count() == 0
+        assert expected_docs.join(docs, DOC_KEYS, "left_anti").count() == 0
 
 
 def test_shuffles_carry_no_blob(frames):
     """Every exchange in the pipeline must move parsed IR / capped
     anchors, never the raw BINARY payload — at 100 TB shuffling the
-    blobs would double the job's IO. Checked with the spread exchange
-    enabled (the worst case: two shuffles)."""
-    pages = frames[0]
-    df = extract_documents(pages, PipelineConfig(anchor_budget=4001, page_spread=True))
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    blobs would double the job's IO."""
+    plan = _fresh_plan(frames)
     exchanges = [l for l in plan.splitlines() if "Exchange" in l]
     assert exchanges, "no shuffle found"
     assert not any("html" in l for l in exchanges)
+
+
+def test_page_exchange_is_aqe_rebalance(frames):
+    """The page spread is an AQE rebalance on (url, page), so the
+    linearize stage runs on as many Python tasks as the shuffle bytes
+    need, not a fixed spark.sql.shuffle.partitions count. The single
+    scan and blob-free exchanges still hold."""
+    plan = _fresh_plan(frames)
+    page_exchanges = [
+        l for l in plan.splitlines()
+        if "Exchange hashpartitioning(url#" in l and ", page#" in l
+    ]
+    assert len(page_exchanges) == 1
+    assert "REBALANCE_PARTITIONS_BY_COL" in page_exchanges[0]
+    assert "REPARTITION_BY_NUM" not in page_exchanges[0]
+    assert plan.count("FileScan") == 1
+    assert not any("html" in l for l in plan.splitlines() if "Exchange" in l)
 
 
 def test_job_level_observation_counters(spark, fixture_dir):

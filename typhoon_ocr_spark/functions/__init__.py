@@ -8,13 +8,10 @@ UDFs. Anything expressible with pyspark.sql.functions stays JVM-side.
 from .udfs import (
     sniff_kind_col,
     stage_pages_udf,
-    parse_pdf_pages_udf,
     linearize_anchor_udf,
-    strip_html_udf,
     parse_response_udf,
     markdown_flatten_udf,
     render_prompt_udf,
-    cleanup_text_udf,
     PAGE_STRUCT,
     ELEMENT_STRUCT,
 )
@@ -22,13 +19,10 @@ from .udfs import (
 __all__ = [
     "sniff_kind_col",
     "stage_pages_udf",
-    "parse_pdf_pages_udf",
     "linearize_anchor_udf",
-    "strip_html_udf",
     "parse_response_udf",
     "markdown_flatten_udf",
     "render_prompt_udf",
-    "cleanup_text_udf",
     "PAGE_STRUCT",
     "ELEMENT_STRUCT",
 ]

@@ -39,7 +39,7 @@ from ..oracle.mdflatten import markdown_to_plain_text
 from ..oracle.pdfmini import parse_pdf
 from ..oracle.prompts import render_prompt
 from ..oracle.respparse import parse_response_text
-from ..oracle.textops import cleanup_element_text, is_base64_string
+from ..oracle.textops import is_base64_string
 
 # ---------------------------------------------------------------------------
 # Schemas
@@ -222,16 +222,6 @@ def stage_pages_udf(
     )
 
 
-@pandas_udf(ArrayType(PAGE_STRUCT))
-def parse_pdf_pages_udf(payload: pd.Series) -> pd.Series:
-    """BINARY pdf payload → array of per-page layout IR structs
-    (standalone IR-only form of the pdf branch of stage_pages_udf)."""
-    return payload.map(
-        lambda blob: _parse_pdf_rows("", bytes(blob), 0, 0) if blob is not None
-        else [_page_row(1, error="null payload")]
-    )
-
-
 TABLE_PAGE_STRUCT = StructType(
     [
         StructField("page", IntegerType()),
@@ -375,21 +365,6 @@ def linearize_anchor_udf(
 
 
 @pandas_udf(StringType())
-def strip_html_udf(payload: pd.Series) -> pd.Series:
-    """BINARY html payload → boilerplate-stripped main-content text."""
-
-    def one(blob: Optional[bytes]) -> Optional[str]:
-        if blob is None:
-            return None
-        try:
-            return strip_html_boilerplate(bytes(blob))
-        except Exception:
-            return None
-
-    return payload.map(one)
-
-
-@pandas_udf(StringType())
 def parse_response_udf(raw: pd.Series) -> pd.Series:
     """Model-response → final text (ocr_service.py:156-190)."""
     return raw.map(parse_response_text)
@@ -408,12 +383,6 @@ def render_prompt_udf(task_type: pd.Series, anchor: pd.Series) -> pd.Series:
         [render_prompt(t, a if a is not None else "") for t, a in zip(task_type, anchor)],
         dtype="object",
     )
-
-
-@pandas_udf(StringType())
-def cleanup_text_udf(text: pd.Series) -> pd.Series:
-    """Element-text cleanup (ocr_utils.py:266-276) exposed standalone."""
-    return text.map(lambda s: cleanup_element_text(s) if s is not None else None)
 
 
 @pandas_udf(BooleanType())

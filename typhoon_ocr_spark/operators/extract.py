@@ -9,9 +9,9 @@ arranged as a SINGLE lineage so the source is scanned exactly once:
       → stage-1 UDF: pdf→layout IR pages / html→stripped text / junk→
         error row, routed INSIDE the Arrow batch   [one pass over blobs]
       → posexplode page array → one row per (url, page)
-      → repartition(url, page)                [shuffle 1 — skew defusal:
-        a 1000-page document's pages fan out across all tasks; the page
-        number acts as the salt on the url hash]
+      → rebalance(url, page)                  [shuffle 1 — skew defusal:
+        a 1000-page document's pages hash across every post-shuffle
+        partition; AQE sizes the partition count from shuffle bytes]
       → linearize anchor UDF (no-op for html/junk rows)
       → groupBy(url) assembly                 [shuffle 2 — the reducer]
 
@@ -52,34 +52,31 @@ def classify_pages(pages: DataFrame) -> DataFrame:
 def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -> DataFrame:
     """pages table → page-level extraction frame
     (url, kind, page, anchor_text, text, success, error)."""
-    spark = pages.sparkSession
-    n_spread = config.spread_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-
     base = classify_pages(pages).select("url", "kind", "html")
-
-    # Adaptive unsplittable-input guard (r6, shared with the corpus
-    # operators): the parse stage below runs on the SCAN partitions,
-    # and a single-file/few-row-group pages table caps it at the
-    # row-group count (measured: 4 parse tasks on 32 cores at the
-    # sf1.0 bench tier). The spread only fires when the input provably
-    # cannot feed the cluster (files < cores AND total bytes < cores ×
-    # maxPartitionBytes) — a well-laid-out 100 TB corpus never pays
-    # this blob shuffle; the salt_buckets config below remains the
-    # explicit dial for big clustered inputs.
-    from .dedup import _maybe_spread
-
-    base = _maybe_spread(base, "url")
 
     if config.salt_buckets:
         # Optional pre-parse spread for pathologically clustered inputs
         # (e.g. one input file holding all giant documents). Costs a
         # full shuffle of the raw blobs — the default relies on
         # spark.sql.files.maxPartitionBytes for input balance and
-        # defuses skew after parsing, where rows are smaller.
+        # defuses skew after parsing, where rows are smaller. It also
+        # spreads an unsplittable input, so the gated spread below is
+        # skipped (one blob shuffle, not two).
+        n_salt = int(base.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         salt = F.pmod(F.xxhash64("url"), F.lit(config.salt_buckets))
-        base = base.repartition(n_spread, F.xxhash64("url", salt))
+        base = base.repartition(n_salt, F.xxhash64("url", salt))
+    else:
+        # Adaptive unsplittable-input guard (r6, shared with the corpus
+        # operators): the parse stage below runs on the SCAN partitions,
+        # and a single-file/few-row-group pages table caps it at the
+        # row-group count (measured: 4 parse tasks on 32 cores at the
+        # sf1.0 bench tier). The spread only fires when the input
+        # provably cannot feed the cluster (files < cores AND total
+        # bytes < cores × maxPartitionBytes) — a well-laid-out 100 TB
+        # corpus never pays this blob shuffle.
+        from .dedup import _maybe_spread
+
+        base = _maybe_spread(base, "url")
 
     staged = base.select(
         "url",
@@ -97,15 +94,16 @@ def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -
 
     # Spread exchange before the remaining CPU-heavy work. Bounded docs
     # already carry their final (budget-capped) anchor text, so the
-    # exchange moves small strings; the skew cohort's element IR fans
-    # out across all tasks. Config-gated after a measured A/B at the
-    # scaling tier (BENCH.md round 2): at 32 cores the exchange WINS
-    # big (best 19.6k vs 13.5k docs/s — parse-stage stragglers decouple
-    # from assembly+write and AQE re-balances at the boundary); at 8
-    # cores it is noise-level negative. Default on.
-    spread = (
-        staged.repartition(n_spread, "url", "page") if config.page_spread else staged
-    )
+    # exchange moves small strings. It decouples parse-stage stragglers
+    # from linearize + assembly (the 32-core win of BENCH.md round 2),
+    # and hashing on (url, page) fans the skew cohort's element IR out
+    # over every post-shuffle partition. A rebalance, not a fixed-count
+    # repartition: every Python task pays a fixed start-up cost
+    # (BENCH.md, "Per-Python-task fixed cost"), so AQE sizes the
+    # partition count from the shuffle bytes and splits oversized
+    # partitions instead of launching spark.sql.shuffle.partitions
+    # Python tasks over a few MB of anchors.
+    spread = staged.hint("rebalance", F.col("url"), F.col("page"))
 
     anchor = F.when(
         F.col("elements").isNotNull(),

@@ -1,8 +1,9 @@
 """SparkSession builder with scale-oriented defaults.
 
 Tuned for the engine's workload profile (SURVEY.md §4.2): BINARY page
-payloads flowing through Arrow into pandas UDFs, two shuffles (salted
-spread + per-url assembly), AQE for runtime coalescing/skew handling.
+payloads flowing through Arrow into pandas UDFs, two shuffles ((url,
+page) rebalance + per-url assembly), AQE for runtime coalescing/skew
+handling.
 
 On a real cluster the same confs apply unchanged; only master/executor
 sizing comes from spark-submit (the engine never hardcodes cluster
@@ -168,17 +169,9 @@ class PipelineConfig:
     anchor_budget: int = 4000      # ocr_utils.py:391 library default
     task_type: str = "default"
     figure_language: str = "Thai"
-    spread_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     salt_buckets: int = 0          # extra salt for the pre-parse spread; 0=off
     # documents up to this many pages linearize inline in the parse
     # task (their element IR never shuffles); larger documents emit raw
-    # layout IR and fan out across the cluster before linearize
+    # layout IR and fan out across the cluster, through the AQE-sized
+    # (url, page) rebalance, before linearize
     spread_page_threshold: int = 32
-    # page-spread exchange between parse and linearize. Measured A/B at
-    # the scaling tier (240k docs, interleaved; BENCH.md round 2): at
-    # 32 cores the exchange is a clear win (best 19.6k vs 13.5k docs/s
-    # — it decouples the skew-heavy parse stage from assembly+write and
-    # gives AQE a coalesce point), at 8 cores it is noise-level
-    # negative (10.6k vs 11.1k). Default on; turn off for small-core
-    # runs over corpora with no giant documents.
-    page_spread: bool = True
