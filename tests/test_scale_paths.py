@@ -42,6 +42,47 @@ def test_salt_replaces_the_gated_spread(spark, fixture_dir):
     assert "xxhash64" in below[0]
 
 
+def test_spread_gate_leaves_uninspectable_frames_alone(spark):
+    """Frames with no input files (in-memory, JDBC, catalog providers)
+    or whose inputFiles() raises are returned untouched: the byte-size
+    gate cannot inspect them, so it must not add a shuffle."""
+    from unittest import mock
+
+    from typhoon_ocr_spark.operators.dedup import _maybe_spread
+
+    df = spark.createDataFrame([(i, "x") for i in range(8)], "doc_id long, text string")
+    assert df.inputFiles() == []
+    assert _maybe_spread(df, "doc_id") is df
+    with mock.patch.object(type(df), "inputFiles", side_effect=RuntimeError("no")):
+        assert _maybe_spread(df, "doc_id") is df
+
+
+def test_spread_gate_reads_byte_suffixes(spark, fixture_dir):
+    """spark.sql.files.maxPartitionBytes is read as Spark reads it
+    ('128m' is 128 MiB, not 128 bytes), so a small single-file input
+    still gets the gated spread under a suffixed setting."""
+    from typhoon_ocr_spark.operators.dedup import _byte_string_as_bytes, _maybe_spread
+
+    assert _byte_string_as_bytes("134217728") == 134217728
+    assert _byte_string_as_bytes("134217728b") == 134217728
+    assert _byte_string_as_bytes("128m") == 128 << 20
+    assert _byte_string_as_bytes(" 64KB ") == 64 << 10
+    assert _byte_string_as_bytes("1g") == 1 << 30
+    for bad in ("", "1.5g", "12 m", "m", "3x"):
+        with pytest.raises(ValueError):
+            _byte_string_as_bytes(bad)
+
+    pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "128m")
+    try:
+        plan = _maybe_spread(pages, "url")._jdf.queryExecution().executedPlan()
+        assert "REPARTITION_BY_NUM" in plan.toString()
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_bucketed_join_has_no_exchange(spark, fixture_dir):
     """Equally-bucketed tables join without shuffling either side."""
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))

@@ -6,7 +6,6 @@ directions, per url and per (url, page).
 """
 
 import os
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -85,89 +84,83 @@ def test_scan_prunes_columns(frames):
     assert "warc_ts" not in read_schema and "lang" not in read_schema
 
 
-@contextmanager
-def _page_spread_uncoalesced(spark):
-    """AQE legitimately coalesces the small fixture's (url, page)
-    rebalance to one partition; switch the coalesce off for the block
-    so the spread runs over spark.sql.shuffle.partitions tasks."""
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
-def test_skew_doc_pages_spread_across_partitions(frames):
-    """Pages of the giant skew-cohort document must fan out over many
-    partitions: the (url, page) hashing of the page rebalance is the
-    skew defusal the north rule names."""
+def test_extract_documents_is_map_only(frames, tmp_path):
+    """Documents are folded from the parse UDF's page array: no exchange
+    sits above the parse UDF. On a pages table with a file per core the
+    plan has one FileScan and no Exchange at all; on the single-file
+    fixture the only exchange is the gated unsplittable-input spread
+    (REPARTITION_BY_NUM) below the UDF."""
     pages = frames[0]
-    with _page_spread_uncoalesced(pages.sparkSession):
-        # non-default budget: the cached fixture frame must not stand in
-        page_frame = extract_pages(pages, PipelineConfig(anchor_budget=4001))
-        skew_url = (
-            page_frame.groupBy("url").count().orderBy(F.desc("count")).first()["url"]
-        )
-        n_parts = (
-            page_frame.filter(F.col("url") == skew_url)
-            .select(F.spark_partition_id().alias("pid"))
-            .distinct()
-            .count()
-        )
-    assert n_parts > 1, "giant document stayed on one partition"
+    spark = pages.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    wide = str(tmp_path / "pages_wide.parquet")
+    pages.repartition(par).write.parquet(wide)
+    src_wide = spark.read.parquet(wide)
+    assert len(src_wide.inputFiles()) >= par
+    df = extract_documents(src_wide, PipelineConfig(anchor_budget=4001))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1
+    assert "Exchange" not in plan
+
+    lines = _fresh_plan(frames).splitlines()
+    parse = next(
+        i for i, l in enumerate(lines)
+        if "ArrowEvalPython" in l and "stage_pages_udf" in l
+    )
+    exchanges = [i for i, l in enumerate(lines) if "Exchange" in l]
+    assert len(exchanges) == 1 and exchanges[0] > parse  # printed below = upstream
+    assert "REPARTITION_BY_NUM" in lines[exchanges[0]]
 
 
-def test_forced_page_spread_is_byte_identical(frames):
-    """Spread over every shuffle partition, the element-IR (linearize)
-    path must still match the oracle byte for byte: placement never
-    changes output bytes. A low spread threshold sends every pdf over
-    4 pages through the element-IR path (and keeps the cached fixture
-    frames from standing in)."""
-    pages, _, _, expected_docs, expected_pages = frames
-    config = PipelineConfig(spread_page_threshold=4)
-    with _page_spread_uncoalesced(pages.sparkSession):
-        page_frame = extract_pages(pages, config)
-        n_parts = (
-            page_frame.select(F.spark_partition_id()).distinct().count()
+def test_skew_documents_byte_identical(frames):
+    """The fixture's skew-cohort documents (its largest pdfs, 60 pages
+    at the smoke tier) linearize inside their parse task: through both
+    extract_documents and extract_pages they must match the oracle byte
+    for byte. A non-default budget truncates their anchors (and keeps
+    the cached fixture frames from standing in)."""
+    from typhoon_ocr_spark.oracle.docpipe import extract_document
+
+    pages, _, _, expected_docs, _ = frames
+    budget = 300
+    n_max = expected_docs.agg(F.max("page_count")).first()[0]
+    assert n_max > PipelineConfig().spread_page_threshold
+    skew_urls = [
+        r["url"] for r in expected_docs.filter(F.col("page_count") == n_max).collect()
+    ]
+    skew = pages.filter(F.col("url").isin(skew_urls))
+    want = {
+        r["url"]: extract_document(r["url"], bytes(r["html"]), anchor_budget=budget)
+        for r in skew.collect()
+    }
+    assert set(want) == set(skew_urls)
+
+    config = PipelineConfig(anchor_budget=budget)
+    docs = {r["url"]: r for r in extract_documents(skew, config).collect()}
+    assert set(docs) == set(want)
+    for url, w in want.items():
+        d = docs[url]
+        assert (d["kind"], d["extracted_text"], d["page_count"], d["success"]) == (
+            w.kind, w.extracted_text, w.page_count, w.success
         )
-        assert n_parts > 1
-        got = page_frame.select(*PAGE_KEYS)
-        exp = expected_pages.select(*PAGE_KEYS)
-        cond = [got[k].eqNullSafe(exp[k]) for k in PAGE_KEYS]
-        assert got.join(exp, cond, "left_anti").count() == 0
-        assert exp.join(got, cond, "left_anti").count() == 0
-        docs = extract_documents(pages, config)
-        assert docs.join(expected_docs, DOC_KEYS, "left_anti").count() == 0
-        assert expected_docs.join(docs, DOC_KEYS, "left_anti").count() == 0
+    got = sorted(
+        (r["url"], r["page"], r["anchor_text"], r["text"], r["success"])
+        for r in extract_pages(skew, config).collect()
+    )
+    assert got == sorted(
+        (url, p.page, p.anchor_text, p.text, p.success)
+        for url, w in want.items() for p in w.pages
+    )
 
 
 def test_shuffles_carry_no_blob(frames):
-    """Every exchange in the pipeline must move parsed IR / capped
-    anchors, never the raw BINARY payload — at 100 TB shuffling the
-    blobs would double the job's IO."""
+    """No exchange in the pipeline is keyed on the raw BINARY payload.
+    On the single-file fixture the one exchange is the gated input
+    spread, hashed on url below the parse UDF; the UDF's page texts are
+    never shuffled (test_extract_documents_is_map_only)."""
     plan = _fresh_plan(frames)
     exchanges = [l for l in plan.splitlines() if "Exchange" in l]
     assert exchanges, "no shuffle found"
     assert not any("html" in l for l in exchanges)
-
-
-def test_page_exchange_is_aqe_rebalance(frames):
-    """The page spread is an AQE rebalance on (url, page), so the
-    linearize stage runs on as many Python tasks as the shuffle bytes
-    need, not a fixed spark.sql.shuffle.partitions count. The single
-    scan and blob-free exchanges still hold."""
-    plan = _fresh_plan(frames)
-    page_exchanges = [
-        l for l in plan.splitlines()
-        if "Exchange hashpartitioning(url#" in l and ", page#" in l
-    ]
-    assert len(page_exchanges) == 1
-    assert "REBALANCE_PARTITIONS_BY_COL" in page_exchanges[0]
-    assert "REPARTITION_BY_NUM" not in page_exchanges[0]
-    assert plan.count("FileScan") == 1
-    assert not any("html" in l for l in plan.splitlines() if "Exchange" in l)
 
 
 def test_job_level_observation_counters(spark, fixture_dir):
@@ -217,7 +210,8 @@ def test_assembly_page_order(spark):
 
 
 def test_anchor_budget_config(spark, fixture_dir):
-    """PipelineConfig.anchor_budget reaches the linearize UDF."""
+    """PipelineConfig.anchor_budget reaches the linearize call inside
+    the parse UDF."""
     pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
     tiny = extract_pages(pages, PipelineConfig(anchor_budget=19))
     anchors = (

@@ -24,14 +24,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    DoubleType,
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
 
-from ..oracle.elements import BoundingBox, ImageElement, PageReport, TextElement
 from ..oracle.htmlstrip import strip_html_boilerplate
 from ..oracle.images import image_dimensions
 from ..oracle.linearize import anchor_from_image_dims, linearize_page, truncation_rng
@@ -45,35 +43,11 @@ from ..oracle.textops import is_base64_string
 # Schemas
 # ---------------------------------------------------------------------------
 
-ELEMENT_STRUCT = StructType(
-    [
-        StructField("e", StringType()),      # 't' text | 'i' image
-        StructField("text", StringType()),   # raw run text (t)
-        StructField("x", DoubleType()),      # origin (t)
-        StructField("y", DoubleType()),
-        StructField("x0", DoubleType()),     # bbox (i)
-        StructField("y0", DoubleType()),
-        StructField("x1", DoubleType()),
-        StructField("y1", DoubleType()),
-        StructField("name", StringType()),   # xobject name (i)
-    ]
-)
-
-MEDIABOX_STRUCT = StructType(
-    [
-        StructField("x0", DoubleType()),
-        StructField("y0", DoubleType()),
-        StructField("x1", DoubleType()),
-        StructField("y1", DoubleType()),
-    ]
-)
-
 PAGE_STRUCT = StructType(
     [
         StructField("page", IntegerType()),
-        StructField("mediabox", MEDIABOX_STRUCT),
-        StructField("elements", ArrayType(ELEMENT_STRUCT)),
-        StructField("text", StringType()),   # html branch output
+        StructField("text", StringType()),   # final page text / anchor
+        StructField("success", BooleanType()),
         StructField("error", StringType()),
     ]
 )
@@ -121,59 +95,23 @@ def sniff_kind_col(html_col: str = "html") -> Column:
 # Pandas UDFs (Arrow-vectorized)
 # ---------------------------------------------------------------------------
 
-def _element_rows(report: PageReport) -> list:
-    rows = []
-    for el in report.text_elements:
-        rows.append(
-            {"e": "t", "text": el.text, "x": float(el.x), "y": float(el.y),
-             "x0": None, "y0": None, "x1": None, "y1": None, "name": None}
-        )
-    for img in report.image_elements:
-        b = img.bbox
-        rows.append(
-            {"e": "i", "text": None, "x": None, "y": None,
-             "x0": float(b.x0), "y0": float(b.y0), "x1": float(b.x1), "y1": float(b.y1),
-             "name": img.name}
-        )
-    return rows
+def _page_row(page: int, text=None, error=None) -> dict:
+    return {"page": page, "text": text, "success": error is None, "error": error}
 
 
-def _page_row(page: int, mediabox=None, elements=None, text=None, error=None) -> dict:
-    return {"page": page, "mediabox": mediabox, "elements": elements,
-            "text": text, "error": error}
-
-
-def _parse_pdf_rows(url: str, blob: bytes, budget: int, spread_threshold: int) -> list:
+def _parse_pdf_rows(url: str, blob: bytes, budget: int) -> list:
     try:
         reports = parse_pdf(blob)
     except Exception as exc:
         return [_page_row(1, error=f"Error processing document: {exc}")]
     if not reports:
         return [_page_row(1, error="empty pdf")]
-    if len(reports) <= spread_threshold:
-        # Bounded-size document: linearize where parsed — no element IR
-        # ever leaves this task, and the downstream shuffle carries only
-        # the budget-capped anchor strings.
-        return [
-            _page_row(
-                idx,
-                text=linearize_page(report, budget, truncation_rng(url, idx)),
-            )
-            for idx, report in enumerate(reports, start=1)
-        ]
-    # Giant document (the skew cohort): emit raw layout IR so its pages
-    # fan out across the cluster before the CPU-heavy linearize.
-    out = []
-    for idx, report in enumerate(reports, start=1):
-        mb = report.mediabox
-        out.append(
-            _page_row(
-                idx,
-                mediabox={"x0": mb.x0, "y0": mb.y0, "x1": mb.x1, "y1": mb.y1},
-                elements=_element_rows(report),
-            )
-        )
-    return out
+    # Linearize where parsed, whatever the page count: no layout IR
+    # ever leaves this task, and the row carries the budget-capped anchor.
+    return [
+        _page_row(idx, text=linearize_page(report, budget, truncation_rng(url, idx)))
+        for idx, report in enumerate(reports, start=1)
+    ]
 
 
 @pandas_udf(ArrayType(PAGE_STRUCT))
@@ -182,14 +120,13 @@ def stage_pages_udf(
     kind: pd.Series,
     payload: pd.Series,
     budget: pd.Series,
-    spread_threshold: pd.Series,
 ) -> pd.Series:
-    """Stage-1 of the pipeline, one pass over the raw payloads:
-    pdf → per-page anchors (documents up to ``spread_threshold`` pages
-    linearize inline; larger ones emit layout IR for the skew-spread
-    path — the content-stream interpreter stands in for the reference's
-    pypdf visitor pass, ocr_utils.py:358-388);
+    """The whole per-document Python work, one pass over the raw payloads:
+    pdf → per-page anchors, linearized where parsed (the content-stream
+    interpreter stands in for the reference's pypdf visitor pass,
+    ocr_utils.py:358-388);
     html → single page carrying the boilerplate-stripped text;
+    image → single page carrying the whole-image anchor;
     junk → single failed page row.
 
     Routing happens INSIDE the batch so the source is scanned exactly
@@ -198,9 +135,9 @@ def stage_pages_udf(
     failures (/root/reference/backend/services/ocr_service.py:254-262).
     """
 
-    def one(u: str, k: str, blob: Optional[bytes], b: int, t: int) -> list:
+    def one(u: str, k: str, blob: Optional[bytes], b: int) -> list:
         if k == "pdf" and blob is not None:
-            return _parse_pdf_rows(u, bytes(blob), int(b), int(t))
+            return _parse_pdf_rows(u, bytes(blob), int(b))
         if k == "html" and blob is not None:
             try:
                 return [_page_row(1, text=strip_html_boilerplate(bytes(blob)))]
@@ -217,7 +154,7 @@ def stage_pages_udf(
         return [_page_row(1, error="unsupported payload")]
 
     return pd.Series(
-        [one(*args) for args in zip(url, kind, payload, budget, spread_threshold)],
+        [one(*args) for args in zip(url, kind, payload, budget)],
         dtype="object",
     )
 
@@ -324,44 +261,6 @@ def page_tables_udf(payload: pd.Series) -> pd.Series:
         ]
 
     return payload.map(one)
-
-
-@pandas_udf(StringType())
-def linearize_anchor_udf(
-    url: pd.Series,
-    page: pd.Series,
-    mediabox: pd.Series,
-    elements: pd.Series,
-    budget: pd.Series,
-) -> pd.Series:
-    """Per-page anchor text (the flagship operator, ocr_utils.py:149-250)
-    with the seeded truncation convention rng = truncation_rng(url, page)."""
-
-    # Struct columns reach pandas UDFs as a pd.DataFrame (one column per
-    # field); null structs become all-NaN rows.
-    mb_rows = (
-        mediabox.to_dict("records") if isinstance(mediabox, pd.DataFrame) else mediabox
-    )
-    out = []
-    for u, p, mb, els, max_len in zip(url, page, mb_rows, elements, budget):
-        if mb is None or pd.isna(mb.get("x1")):
-            out.append(None)
-            continue
-        texts, images = [], []
-        for el in (els if els is not None else ()):
-            if el["e"] == "t":
-                texts.append(TextElement(el["text"], el["x"], el["y"]))
-            else:
-                images.append(
-                    ImageElement(el["name"], BoundingBox(el["x0"], el["y0"], el["x1"], el["y1"]))
-                )
-        report = PageReport(
-            mediabox=BoundingBox(mb["x0"], mb["y0"], mb["x1"], mb["y1"]),
-            text_elements=texts,
-            image_elements=images,
-        )
-        out.append(linearize_page(report, int(max_len), truncation_rng(u, int(p))))
-    return pd.Series(out, dtype="object")
 
 
 @pandas_udf(StringType())

@@ -38,6 +38,28 @@ from ..functions.textsql import (
 )
 
 
+_BYTE_UNITS = {
+    "": 1, "b": 1,
+    "k": 1 << 10, "kb": 1 << 10,
+    "m": 1 << 20, "mb": 1 << 20,
+    "g": 1 << 30, "gb": 1 << 30,
+    "t": 1 << 40, "tb": 1 << 40,
+    "p": 1 << 50, "pb": 1 << 50,
+}
+
+
+def _byte_string_as_bytes(value: str) -> int:
+    """A Spark byte-size conf ('134217728', '128m', '1g', '64kb') in
+    bytes, as JavaUtils.byteStringAsBytes reads it: a bare number is
+    bytes, suffixes are binary multiples, case-insensitive."""
+    import re
+
+    m = re.fullmatch(r"([0-9]+)([a-z]*)", value.strip().lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"invalid byte string: {value!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
+
+
 def _maybe_spread(df: DataFrame, key: str) -> DataFrame:
     """Adaptive unsplittable-input guard (r6). Parquet can only split
     at row-group boundaries: a single-row-group file plans N byte-range
@@ -50,7 +72,8 @@ def _maybe_spread(df: DataFrame, key: str) -> DataFrame:
     the cluster: fewer input files than cores AND total input under
     cores × maxPartitionBytes (so the spread can never move more than
     one task-sized split per core — at 100 TB the gate never fires and
-    no exchange is added). Non-file sources and non-local stores are
+    no exchange is added). Frames the gate cannot inspect (no input
+    files: in-memory, JDBC, catalog providers) and non-local stores are
     left untouched."""
     import os
     from urllib.parse import unquote, urlparse
@@ -62,8 +85,8 @@ def _maybe_spread(df: DataFrame, key: str) -> DataFrame:
     try:
         files = list(df.inputFiles())
     except Exception:
-        files = []
-    if len(files) >= par:
+        return df
+    if not files or len(files) >= par:
         return df
     total = 0
     for f in files:
@@ -73,14 +96,10 @@ def _maybe_spread(df: DataFrame, key: str) -> DataFrame:
             total += os.path.getsize(unquote(urlparse(f).path))
         except OSError:
             return df
-    max_pb = int(
-        "".join(
-            c for c in spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"
-            ) if c.isdigit()
-        )
+    max_pb = _byte_string_as_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    if files and total > par * max_pb:
+    if total > par * max_pb:
         return df
     return df.repartition(par, F.col(key))
 

@@ -1,19 +1,20 @@
 """The extraction pipeline as staged DataFrame transforms.
 
 Spark-native rendering of the reference lifecycle (SURVEY.md §3.4),
-arranged as a SINGLE lineage so the source is scanned exactly once:
+arranged as a SINGLE map-only stage so the source is scanned exactly
+once and no exchange sits above the parse UDF:
 
     read pages(url, warc_ts, html, text, lang)
       → kind = sniff(html)                    [native magic-byte exprs]
-      → (optional) salted repartition by url  [shuffle 0 — input spread]
-      → stage-1 UDF: pdf→layout IR pages / html→stripped text / junk→
-        error row, routed INSIDE the Arrow batch   [one pass over blobs]
-      → posexplode page array → one row per (url, page)
-      → rebalance(url, page)                  [shuffle 1 — skew defusal:
-        a 1000-page document's pages hash across every post-shuffle
-        partition; AQE sizes the partition count from shuffle bytes]
-      → linearize anchor UDF (no-op for html/junk rows)
-      → groupBy(url) assembly                 [shuffle 2 — the reducer]
+      → (optional) salted repartition by url  [input spread; or the gated
+        _maybe_spread for an unsplittable input]
+      → stage UDF: pdf→linearized page anchors / html→stripped text /
+        image→dims anchor / junk→error row, routed INSIDE the Arrow batch
+        [the one Python pass over the blobs]
+      → extract_documents: assemble the page array with JVM
+        higher-order functions (filter/transform/array_join, size,
+        forall)                               [no shuffle]
+        extract_pages: inline the page array → one row per (url, page)
 
 Why not filter-per-kind branches + union: Catalyst pushes each branch's
 kind-filter beneath the repartition, producing three FileScans of the
@@ -21,18 +22,20 @@ full BINARY column — a 3x read of the 100 TB input (observed via
 .explain; see tests/test_spark_pipeline.py::test_single_scan). Routing
 inside the batch keeps one scan and one Arrow exchange.
 
-Column discipline: the blob column is dropped at the explode boundary;
-the page-spread shuffle moves parsed IR (elements/stripped text), not
-raw payload bytes.
+Column discipline: the blob column is dropped at the UDF boundary; only
+the budget-capped per-page text leaves the Python worker. Every
+document's pages come from one UDF call, so the document rollup needs no
+regrouping. Skew is handled at the input (byte-sized splits, the gated
+spread, salt_buckets): a giant document's parse runs in one task anyway,
+and its linearize share is a fraction of that parse.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.udfs import (
-    linearize_anchor_udf,
     ocr_message_shas_udf,
     page_renders_udf,
     page_tables_udf,
@@ -49,17 +52,17 @@ def classify_pages(pages: DataFrame) -> DataFrame:
     return pages.withColumn("kind", sniff_kind_col("html"))
 
 
-def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -> DataFrame:
-    """pages table → page-level extraction frame
-    (url, kind, page, anchor_text, text, success, error)."""
+def _staged(pages: DataFrame, config: PipelineConfig) -> DataFrame:
+    """pages table → (url, kind, pages: array<struct<page, text,
+    success, error>>), one row per input document, pages in page order,
+    page texts final."""
     base = classify_pages(pages).select("url", "kind", "html")
 
     if config.salt_buckets:
         # Optional pre-parse spread for pathologically clustered inputs
         # (e.g. one input file holding all giant documents). Costs a
         # full shuffle of the raw blobs — the default relies on
-        # spark.sql.files.maxPartitionBytes for input balance and
-        # defuses skew after parsing, where rows are smaller. It also
+        # spark.sql.files.maxPartitionBytes for input balance. It also
         # spreads an unsplittable input, so the gated spread below is
         # skipped (one blob shuffle, not two).
         n_salt = int(base.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -78,51 +81,29 @@ def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -
 
         base = _maybe_spread(base, "url")
 
-    staged = base.select(
+    return base.select(
         "url",
         "kind",
-        F.posexplode(
-            stage_pages_udf(
-                "url",
-                "kind",
-                "html",
-                F.lit(config.anchor_budget),
-                F.lit(config.spread_page_threshold),
-            )
-        ).alias("_pos", "pg"),
-    ).select("url", "kind", "pg.page", "pg.mediabox", "pg.elements", "pg.text", "pg.error")
-
-    # Spread exchange before the remaining CPU-heavy work. Bounded docs
-    # already carry their final (budget-capped) anchor text, so the
-    # exchange moves small strings. It decouples parse-stage stragglers
-    # from linearize + assembly (the 32-core win of BENCH.md round 2),
-    # and hashing on (url, page) fans the skew cohort's element IR out
-    # over every post-shuffle partition. A rebalance, not a fixed-count
-    # repartition: every Python task pays a fixed start-up cost
-    # (BENCH.md, "Per-Python-task fixed cost"), so AQE sizes the
-    # partition count from the shuffle bytes and splits oversized
-    # partitions instead of launching spark.sql.shuffle.partitions
-    # Python tasks over a few MB of anchors.
-    spread = staged.hint("rebalance", F.col("url"), F.col("page"))
-
-    anchor = F.when(
-        F.col("elements").isNotNull(),
-        linearize_anchor_udf(
-            "url", "page", "mediabox", "elements", F.lit(config.anchor_budget)
+        stage_pages_udf("url", "kind", "html", F.lit(config.anchor_budget)).alias(
+            "pages"
         ),
-    ).otherwise(F.col("text"))
+    )
 
-    return spread.withColumn("anchor_or_text", anchor).select(
+
+def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -> DataFrame:
+    """pages table → page-level extraction frame
+    (url, kind, page, anchor_text, text, success, error)."""
+    return _staged(pages, config).select("url", "kind", F.inline("pages")).select(
         "url",
         "kind",
         "page",
-        F.when(F.col("kind").isin("pdf", "image"), F.col("anchor_or_text"))
+        F.when(F.col("kind").isin("pdf", "image"), F.col("text"))
         .otherwise(F.lit(None).cast("string"))
         .alias("anchor_text"),
         F.when(F.col("error").isNotNull(), F.lit(""))  # failed page rows
-        .otherwise(F.col("anchor_or_text"))
+        .otherwise(F.col("text"))
         .alias("text"),
-        F.col("error").isNull().alias("success"),
+        "success",
         "error",
     )
 
@@ -176,39 +157,51 @@ def ocr_message_fingerprints(pages: DataFrame) -> DataFrame:
     )
 
 
-def assemble_documents(page_frame: DataFrame) -> DataFrame:
-    """Page-level frame → per-document rollup.
+def _assembled(pages: Column) -> list:
+    """The document fold over a page-ordered array of structs with page,
+    text and success fields (the parse UDF's page structs, which also
+    carry error, or assemble_documents' regrouped rows): the texts of
+    successful pages joined "\\n\\n" in page order (reference
+    app.py:581; array_join skips null texts), page_count = page total
+    (ocr_service.py:117-124), success = all pages succeeded (the
+    reference's all(), backend/services/ocr_service.py:321). JVM
+    higher-order functions only — no Python, no shuffle."""
+    return [
+        F.array_join(
+            F.transform(F.filter(pages, lambda p: p["success"]), lambda p: p["text"]),
+            "\n\n",
+        ).alias("extracted_text"),
+        F.size(pages).cast("bigint").alias("page_count"),
+        F.forall(pages, lambda p: p["success"]).alias("success"),
+    ]
 
-    The reducer from the reference's document assembly: page texts
-    joined "\\n\\n" in page order (/root/reference/app.py:581), success
-    = all pages succeeded (bool_and ≡ the reference's all(),
-    /root/reference/backend/services/ocr_service.py:321), page_count =
-    page total (ocr_service.py:117-124). All JVM-side: sort_array over
-    (page, text) structs + transform + array_join — no Python in the
-    reduce path, and partial aggregation runs map-side.
-    """
-    ok_struct = F.when(
-        F.col("success") & F.col("text").isNotNull(), F.struct("page", "text")
-    )
+
+def assemble_documents(page_frame: DataFrame) -> DataFrame:
+    """Page-level frame → per-document rollup, for page frames that were
+    transformed after extract_pages (ocr_pages, the runner's
+    page_transform, the job CLI): the page rows of each url are
+    regrouped (one shuffle), ordered by page and folded by the same
+    ``_assembled`` as extract_documents."""
     return (
         page_frame.groupBy("url")
         .agg(
             F.max("kind").alias("kind"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(ok_struct)), lambda s: s["text"]
-                ),
-                "\n\n",
-            ).alias("extracted_text"),
-            F.count("page").alias("page_count"),
-            F.expr("bool_and(success)").alias("success"),
+            F.array_sort(F.collect_list(F.struct("page", "text", "success"))).alias(
+                "pages"
+            ),
         )
+        .select("url", "kind", *_assembled(F.col("pages")))
     )
 
 
 def extract_documents(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -> DataFrame:
-    """End-to-end: pages table → per-document extracted text."""
-    return assemble_documents(extract_pages(pages, config))
+    """End-to-end: pages table → per-document extracted text
+    (url, kind, extracted_text, page_count, success), one map-only stage.
+
+    ``url`` is the pages table's unique key (FIXTURES.md §1): each
+    output row is the fold of one input row's page array, and rows are
+    not regrouped by url. The parse UDF emits pages in page order."""
+    return _staged(pages, config).select("url", "kind", *_assembled(F.col("pages")))
 
 
 def ocr_pages(

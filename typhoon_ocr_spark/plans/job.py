@@ -44,8 +44,6 @@ def main(argv=None) -> int:
     parser.add_argument("--buckets", type=int, default=64,
                         help="manifest buckets (resumable mode)")
     parser.add_argument("--anchor-budget", type=int, default=4000)
-    parser.add_argument("--spread-threshold", type=int, default=32,
-                        help="docs above this many pages take the skew-spread path")
     parser.add_argument("--pages", default=None,
                         help="page expression, e.g. '1-3,5' (PDF page filter)")
     parser.add_argument("--page-level", action="store_true",
@@ -76,10 +74,7 @@ def main(argv=None) -> int:
 
     spark = build_session(app_name="typhoon-ocr-spark-job", master=args.master)
     spark.sparkContext.setLogLevel("WARN")
-    config = PipelineConfig(
-        anchor_budget=args.anchor_budget,
-        spread_page_threshold=args.spread_threshold,
-    )
+    config = PipelineConfig(anchor_budget=args.anchor_budget)
 
     page_transform = None
     if args.endpoint_url:

@@ -1,9 +1,9 @@
 """SparkSession builder with scale-oriented defaults.
 
 Tuned for the engine's workload profile (SURVEY.md §4.2): BINARY page
-payloads flowing through Arrow into pandas UDFs, two shuffles ((url,
-page) rebalance + per-url assembly), AQE for runtime coalescing/skew
-handling.
+payloads flowing through Arrow into pandas UDFs, a map-only extraction
+stage (the per-url shuffle only where a transformed page frame is
+reassembled), AQE for runtime coalescing/skew handling.
 
 On a real cluster the same confs apply unchanged; only master/executor
 sizing comes from spark-submit (the engine never hardcodes cluster
@@ -170,8 +170,7 @@ class PipelineConfig:
     task_type: str = "default"
     figure_language: str = "Thai"
     salt_buckets: int = 0          # extra salt for the pre-parse spread; 0=off
-    # documents up to this many pages linearize inline in the parse
-    # task (their element IR never shuffles); larger documents emit raw
-    # layout IR and fan out across the cluster, through the AQE-sized
-    # (url, page) rebalance, before linearize
+    # The engine no longer reads this: every document linearizes where
+    # it is parsed. Kept only because the benchmark's shape counts
+    # (perfbench/run.py shape_counts, extract.ir_page_rows) read it.
     spread_page_threshold: int = 32
