@@ -143,7 +143,7 @@ def test_stats_operators_are_map_only(spark, tmp_path):
     physical plan (a shuffle here would be a silent 100 TB
     regression). A starved input (single small file, fewer files than
     cores) instead gets exactly the gated adaptive spread
-    (dedup._maybe_spread → one REPARTITION_BY_NUM exchange) and
+    (plans.spread.maybe_spread → one REPARTITION_BY_NUM exchange) and
     nothing else — the r6 unsplittable-input guard."""
     par = spark.sparkContext.defaultParallelism
     docs = spark.createDataFrame(

@@ -48,20 +48,20 @@ def test_spread_gate_leaves_uninspectable_frames_alone(spark):
     gate cannot inspect them, so it must not add a shuffle."""
     from unittest import mock
 
-    from typhoon_ocr_spark.operators.dedup import _maybe_spread
+    from typhoon_ocr_spark.plans.spread import maybe_spread
 
     df = spark.createDataFrame([(i, "x") for i in range(8)], "doc_id long, text string")
     assert df.inputFiles() == []
-    assert _maybe_spread(df, "doc_id") is df
+    assert maybe_spread(df, "doc_id") is df
     with mock.patch.object(type(df), "inputFiles", side_effect=RuntimeError("no")):
-        assert _maybe_spread(df, "doc_id") is df
+        assert maybe_spread(df, "doc_id") is df
 
 
 def test_spread_gate_reads_byte_suffixes(spark, fixture_dir):
     """spark.sql.files.maxPartitionBytes is read as Spark reads it
     ('128m' is 128 MiB, not 128 bytes), so a small single-file input
     still gets the gated spread under a suffixed setting."""
-    from typhoon_ocr_spark.operators.dedup import _byte_string_as_bytes, _maybe_spread
+    from typhoon_ocr_spark.plans.spread import _byte_string_as_bytes, maybe_spread
 
     assert _byte_string_as_bytes("134217728") == 134217728
     assert _byte_string_as_bytes("134217728b") == 134217728
@@ -77,7 +77,7 @@ def test_spread_gate_reads_byte_suffixes(spark, fixture_dir):
     prev = spark.conf.get(key)
     spark.conf.set(key, "128m")
     try:
-        plan = _maybe_spread(pages, "url")._jdf.queryExecution().executedPlan()
+        plan = maybe_spread(pages, "url")._jdf.queryExecution().executedPlan()
         assert "REPARTITION_BY_NUM" in plan.toString()
     finally:
         spark.conf.set(key, prev)
@@ -175,6 +175,8 @@ def test_minhash_bands_py_parity(spark):
         "ข้อมูล เอกสาร ระบบ ภาษา ไทย 123 mixed LANGUAGE text",
         "short one",  # <3 tokens → no bands
         "punct,separated;tokens!here  double  spaces",
+        None,  # null text → no bands
+        "",  # empty text → no bands
     ]
     docs = spark.createDataFrame(
         [(str(i), t) for i, t in enumerate(texts)], "doc_id string, text string"

@@ -265,3 +265,98 @@ def test_cosine_topk_empty_and_partitioned_inputs(spark):
     )
     assert none.count() == 0
     assert none.columns == ["query_id", "rank", "neighbor_id"]
+
+
+def test_cosine_topk_skips_bad_query_rows(spark):
+    """A null, short or null-element vector in the collected query
+    cohort is skipped, as the candidate side skips it: the result
+    equals the result for the cohort without them (instead of a
+    driver-side crash)."""
+    from typhoon_ocr_spark.sources.fixtures import planted_embeddings
+
+    rows = planted_embeddings(300, dims=64, cohort_size=8, noise=0.15)
+    schema = "vec_id long, embedding array<float>"
+    clean = similarity.cosine_topk(spark.createDataFrame(rows, schema))
+    bad = similarity.cosine_topk(
+        spark.createDataFrame(
+            rows + [(1000, None), (1100, [0.5] * 10), (1200, [None] + [0.5] * 63)],
+            schema,
+        )
+    )
+    want = sorted(tuple(r) for r in clean.collect())
+    assert sorted(tuple(r) for r in bad.collect()) == want and want
+
+
+def test_cosine_topk_ranks_zero_norm_first(spark, monkeypatch):
+    """A zero-norm candidate scores NaN against every query, and
+    Spark's DESC window ranks NaN above every double. The per-chunk
+    top-k must rank it the same way, or a chunk cut drops a row the
+    final window would rank first: the per-task merge is the same with
+    a tiny chunk and the default one, and the Spark result matches a
+    brute-force ranking that puts NaN first."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+
+    from typhoon_ocr_spark.sources.fixtures import planted_embeddings
+
+    k, dims, every = 5, 16, 100
+    rows = planted_embeddings(300, dims=dims, cohort_size=8, noise=0.15)
+    rows[57] = (57, [0.0] * dims)
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = np.array([r[1] for r in rows], dtype=np.float32).astype(np.float64)
+    q = ids % every == 0
+    q_ids, qm = ids[q], mat[q]
+    qn = similarity._np_row_norms(qm)
+
+    def ranked(cands):
+        """{query: [(score, id)...]} → rows under (score DESC with NaN
+        first, id ASC), top k per query."""
+        out = []
+        for qid, cs in cands.items():
+            cs = sorted(
+                cs,
+                key=lambda c: (0, 0.0, c[1]) if math.isnan(c[0]) else (1, -c[0], c[1]),
+            )
+            out += [(qid, r + 1, nid) for r, (_, nid) in enumerate(cs[:k])]
+        return sorted(out)
+
+    with np.errstate(invalid="ignore"):
+        full = similarity._score_chunk(mat, ids, q_ids, qm, qn, np)
+    ref = ranked(
+        {
+            int(qid): [
+                (float(full[i, j]), int(ids[i]))
+                for i in range(len(ids))
+                if ids[i] != qid
+            ]
+            for j, qid in enumerate(q_ids)
+        }
+    )
+    assert all(nid == 57 and rank == 1 for _, rank, nid in ref if rank == 1)
+
+    emb_type = pa.list_(pa.float32())
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array(ids[s:s + 40]), pa.array(mat[s:s + 40].tolist(), type=emb_type)],
+            names=["vec_id", "embedding"],
+        )
+        for s in range(0, len(ids), 40)
+    ]
+
+    def merged(chunk):
+        monkeypatch.setattr(similarity, "_TOPK_CHUNK", chunk)
+        cands: dict = {}
+        with np.errstate(invalid="ignore"):
+            for b in similarity._topk_stream(iter(batches), q_ids, qm, qn, k, np):
+                for qid, s, nid in zip(*(c.to_pylist() for c in b.columns)):
+                    cands.setdefault(qid, []).append((s, nid))
+        return ranked(cands)
+
+    default = merged(similarity._TOPK_CHUNK)
+    assert merged(7) == default == ref
+
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = similarity.cosine_topk(emb, query_every=every, k=k).collect()
+    assert sorted(tuple(r) for r in got) == ref

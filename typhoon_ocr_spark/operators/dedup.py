@@ -36,72 +36,7 @@ from ..functions.textsql import (
     WORD_SPLIT_PATTERN,
     simhash_segment_bounds,
 )
-
-
-_BYTE_UNITS = {
-    "": 1, "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-    "p": 1 << 50, "pb": 1 << 50,
-}
-
-
-def _byte_string_as_bytes(value: str) -> int:
-    """A Spark byte-size conf ('134217728', '128m', '1g', '64kb') in
-    bytes, as JavaUtils.byteStringAsBytes reads it: a bare number is
-    bytes, suffixes are binary multiples, case-insensitive."""
-    import re
-
-    m = re.fullmatch(r"([0-9]+)([a-z]*)", value.strip().lower())
-    if m is None or m.group(2) not in _BYTE_UNITS:
-        raise ValueError(f"invalid byte string: {value!r}")
-    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
-
-
-def _maybe_spread(df: DataFrame, key: str) -> DataFrame:
-    """Adaptive unsplittable-input guard (r6). Parquet can only split
-    at row-group boundaries: a single-row-group file plans N byte-range
-    splits but all rows land in ONE task, serializing every downstream
-    map-only stage (the optimization guide's 'one huge unsplittable
-    file → repartition immediately after the read' case — measured
-    here: every map-only operator over the sf tables ran on one core).
-    This repartitions the operator's NARROW projection by a
-    deterministic key, but ONLY when the input provably cannot feed
-    the cluster: fewer input files than cores AND total input under
-    cores × maxPartitionBytes (so the spread can never move more than
-    one task-sized split per core — at 100 TB the gate never fires and
-    no exchange is added). Frames the gate cannot inspect (no input
-    files: in-memory, JDBC, catalog providers) and non-local stores are
-    left untouched."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    if df.isStreaming:  # micro-batch twins keep their own partitioning
-        return df
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        files = list(df.inputFiles())
-    except Exception:
-        return df
-    if not files or len(files) >= par:
-        return df
-    total = 0
-    for f in files:
-        if not f.startswith("file:"):
-            return df  # remote store: trust its layout
-        try:
-            total += os.path.getsize(unquote(urlparse(f).path))
-        except OSError:
-            return df
-    max_pb = _byte_string_as_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    if total > par * max_pb:
-        return df
-    return df.repartition(par, F.col(key))
+from ..plans.spread import maybe_spread
 
 
 def word_tokens(col: Column) -> Column:
@@ -145,9 +80,9 @@ def shingle_frame(documents: DataFrame, text_col: str = "text") -> DataFrame:
     derive from this frame so a verification pass can persist it once
     instead of re-tokenizing the corpus per consumer. Docs with fewer
     than SHINGLE_WORDS tokens get an empty array. The (doc_id, text)
-    projection is spread first (see _maybe_spread) so tokenization
-    parallelizes even off a single-row-group input file."""
-    src = _maybe_spread(documents.select("doc_id", text_col), "doc_id")
+    projection is spread first (see plans.spread.maybe_spread) so
+    tokenization parallelizes even off a single-row-group input file."""
+    src = maybe_spread(documents.select("doc_id", text_col), "doc_id")
     toks = word_tokens(F.col(text_col))
     return src.select("doc_id", word_shingles(toks).alias("sh"))
 
@@ -165,40 +100,6 @@ def exact_dup_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
             F.min("doc_id").alias("keeper_id"),
         )
     )
-
-
-def minhash_signatures(
-    documents: DataFrame,
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Per-document MinHash signature: one md5 per shingle, sliced into
-    MINHASH_PERMS 4-hex windows; sig_p = min over shingles of slice p
-    ("one permutation hashing" family — 8x fewer hash calls than
-    hash-per-permutation, measured ~2x faster end-to-end at sf0.1).
-    Documents with <SHINGLE_WORDS tokens are excluded. Pass a
-    (possibly persisted) ``shingle_frame`` result as ``shingles`` to
-    share the tokenize+shingle lineage with other consumers.
-    Output: (doc_id, sig_0..sig_{P-1})."""
-    sh = shingles if shingles is not None else shingle_frame(documents, text_col)
-    exploded = sh.select(
-        "doc_id",
-        F.explode(F.transform(F.col("sh"), lambda x: F.md5(x))).alias("h"),
-    )
-
-    # Shape note: explode(shingles) → groupBy(doc_id).agg(min × P),
-    # not array_min(transform(...)) × P — Catalyst's projection
-    # collapse inlines the token/shingle expressions into every sig in
-    # the nested form (observed ~60 s of planning/codegen at bench
-    # scale), while the explode form computes shingles once per row,
-    # runs the P minima as map-side partial aggregates, and lets the
-    # LSH self-join reuse one exchange for both sides.
-    def sig(p: int):
-        return F.min(
-            F.substring(F.col("h"), p * MINHASH_SLICE_HEX + 1, MINHASH_SLICE_HEX)
-        ).alias(f"sig_{p}")
-
-    return exploded.groupBy("doc_id").agg(*[sig(p) for p in range(MINHASH_PERMS)])
 
 
 def _bands_of_shingles(sh: list) -> list:
@@ -245,6 +146,17 @@ def _shingles_of_tokens(raw_tokens: list) -> list:
     if len(toks) < k:
         return []
     return [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+
+
+def _raw_tokens(documents: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, _rawtoks) — the spread (doc_id, text) projection split
+    into raw lowercase tokens by JVM codegen (empties kept; the Python
+    per-document cores drop them). The one input shape of the
+    token-level mapInArrow passes (MinHash bands, SimHash, top bigram)."""
+    return maybe_spread(documents.select("doc_id", text_col), "doc_id").select(
+        "doc_id",
+        F.split(F.lower(F.col(text_col)), WORD_SPLIT_PATTERN).alias("_rawtoks"),
+    )
 
 
 def _id_preserving_map(
@@ -321,12 +233,7 @@ def minhash_bands(
         src = shingles.select("doc_id", "sh")
         fn = _bands_of_shingles
     else:
-        src = _maybe_spread(
-            documents.select("doc_id", text_col), "doc_id"
-        ).select(
-            "doc_id",
-            F.split(F.lower(F.col(text_col)), WORD_SPLIT_PATTERN).alias("_rawtoks"),
-        )
+        src = _raw_tokens(documents, text_col)
 
         def fn(raw):
             return _bands_of_shingles(_shingles_of_tokens(raw))
@@ -434,12 +341,8 @@ def simhash_fingerprints(documents: DataFrame, text_col: str = "text") -> DataFr
     flagged) — measured 2.2 s → ~0.4 s at sf1.0. A null text keeps its
     old row ('0'×16, null n_tokens: CASE WHEN null>=0 yields '0',
     size(null) yields null)."""
-    src = _maybe_spread(documents.select("doc_id", text_col), "doc_id").select(
-        "doc_id",
-        F.split(F.lower(F.col(text_col)), WORD_SPLIT_PATTERN).alias("_rawtoks"),
-    )
     return _id_preserving_map(
-        src,
+        _raw_tokens(documents, text_col),
         _simhash_of_tokens,
         [("simhash", "string"), ("n_tokens", "long")],
         null_row=("0" * SIMHASH_BITS, None),

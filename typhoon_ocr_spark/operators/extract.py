@@ -7,7 +7,7 @@ once and no exchange sits above the parse UDF:
     read pages(url, warc_ts, html, text, lang)
       → kind = sniff(html)                    [native magic-byte exprs]
       → (optional) salted repartition by url  [input spread; or the gated
-        _maybe_spread for an unsplittable input]
+        plans.spread.maybe_spread for an unsplittable input]
       → stage UDF: pdf→linearized page anchors / html→stripped text /
         image→dims anchor / junk→error row, routed INSIDE the Arrow batch
         [the one Python pass over the blobs]
@@ -43,6 +43,7 @@ from ..functions.udfs import (
     stage_pages_udf,
 )
 from ..plans.session import PipelineConfig
+from ..plans.spread import maybe_spread
 
 PAGE_COLUMNS = ["url", "kind", "page", "anchor_text", "text", "success", "error"]
 
@@ -77,9 +78,7 @@ def _staged(pages: DataFrame, config: PipelineConfig) -> DataFrame:
         # provably cannot feed the cluster (files < cores AND total
         # bytes < cores × maxPartitionBytes) — a well-laid-out 100 TB
         # corpus never pays this blob shuffle.
-        from .dedup import _maybe_spread
-
-        base = _maybe_spread(base, "url")
+        base = maybe_spread(base, "url")
 
     return base.select(
         "url",

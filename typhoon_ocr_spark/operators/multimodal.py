@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.spread import maybe_spread
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -177,9 +179,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
                 }
             )
 
-    from .dedup import _maybe_spread
-
-    return _maybe_spread(
+    return maybe_spread(
         media.select("media_id", "payload"), "media_id"
     ).mapInPandas(batches, FEATURE_SCHEMA)
 
@@ -220,9 +220,7 @@ def page_image_features(pages: DataFrame) -> DataFrame:
     image_rows = pages.withColumn("kind", sniff_kind_col("html")).filter(
         F.col("kind") == "image"
     )
-    from .dedup import _maybe_spread
-
-    return _maybe_spread(
+    return maybe_spread(
         image_rows.select("url", "html"), "url"
     ).mapInPandas(batches, PAGE_FEATURE_SCHEMA)
 
@@ -274,9 +272,7 @@ def image_pixel_stats(pages: DataFrame) -> DataFrame:
     image_rows = pages.withColumn("kind", sniff_kind_col("html")).filter(
         F.col("kind") == "image"
     )
-    from .dedup import _maybe_spread
-
-    return _maybe_spread(
+    return maybe_spread(
         image_rows.select("url", "html"), "url"
     ).mapInPandas(batches, IMAGE_STATS_SCHEMA)
 
@@ -339,9 +335,7 @@ def resize_images(pages: DataFrame, max_size: int = 2048) -> DataFrame:
     image_rows = pages.withColumn("kind", sniff_kind_col("html")).filter(
         F.col("kind") == "image"
     )
-    from .dedup import _maybe_spread
-
-    return _maybe_spread(
+    return maybe_spread(
         image_rows.select("url", "html"), "url"
     ).mapInPandas(batches, RESIZED_SCHEMA)
 
@@ -409,9 +403,7 @@ def media_meta(frames: DataFrame) -> DataFrame:
                     rows[name].append(val)
             yield pd.DataFrame(rows)
 
-    from .dedup import _maybe_spread
-
-    return _maybe_spread(
+    return maybe_spread(
         frames.select("media_id", "payload"), "media_id"
     ).mapInPandas(batches, MEDIA_META_SCHEMA)
 
@@ -462,9 +454,7 @@ def frame_pixel_stats(media: DataFrame) -> DataFrame:
                         rows[name].append(val)
             yield pd.DataFrame(rows)
 
-    from .dedup import _maybe_spread
-
-    return _maybe_spread(
+    return maybe_spread(
         media.select("media_id", "payload"), "media_id"
     ).mapInPandas(batches, FRAME_STATS_SCHEMA)
 

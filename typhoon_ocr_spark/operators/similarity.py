@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.textsql import ANN_QUERY_EVERY, ANN_TOP_K
+from ..plans.spread import maybe_spread
 from .dedup import _bucket_pairs
 
 # Multi-table LSH configuration (shared with the DuckDB oracle twins).
@@ -103,6 +104,7 @@ def cosine_topk(
         .select("vec_id", "embedding")
         .collect()
     )
+    rows = _clean_query_rows(rows)
     out_schema = "query_id long, score double, neighbor_id long"
     if not rows:
         return (
@@ -125,9 +127,7 @@ def cosine_topk(
         ids_b, qm_b, qn_b = bc.value
         yield from _topk_stream(batches, ids_b, qm_b, qn_b, k, _np)
 
-    from .dedup import _maybe_spread
-
-    parts = _maybe_spread(
+    parts = maybe_spread(
         embeddings.select("vec_id", "embedding"), "vec_id"
     ).mapInArrow(score_partition, out_schema)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
@@ -136,6 +136,20 @@ def cosine_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id")
     )
+
+
+def _clean_query_rows(rows):
+    """The query cohort without null, null-element or ragged vectors,
+    skipped as _topk_stream skips such candidates: the cohort's
+    dimension is its most common vector length (ties: the longest)."""
+    from collections import Counter
+
+    ok = [r for r in rows if r[1] is not None and None not in r[1]]
+    lens = Counter(len(r[1]) for r in ok)
+    if not lens:
+        return []
+    dims = max(lens, key=lambda n: (lens[n], n))
+    return [r for r in ok if len(r[1]) == dims]
 
 
 # chunk size for the streaming top-k: bounds the in-flight score matrix
@@ -181,7 +195,9 @@ def _topk_stream(batches, q_ids, qm, qn, k, np):
     score each chunk, keep the per-query best (score DESC, vec_id ASC)
     candidates, emit one Arrow batch of <= chunks*Q*k rows at the end.
     Tie-breaks use lexsort((ids, -score)) — primary score descending,
-    secondary id ascending, matching the JVM window order."""
+    secondary id ascending, matching the JVM window order. NaN scores
+    (zero-norm vectors) sort first, as Spark's DESC ranks NaN above
+    every double, so the final window never ranks a row a chunk cut."""
     import pyarrow as pa
 
     dims = qm.shape[1]
@@ -205,7 +221,8 @@ def _topk_stream(batches, q_ids, qm, qn, k, np):
         cut = min(k, s.shape[0])
         for j in range(s.shape[1]):
             col = s[:, j]
-            order = np.lexsort((ids, -col))[:cut]
+            key = np.where(np.isnan(col), np.inf, col)
+            order = np.lexsort((ids, -key))[:cut]
             sel = col[order]
             valid = sel != -np.inf  # drop masked self-pairs only
             if valid.any():
@@ -223,7 +240,7 @@ def _topk_stream(batches, q_ids, qm, qn, k, np):
             keep_rows = []
             raw = emb.to_pylist()
             for i, v in enumerate(raw):
-                if v is not None and len(v) == dims:
+                if v is not None and len(v) == dims and None not in v:
                     keep_rows.append(i)
             mat = np.array(
                 [[float(x) for x in raw[i]] for i in keep_rows], dtype=np.float64
@@ -249,12 +266,13 @@ def _topk_stream(batches, q_ids, qm, qn, k, np):
 
 def _list_col_matrix(chunked, dims, np):
     """(rows, dims) float64 matrix from an Arrow list<float> column, or
-    None when any row is null/ragged (caller densifies those)."""
+    None when any row is null/ragged or holds a null element (caller
+    densifies the clean rows)."""
     import pyarrow as pa
 
     mats = []
     for chunk in chunked.chunks if hasattr(chunked, "chunks") else [chunked]:
-        if chunk.null_count:
+        if chunk.null_count or chunk.values.null_count:
             return None
         offs = chunk.offsets.to_numpy(zero_copy_only=False)
         if len(offs) > 1 and not (np.diff(offs) == dims).all():

@@ -32,10 +32,10 @@ from ..functions.textsql import (
     PUNCT_CLASS,
     STOPWORDS,
     THAI_NEGATED_CLASS,
-    WORD_SPLIT_PATTERN,
     WS_SPLIT_PATTERN,
 )
-from .dedup import _maybe_spread, word_tokens
+from ..plans.spread import maybe_spread
+from .dedup import _id_preserving_map, _raw_tokens, word_tokens
 
 
 def _per_mille(num: Column, den: Column) -> Column:
@@ -46,7 +46,7 @@ def _spread_docs(
     documents: DataFrame, text_col: str, extra: dict | None = None
 ) -> DataFrame:
     """(doc_id, [extra aliases...,] text_col) projection, adaptively
-    spread (dedup._maybe_spread): every operator below is map-only (or
+    spread (plans.spread.maybe_spread): every operator below is map-only (or
     map-heavy before its first exchange), so a single-row-group input
     file would serialize it onto one task (r6 measurement: the whole
     textstats family ran single-core at bench scale)."""
@@ -54,7 +54,7 @@ def _spread_docs(
     for name, expr in (extra or {}).items():
         cols.append(expr.alias(name))
     cols.append(F.col(text_col))
-    return _maybe_spread(documents.select(*cols), "doc_id")
+    return maybe_spread(documents.select(*cols), "doc_id")
 
 
 def language_id(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -365,15 +365,8 @@ def top_bigram(documents: DataFrame, text_col: str = "text") -> DataFrame:
     with ZERO exchanges (a per-document statistic never needed a
     shuffle). The per-mille share is computed by the same JVM
     expression as before on the one-row-per-doc output."""
-    from .dedup import _id_preserving_map, _maybe_spread
-
-    src = _maybe_spread(documents.select("doc_id", text_col), "doc_id").select(
-        "doc_id",
-        F.split(F.lower(F.col(text_col)), WORD_SPLIT_PATTERN).alias("_rawtoks"),
-    )
-
     picked = _id_preserving_map(
-        src,
+        _raw_tokens(documents, text_col),
         _top_bigram_of_tokens,
         [("bigram", "string"), ("occurrences", "long"), ("n_bigrams", "long")],
     )

@@ -12,6 +12,7 @@ emits the updated cumulative row for users present in the batch.
 
 from __future__ import annotations
 
+import re
 from typing import Iterable, Tuple
 
 import pandas as pd
@@ -26,6 +27,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..functions.textsql import WORD_SPLIT_PATTERN
+from ..operators.dedup import _bands_of_shingles, _shingles_of_tokens
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -126,46 +130,14 @@ STREAM_BUCKET_CAP = 16
 
 
 def minhash_bands_py(text: str) -> list:
-    """Pure-Python twin of dedup.minhash_bands for ONE document: same
-    tokens (lowercase, split on non-alnum), same 3-word shingles, one
-    md5 per shingle sliced into MINHASH_PERMS 4-hex windows,
-    lexicographic minima, band hash = md5 of '|'-joined slice minima.
-    Parity with the batch operator is pinned by
+    """Pure-Python twin of dedup.minhash_bands for ONE document: the
+    Python regex stands in for the JVM lower+split tokenizer; shingles,
+    slice minima and band hashes are the batch operator's own
+    per-document core. Parity with the batch operator is pinned by
     tests/test_scale_paths.py::test_minhash_bands_py_parity."""
-    import hashlib
-    import re
-
-    from ..functions.textsql import (
-        MINHASH_BANDS,
-        MINHASH_PERMS,
-        MINHASH_SLICE_HEX,
-        SHINGLE_WORDS,
-        WORD_SPLIT_PATTERN,
+    return _bands_of_shingles(
+        _shingles_of_tokens(re.split(WORD_SPLIT_PATTERN, (text or "").lower()))
     )
-
-    toks = [t for t in re.split(WORD_SPLIT_PATTERN, (text or "").lower()) if t]
-    if len(toks) < SHINGLE_WORDS:
-        return []
-    hs = [
-        hashlib.md5(
-            " ".join(toks[i : i + SHINGLE_WORDS]).encode("utf-8")
-        ).hexdigest()
-        for i in range(len(toks) - SHINGLE_WORDS + 1)
-    ]
-    sigs = [
-        min(h[p * MINHASH_SLICE_HEX : (p + 1) * MINHASH_SLICE_HEX] for h in hs)
-        for p in range(MINHASH_PERMS)
-    ]
-    rpb = MINHASH_PERMS // MINHASH_BANDS
-    return [
-        (
-            b,
-            hashlib.md5(
-                "|".join(sigs[b * rpb : (b + 1) * rpb]).encode("utf-8")
-            ).hexdigest(),
-        )
-        for b in range(MINHASH_BANDS)
-    ]
 
 
 def _bucket_update(
