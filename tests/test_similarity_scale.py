@@ -1,6 +1,7 @@
 """ANN scale-path semantics (round 2): bucketed search actually
 searches, near-dups never go cartesian, recall is measured."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from typhoon_ocr_spark.operators import similarity
@@ -265,6 +266,33 @@ def test_cosine_topk_empty_and_partitioned_inputs(spark):
     )
     assert none.count() == 0
     assert none.columns == ["query_id", "rank", "neighbor_id"]
+
+
+_TOPK_COLS = ["query_id", "rank", "neighbor_id"]
+_EMPTY_CASES = {
+    "lsh_sign_buckets": ["vec_id", "bucket"],
+    "lsh_table_buckets": ["vec_id", "t", "bucket"],
+    "embedding_near_dups": ["vec_a", "vec_b", "cos_pct"],
+    "lsh_bucketed_topk": _TOPK_COLS,
+    "ivf_assign": ["vec_id", "centroid_id"],
+    "ivf_probed_topk": _TOPK_COLS,
+    "pq_assign": ["vec_id", "m", "code_cid"],
+    "pq_adc_topk": _TOPK_COLS,
+}
+
+
+@pytest.mark.parametrize(
+    "op,n_dims",
+    [(op, dims) for op in _EMPTY_CASES for dims in (None, 64)
+     if dims is not None or not op.startswith("pq_")],  # PQ needs n_dims
+)
+def test_ann_operators_on_empty_embeddings(spark, op, n_dims):
+    """An empty corpus yields 0 rows with the documented columns, with
+    the width probed (n_dims=None) or given — never an exception."""
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    df = getattr(similarity, op)(emb, n_dims=n_dims)
+    assert df.columns == _EMPTY_CASES[op]
+    assert df.count() == 0
 
 
 def test_cosine_topk_skips_bad_query_rows(spark):

@@ -1,18 +1,41 @@
 """Dump .explain("formatted") for named declared queries to
 plans/<outdir>/<query>_<tag>.txt (judge evidence for OPTIMIZATION_rNN.md).
 
+Expression ids (``#N``), exchange ids (``plan_id=N``) and the JVM's
+fresh lambda-variable suffixes (``lambda x_N``) are renumbered to their
+first-appearance ordinals within each file, so dumps of the same plan
+from two checkouts compare with plain ``diff`` even when the session's
+id counters differ (e.g. column construction moved into a helper).
+
 Usage: python tools/dump_plans.py <outdir> <tag> <sf_dir> <query> [query...]
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 from typhoon_ocr_spark.plans.session import build_session  # noqa: E402
+
+_IDS = re.compile(r"(#|plan_id=|lambda \w+?_)(\d+)")
+
+
+def renumber_ids(plan: str) -> str:
+    """Replace each ``#N`` / ``plan_id=N`` / ``lambda x_N`` number with
+    its first-appearance ordinal (one counter per kind), keeping
+    repeated ids equal."""
+    seen: dict = {}
+
+    def ordinal(m: re.Match) -> str:
+        kind = "lambda" if m.group(1).startswith("lambda") else m.group(1)
+        ids = seen.setdefault(kind, {})
+        return f"{m.group(1)}{ids.setdefault(m.group(2), len(ids) + 1)}"
+
+    return _IDS.sub(ordinal, plan)
 
 
 def main() -> int:
@@ -31,7 +54,7 @@ def main() -> int:
         )
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
-            f.write(plan)
+            f.write(renumber_ids(plan))
         print(f"wrote {path} ({len(plan)} bytes)")
     return 0
 

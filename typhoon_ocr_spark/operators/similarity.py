@@ -22,8 +22,10 @@ Scale notes:
 - bucket pair fan-out is OOM-safe: window-count cap before any
   collect_list (shared _bucket_pairs helper);
 - norms are precomputed once per vector;
-- dot products run as JVM higher-order functions (zip_with +
-  aggregate), not Python.
+- exact brute-force scoring (``cosine_topk``) is one vectorized NumPy
+  mapInArrow pass, bit-identical to the JVM fold; the bucketed, IVF
+  and PQ operators still score with the JVM higher-order-function
+  fold ``_dot`` (zip_with + aggregate).
 """
 
 from __future__ import annotations
@@ -50,6 +52,7 @@ EMB_DIMS = 64  # the testdata embeddings width — callers that know their
 # corpus (the driver contract, the oracle twins) pass it to skip the
 # width probe; operators themselves default to probing (n_dims=None)
 IVF_PROBES = 4
+ANN_SIGN_PLANES = 8  # hyperplanes of the single-table lsh_sign_buckets
 
 
 def _probe_dims(df) -> int:
@@ -107,13 +110,7 @@ def cosine_topk(
     rows = _clean_query_rows(rows)
     out_schema = "query_id long, score double, neighbor_id long"
     if not rows:
-        return (
-            embeddings.select(
-                F.col("vec_id").alias("query_id"),
-                F.lit(0).cast("long").alias("rank"),
-                F.col("vec_id").alias("neighbor_id"),
-            ).limit(0)
-        )
+        return _empty_topk(embeddings)
     import numpy as np
 
     q_ids = np.array([r[0] for r in rows], dtype=np.int64)
@@ -130,12 +127,29 @@ def cosine_topk(
     parts = maybe_spread(
         embeddings.select("vec_id", "embedding"), "vec_id"
     ).mapInArrow(score_partition, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return _topk(parts, "score", "neighbor_id", k)
+
+
+def _topk(scored: DataFrame, score: str, id_col: str, k: int) -> DataFrame:
+    """The ranking tail of every search operator: the best ``k`` rows
+    per query_id by (``score`` DESC, ``id_col`` ASC).
+    Output: (query_id, rank BIGINT, id_col)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(id_col))
     return (
-        parts.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id")
+        .select("query_id", F.col("rank").cast("long").alias("rank"), id_col)
     )
+
+
+def _empty_topk(embeddings: DataFrame) -> DataFrame:
+    """The 0-row (query_id, rank, neighbor_id) search result: no query
+    survived, or there is no trained quantizer to search with."""
+    return embeddings.select(
+        F.col("vec_id").alias("query_id"),
+        F.lit(0).cast("long").alias("rank"),
+        F.col("vec_id").alias("neighbor_id"),
+    ).limit(0)
 
 
 def _clean_query_rows(rows):
@@ -285,9 +299,7 @@ def _list_col_matrix(chunked, dims, np):
 NEAR_DUP_COSINE = 0.42  # calibrated to the synthetic corpus (max ~0.51)
 
 
-def embedding_near_dups_exact(
-    embeddings: DataFrame, threshold: float = NEAR_DUP_COSINE
-) -> DataFrame:
+def embedding_near_dups_exact(embeddings: DataFrame) -> DataFrame:
     """Exact all-pairs near-dup reference (O(N^2) — verification-grade
     only; never run this at scale). Output: (vec_a, vec_b, cos_pct)."""
     base = _with_norm(embeddings)
@@ -301,60 +313,85 @@ def embedding_near_dups_exact(
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .withColumn("cos", cos)
-        .filter(F.col("cos") > threshold)
+        .filter(F.col("cos") > NEAR_DUP_COSINE)
         .select("vec_a", "vec_b", F.floor(F.col("cos") * 100).cast("long").alias("cos_pct"))
     )
 
 
-def lsh_table_buckets(
-    embeddings: DataFrame,
-    n_tables: int = ANN_LSH_TABLES,
-    planes_per_table: int = ANN_LSH_PLANES_PER_TABLE,
-    n_dims: int | None = None,
-) -> DataFrame:
+def _doubles(embeddings: DataFrame, n_dims: int | None,
+             id_col: str = "vec_id") -> tuple:
+    """(id_col, e) with e the embedding cast to doubles, and its width:
+    ``n_dims`` when given, else probed (one tiny driver job; 0 for an
+    empty or all-null frame). NEVER default the width to a constant:
+    zip_with against a wrong-width plane literal yields null dots →
+    every bit '0' → one global bucket, silently."""
+    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    vid = F.col("vec_id") if id_col == "vec_id" else F.col("vec_id").alias(id_col)
+    df = embeddings.select(vid, e.alias("e"))
+    return df, (_probe_dims(df) if n_dims is None else n_dims)
+
+
+def _sign_tables(embeddings: DataFrame, n_dims: int | None, n_tables: int,
+                 planes_per_table: int, id_col: str = "vec_id") -> tuple:
+    """The sign-LSH front every routing operator composes: the
+    ``_doubles`` frame and, per table, the projections of e onto its
+    hyperplanes — table t takes planes [t*ppt, (t+1)*ppt) of one
+    deterministic family, so the DuckDB oracle can inline identical
+    constants. No tables for a 0-width (empty) frame."""
+    df, n_dims = _doubles(embeddings, n_dims, id_col)
+    if not n_dims:
+        return df, []
+    projs = [
+        _dot(F.col("e"), F.array(*[F.lit(s) for s in signs]))
+        for signs in lsh_plane_signs(n_dims, n_tables * planes_per_table)
+    ]
+    return df, [
+        projs[t * planes_per_table:(t + 1) * planes_per_table] for t in range(n_tables)
+    ]
+
+
+def _bucket(projs: list, flip: int | None = None) -> Column:
+    """Bucket string of one table: one sign bit per projection ('1' iff
+    >= 0), concatenated; bit ``flip`` inverted (a multi-probe cell)."""
+    return F.concat(*[
+        F.when(p >= 0, F.lit("0" if j == flip else "1"))
+        .otherwise(F.lit("1" if j == flip else "0"))
+        for j, p in enumerate(projs)
+    ])
+
+
+def _routing_rows(df: DataFrame, id_col: str, cells: list) -> DataFrame:
+    """(id_col, t, bucket): one row per (table, bucket) cell of
+    ``cells`` = [(t, bucket Column)], exploded in one pass over ``df``;
+    the empty routing table when there are no cells (empty corpus)."""
+    if not cells:
+        return df.select(
+            id_col, F.lit(0).cast("int").alias("t"), F.lit("").alias("bucket")
+        ).limit(0)
+    rows = [F.struct(F.lit(t).cast("int").alias("t"), b.alias("bucket")) for t, b in cells]
+    return df.select(
+        id_col, F.explode(F.array(*rows)).alias("tb")
+    ).select(id_col, "tb.t", "tb.bucket")
+
+
+def lsh_table_buckets(embeddings: DataFrame, n_dims: int | None = None) -> DataFrame:
     """Multi-table sign-LSH routing: one (vec_id, t, bucket) row per
-    table; table t hashes with planes [t*ppt, (t+1)*ppt). All tables
-    derive from one deterministic plane family, so the DuckDB oracle
-    can inline identical constants. Output keeps the id only — vectors
-    are re-joined AFTER candidate dedup so the bucket shuffle never
-    carries embeddings.
+    table (ANN_LSH_TABLES tables of ANN_LSH_PLANES_PER_TABLE planes).
+    Output keeps the id only — vectors are re-joined AFTER candidate
+    dedup so the bucket shuffle never carries embeddings.
 
     ``n_dims=None`` probes the actual width (one tiny driver job);
     pass it explicitly (the driver contract passes 64) to skip the
-    probe. NEVER default to a constant: zip_with against a wrong-width
-    plane literal yields null dots → every bit '0' → one global
-    bucket, silently."""
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    df = embeddings.select("vec_id", e.alias("e"))
-    if n_dims is None:
-        n_dims = _probe_dims(df)
-    if not n_dims:  # empty corpus: empty routing table, not a crash
-        return (
-            df.select("vec_id", F.lit(0).cast("int").alias("t"),
-                      F.lit("").alias("bucket")).limit(0)
-        )
-    planes = lsh_plane_signs(n_dims, n_tables * planes_per_table)
-
-    tables = []
-    for t in range(n_tables):
-        bits = []
-        for j in range(planes_per_table):
-            signs = planes[t * planes_per_table + j]
-            proj = _dot(F.col("e"), F.array(*[F.lit(s) for s in signs]))
-            bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-        tables.append(
-            F.struct(F.lit(t).cast("int").alias("t"), F.concat(*bits).alias("bucket"))
-        )
-    return df.select(
-        "vec_id", F.explode(F.array(*tables)).alias("tb")
-    ).select("vec_id", "tb.t", "tb.bucket")
+    probe."""
+    df, tables = _sign_tables(
+        embeddings, n_dims, ANN_LSH_TABLES, ANN_LSH_PLANES_PER_TABLE
+    )
+    return _routing_rows(df, "vec_id", [(t, _bucket(p)) for t, p in enumerate(tables)])
 
 
 def lsh_query_probes(
     embeddings: DataFrame,
     query_every: int = ANN_QUERY_EVERY,
-    n_tables: int = ANN_LSH_TABLES,
-    planes_per_table: int = ANN_LSH_PLANES_PER_TABLE,
     n_dims: int | None = None,
     multiprobe: int = ANN_MULTIPROBE,
 ) -> DataFrame:
@@ -365,75 +402,49 @@ def lsh_query_probes(
     argmin, so candidate sets match bit-for-bit.
     Output: (query_id, t, bucket)."""
     assert multiprobe in (0, 1), "oracle twin mirrors 0/1 only"
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    df = embeddings.filter(F.col("vec_id") % query_every == 0).select(
-        F.col("vec_id").alias("query_id"), e.alias("e")
+    df, tables = _sign_tables(
+        embeddings.filter(F.col("vec_id") % query_every == 0),
+        n_dims, ANN_LSH_TABLES, ANN_LSH_PLANES_PER_TABLE, id_col="query_id",
     )
-    if n_dims is None:
-        n_dims = _probe_dims(df)
-    if not n_dims:
-        return df.select(
-            "query_id", F.lit(0).cast("int").alias("t"), F.lit("").alias("bucket")
-        ).limit(0)
-    planes = lsh_plane_signs(n_dims, n_tables * planes_per_table)
-
-    rows = []
-    for t in range(n_tables):
-        projs = [
-            _dot(F.col("e"), F.array(*[F.lit(s) for s in planes[t * planes_per_table + j]]))
-            for j in range(planes_per_table)
-        ]
-        bits = [
-            F.when(p >= 0, F.lit("1")).otherwise(F.lit("0")) for p in projs
-        ]
-        rows.append(
-            F.struct(F.lit(t).cast("int").alias("t"), F.concat(*bits).alias("bucket"))
-        )
+    cells = []
+    for t, projs in enumerate(tables):
+        cells.append((t, _bucket(projs)))
         if multiprobe:
             absv = [F.abs(p) for p in projs]
 
             def argmin_cond(j: int):
                 cond = F.lit(True)
-                for i in range(planes_per_table):
+                for i in range(len(projs)):
                     if i < j:
                         cond = cond & (absv[i] > absv[j])
                     elif i > j:
                         cond = cond & (absv[i] >= absv[j])
                 return cond
 
-            def flipped(j: int):
-                out = list(bits)
-                out[j] = F.when(projs[j] >= 0, F.lit("0")).otherwise(F.lit("1"))
-                return F.concat(*out)
-
-            flip = F.when(argmin_cond(0), flipped(0))
-            for j in range(1, planes_per_table):
-                flip = flip.when(argmin_cond(j), flipped(j))
-            rows.append(F.struct(F.lit(t).cast("int").alias("t"), flip.alias("bucket")))
-    return df.select(
-        "query_id", F.explode(F.array(*rows)).alias("tb")
-    ).select("query_id", "tb.t", "tb.bucket")
+            flip = F.when(argmin_cond(0), _bucket(projs, flip=0))
+            for j in range(1, len(projs)):
+                flip = flip.when(argmin_cond(j), _bucket(projs, flip=j))
+            cells.append((t, flip))
+    return _routing_rows(df, "query_id", cells)
 
 
 def embedding_near_dups(
-    embeddings: DataFrame,
-    threshold: float = NEAR_DUP_COSINE,
-    max_bucket: int = EMB_MAX_BUCKET,
-    n_dims: int | None = None,
+    embeddings: DataFrame, n_dims: int | None = None
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via multi-table LSH
-    blocking + exact cosine within candidates (the scale path — no
-    cartesian anywhere; VERDICT round 1 #7). A pair is considered iff
-    it shares a bucket in >=1 of the ANN_LSH_TABLES tables; recall for
-    pairs at the threshold is 1-(1-p^planes)^tables where
-    p = 1 - angle/pi. Output: (vec_a, vec_b, cos_pct BIGINT)."""
+    """Embedding-cosine near-duplicate pairs (cosine > NEAR_DUP_COSINE)
+    via multi-table LSH blocking + exact cosine within candidates (the
+    scale path — no cartesian anywhere; VERDICT round 1 #7). A pair is
+    considered iff it shares a bucket of at most EMB_MAX_BUCKET members
+    in >=1 of the ANN_LSH_TABLES tables; recall for pairs at the
+    threshold is 1-(1-p^planes)^tables where p = 1 - angle/pi.
+    Output: (vec_a, vec_b, cos_pct BIGINT)."""
     buckets = lsh_table_buckets(embeddings, n_dims=n_dims)
     # merge hint: the candidate-pair frame's size is unknowable to the
     # planner (double-explode fan-out behind a distinct) — a broadcast
     # guess here is an unbounded driver-memory build at scale (observed
     # OOM at 50k vectors with correlated buckets); sort-merge never
     # builds anything in one memory
-    pairs = _bucket_pairs(buckets, ["t", "bucket"], "vec_id", max_bucket).select(
+    pairs = _bucket_pairs(buckets, ["t", "bucket"], "vec_id", EMB_MAX_BUCKET).select(
         F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b")
     ).hint("merge")
     base = _with_norm(embeddings)
@@ -443,7 +454,7 @@ def embedding_near_dups(
     return (
         pairs.join(a, "vec_a").join(b, "vec_b")
         .withColumn("cos", cos)
-        .filter(F.col("cos") > threshold)
+        .filter(F.col("cos") > NEAR_DUP_COSINE)
         .select("vec_a", "vec_b", F.floor(F.col("cos") * 100).cast("long").alias("cos_pct"))
     )
 
@@ -468,11 +479,9 @@ def lsh_bucketed_topk(
     OOM-guard as the pair generators); the DuckDB twin mirrors the
     cap. Output: (query_id, rank, neighbor_id); recall vs the exact
     ``cosine_topk`` is reported in BENCH.md."""
-    if n_dims is None:
-        # resolve once: lsh_table_buckets and lsh_query_probes would
-        # otherwise each fire their own driver-side width-probe job
-        e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        n_dims = _probe_dims(embeddings.select("vec_id", e.alias("e")))
+    # resolve the width once: lsh_table_buckets and lsh_query_probes
+    # would otherwise each fire their own driver-side width-probe job
+    _, n_dims = _doubles(embeddings, n_dims)
     buckets = lsh_table_buckets(embeddings, n_dims=n_dims)
     qb = lsh_query_probes(
         embeddings, query_every=query_every, n_dims=n_dims, multiprobe=multiprobe
@@ -501,15 +510,10 @@ def lsh_bucketed_topk(
         .join(F.broadcast(queries), "query_id")
         .withColumn("score", _dot(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id")
-    )
+    return _topk(scored, "score", "neighbor_id", k)
 
 
-def lsh_plane_signs(n_dims: int, n_planes: int = 8) -> list:
+def lsh_plane_signs(n_dims: int, n_planes: int) -> list:
     """Deterministic ±1 hyperplanes: plane j keeps dimension i with
     sign +1 iff md5("{i}|{j}") starts with hex digit 0-7. Shared by the
     Spark operator and the DuckDB oracle (inlined as list literals)."""
@@ -524,28 +528,17 @@ def lsh_plane_signs(n_dims: int, n_planes: int = 8) -> list:
     ]
 
 
-def lsh_sign_buckets(
-    embeddings: DataFrame, n_planes: int = 8, n_dims: int | None = None
-) -> DataFrame:
-    """Sign-LSH bucket per vector: bit j = sign of the projection onto a
-    deterministic ±1 hyperplane. Bucket-join variant of ANN: at 10^12
-    vectors, equal buckets become the join key and brute force runs
-    only within buckets. Pass ``n_dims`` explicitly to skip the
-    driver-side width probe (never default it to a constant — a wrong
-    width nulls every projection and collapses all vectors into one
-    bucket). Output: (vec_id, bucket)."""
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    df = embeddings.select("vec_id", e.alias("e"))
-    if n_dims is None:
-        n_dims = _probe_dims(df)
-    if not n_dims:  # empty corpus: empty result, not a crash
+def lsh_sign_buckets(embeddings: DataFrame, n_dims: int | None = None) -> DataFrame:
+    """Sign-LSH bucket per vector: bit j = sign of the projection onto
+    the j-th of ANN_SIGN_PLANES deterministic ±1 hyperplanes (one
+    table, no explode). Bucket-join variant of ANN: at 10^12 vectors,
+    equal buckets become the join key and brute force runs only within
+    buckets. Pass ``n_dims`` explicitly to skip the driver-side width
+    probe. Output: (vec_id, bucket)."""
+    df, tables = _sign_tables(embeddings, n_dims, 1, ANN_SIGN_PLANES)
+    if not tables:  # empty corpus: empty result, not a crash
         return df.select("vec_id", F.lit("").alias("bucket")).limit(0)
-
-    bits = []
-    for signs in lsh_plane_signs(n_dims, n_planes):
-        proj = _dot(F.col("e"), F.array(*[F.lit(s) for s in signs]))
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return df.select("vec_id", F.concat(*bits).alias("bucket"))
+    return df.select("vec_id", _bucket(tables[0]).alias("bucket"))
 
 
 IVF_CENTROID_EVERY = 50
@@ -553,15 +546,15 @@ IVF_CENTROID_EVERY = 50
 # gives N/50 cells — 2·10^10 at 10^12 vectors, and the round-5 scaling
 # curve measured the blowup at a mere 10x (ann_ivf_topk 1.6 s → 167 s:
 # 1000-centroid literal folds). Real IVF fixes the cell count, so the
-# effective stride grows with N: every = max(centroid_every,
+# effective stride grows with N: every = max(IVF_CENTROID_EVERY,
 # ceil(N / IVF_MAX_CENTROIDS)) — pure integer arithmetic, mirrored
 # bit-exactly by the DuckDB twins.
 IVF_MAX_CENTROIDS = 256
 
 
-def _effective_every(embeddings: DataFrame, centroid_every: int) -> int:
+def _effective_every(embeddings: DataFrame) -> int:
     n = embeddings.count()
-    return max(centroid_every, (n + IVF_MAX_CENTROIDS - 1) // IVF_MAX_CENTROIDS)
+    return max(IVF_CENTROID_EVERY, (n + IVF_MAX_CENTROIDS - 1) // IVF_MAX_CENTROIDS)
 
 # Lloyd's iterations for the IVF cells and PQ sub-codebooks (round-5
 # verdict #3: the quantizers were untrained sampled cohorts). Training
@@ -607,17 +600,16 @@ def _l2(a: Column, b: Column) -> Column:
     )
 
 
-def _subspace_rows(frame: DataFrame, id_alias: str, n_dims: int,
-                   n_sub: int = PQ_SUBSPACES) -> DataFrame:
+def _subspace_rows(frame: DataFrame, id_alias: str, n_dims: int) -> DataFrame:
     """(id, m, se): one row per (vector, subspace) with the sub-vector.
-    Requires n_dims % n_sub == 0."""
-    width = n_dims // n_sub
+    Requires n_dims % PQ_SUBSPACES == 0."""
+    width = n_dims // PQ_SUBSPACES
     subs = [
         F.struct(
             F.lit(m).cast("int").alias("m"),
             F.slice(F.col("e"), m * width + 1, width).alias("se"),
         )
-        for m in range(n_sub)
+        for m in range(PQ_SUBSPACES)
     ]
     return frame.select(
         F.col("vec_id").alias(id_alias), F.explode(F.array(*subs)).alias("s")
@@ -712,55 +704,58 @@ def _assign_cosine(base: DataFrame, centroids: list, carry: list = ()) -> DataFr
     )
 
 
-def train_ivf_centroids(
-    embeddings: DataFrame,
-    centroid_every: int = IVF_CENTROID_EVERY,
-    iters: int = IVF_TRAIN_ITERS,
-    n_dims: int | None = None,
-) -> list:
-    """Distributed Lloyd's for the IVF cells, seeded from the
-    deterministic cohort (vec_id % centroid_every == 0). Each round:
-    map-only assignment against broadcast-literal centroids, then a
-    map-side-partial groupBy of exact INTEGER coordinate sums; only the
-    C×(D+1) aggregate rows ever reach the driver — the per-iteration
-    driver materialization of C centroids is the k-means contract
-    (MLlib's KMeans does the same). Cluster ids stay the seed vec_ids.
-    Empty clusters keep their previous centroid. Returns
-    [(cid, coords_micro, norm)] sorted by cid — deterministic on any
-    partitioning because every cross-row reduction is integer. The
-    seed stride is widened so the cell count never exceeds
-    IVF_MAX_CENTROIDS (see _effective_every)."""
+def _lloyd(frame: DataFrame, every: int, seed_col: str, assign, key: str,
+           int_col: str, width: int) -> list:
+    """Integer-space Lloyd's shared by the IVF cells and the PQ
+    sub-codebooks: seed [(cid, coords)] from the deterministic cohort's
+    ``seed_col`` (vec_id % every == 0; cluster ids stay the seed
+    vec_ids), then IVF_TRAIN_ITERS rounds of ``assign(cents)`` (a frame
+    keyed by cluster ``key`` carrying the BIGINT ``int_col`` vector)
+    followed by a map-side-partial groupBy of exact INTEGER coordinate
+    sums. Only the C×(width+1) aggregate rows reach the driver — the
+    per-iteration driver materialization of C centroids is the k-means
+    contract (MLlib's KMeans does the same). Empty clusters keep their
+    previous centroid. Sorted by cid; [] when the cohort is empty."""
+    seeds = frame.filter(F.col("vec_id") % every == 0).select("vec_id", seed_col).collect()
+    cents = sorted((int(r["vec_id"]), [float(x) for x in r[seed_col]]) for r in seeds)
+    if not cents:
+        return []
+    for _ in range(IVF_TRAIN_ITERS):
+        sums = (
+            assign(cents)
+            .groupBy(key)
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                *[F.sum(F.col(int_col)[d]).alias(f"s{d}") for d in range(width)],
+            )
+            .collect()
+        )
+        upd = {
+            int(r[key]): [float(r[f"s{d}"]) / float(r["cnt"]) for d in range(width)]
+            for r in sums
+        }
+        cents = [(cid, upd.get(cid, ce)) for cid, ce in cents]
+    return cents
+
+
+def train_ivf_centroids(embeddings: DataFrame, n_dims: int | None = None) -> list:
+    """Distributed Lloyd's for the IVF cells (cosine assignment, see
+    _lloyd). Returns [(cid, coords_micro, norm)] sorted by cid —
+    deterministic on any partitioning because every cross-row reduction
+    is integer. The seed stride is widened so the cell count never
+    exceeds IVF_MAX_CENTROIDS (see _effective_every)."""
     base = _quantized(embeddings)
     if n_dims is None:
         n_dims = _probe_dims(base)
     if not n_dims:
         return []
-    centroid_every = _effective_every(embeddings, centroid_every)
-    seeds = (
-        base.filter(F.col("vec_id") % centroid_every == 0).select("vec_id", "e").collect()
+    cents = _lloyd(
+        base, _effective_every(embeddings), "e",
+        lambda cs: _assign_cosine(
+            base, [(cid, ce, _py_norm(ce)) for cid, ce in cs], carry=["qe"]
+        ),
+        "centroid_id", "qe", n_dims,
     )
-    cents = sorted((int(r["vec_id"]), [float(x) for x in r["e"]]) for r in seeds)
-    if not cents:
-        return []
-    for _ in range(iters):
-        asg = _assign_cosine(
-            base, [(cid, ce, _py_norm(ce)) for cid, ce in cents], carry=["qe"]
-        )
-        sums = (
-            asg.groupBy("centroid_id")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                *[F.sum(F.col("qe")[d]).alias(f"s{d}") for d in range(n_dims)],
-            )
-            .collect()
-        )
-        upd = {
-            int(r["centroid_id"]): [
-                float(r[f"s{d}"]) / float(r["cnt"]) for d in range(n_dims)
-            ]
-            for r in sums
-        }
-        cents = [(cid, upd.get(cid, ce)) for cid, ce in cents]
     return [(cid, ce, _py_norm(ce)) for cid, ce in cents]
 
 
@@ -777,14 +772,7 @@ def _assign_l2(sub: DataFrame, books, key_cols, carry: list = ()) -> DataFrame:
     in place, take min(struct(d2_q, cid)) per ``key_cols`` group
     (map-side partials; only id-rows exchange). ``books`` is
     {m: [(cid, coords)]}. Output: (*key_cols, cid [, carry...])."""
-    bdf = sub.sparkSession.createDataFrame(
-        [
-            (int(m), int(cid), [float(x) for x in ce])
-            for m, book in sorted(books.items())
-            for cid, ce in book
-        ],
-        "m long, cid long, ce array<double>",
-    )
+    bdf = _codebook_frame(sub.sparkSession, books)
     sc = F.struct(
         _l2_d2_q(F.col("se"), F.col("ce")).alias("d2"),
         F.col("cid").alias("cid"),
@@ -799,75 +787,64 @@ def _assign_l2(sub: DataFrame, books, key_cols, carry: list = ()) -> DataFrame:
     )
 
 
-def train_pq_codebooks(
-    embeddings: DataFrame,
-    n_dims: int,
-    centroid_every: int = IVF_CENTROID_EVERY,
-    n_sub: int = PQ_SUBSPACES,
-    iters: int = IVF_TRAIN_ITERS,
-) -> dict:
+def _codebook_frame(spark, books: dict) -> DataFrame:
+    """Tiny (m, cid, ce) codeword frame from {m: [(cid, coords)]} — the
+    broadcast side of PQ assignment and of the ADC lookup tables."""
+    return spark.createDataFrame(
+        [
+            (int(m), int(cid), [float(x) for x in ce])
+            for m, book in sorted(books.items())
+            for cid, ce in book
+        ],
+        "m long, cid long, ce array<double>",
+    )
+
+
+def train_pq_codebooks(embeddings: DataFrame, n_dims: int) -> dict:
     """Per-subspace integer-space Lloyd's (L2 metric — the standard PQ
-    objective), seeded from the cohort's sub-vectors. Same determinism
-    contract as train_ivf_centroids. Returns {m: [(cid, coords)]}.
-    Subspaces train as separate tiny jobs — training is the offline
-    path; at scale it runs on a sample, never the full corpus."""
-    assert n_dims % n_sub == 0, "dims must split evenly into subspaces"
-    w = n_dims // n_sub
-    centroid_every = _effective_every(embeddings, centroid_every)
+    objective, see _lloyd), seeded from the cohort's sub-vectors. Same
+    determinism contract as train_ivf_centroids. Returns
+    {m: [(cid, coords)]} for the PQ_SUBSPACES subspaces. Subspaces
+    train as separate tiny jobs — training is the offline path; at
+    scale it runs on a sample, never the full corpus."""
+    assert n_dims % PQ_SUBSPACES == 0, "dims must split evenly into subspaces"
+    w = n_dims // PQ_SUBSPACES
+    every = _effective_every(embeddings)
     base = _quantized(embeddings)
     books: dict = {}
-    for m in range(n_sub):
+    for m in range(PQ_SUBSPACES):
         sub = base.select(
             F.lit(m).cast("long").alias("m"),
             "vec_id",
             F.slice(F.col("qe"), m * w + 1, w).alias("sq"),
             F.slice(F.col("e"), m * w + 1, w).alias("se"),
         )
-        seeds = (
-            sub.filter(F.col("vec_id") % centroid_every == 0)
-            .select("vec_id", "se")
-            .collect()
+        book = _lloyd(
+            sub, every, "se",
+            lambda bk: _assign_l2(sub, {m: bk}, ["vec_id"], carry=["sq"]),
+            "cid", "sq", w,
         )
-        book = sorted((int(r["vec_id"]), [float(x) for x in r["se"]]) for r in seeds)
         if not book:
             return {}
-        for _ in range(iters):
-            asg = _assign_l2(sub, {m: book}, ["vec_id"], carry=["sq"])
-            sums = (
-                asg.groupBy("cid")
-                .agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    *[F.sum(F.col("sq")[d]).alias(f"s{d}") for d in range(w)],
-                )
-                .collect()
-            )
-            upd = {
-                int(r["cid"]): [float(r[f"s{d}"]) / float(r["cnt"]) for d in range(w)]
-                for r in sums
-            }
-            book = [(cid, upd.get(cid, ce)) for cid, ce in book]
         books[m] = book
     return books
 
 
 def pq_assign(
-    embeddings: DataFrame,
-    n_dims: int,
-    centroid_every: int = IVF_CENTROID_EVERY,
-    n_sub: int = PQ_SUBSPACES,
-    codebooks: dict | None = None,
+    embeddings: DataFrame, n_dims: int, codebooks: dict | None = None
 ) -> DataFrame:
     """Product-quantization encoding: per (vector, subspace) the id of
     the nearest TRAINED codeword by L2 (ties → lowest centroid id).
     Round-5 verdict #2 shape: one generate (subspace explode) + one
     broadcast join against the codeword table + a per-(vector,
     subspace) argmin as min(struct(d2_q, cid)) with MAP-SIDE partial
-    aggregation — the only exchange carries N·n_sub id-rows, never the
-    N·n_sub·C scored rows the old row_number window shuffled. Zero
-    Window (plan-asserted in tests/test_similarity_scale.py).
+    aggregation — the only exchange carries N·PQ_SUBSPACES id-rows,
+    never the N·PQ_SUBSPACES·C scored rows the old row_number window
+    shuffled. Zero Window (plan-asserted in
+    tests/test_similarity_scale.py).
     Output: (vec_id, m, code_cid)."""
     if codebooks is None:
-        codebooks = train_pq_codebooks(embeddings, n_dims, centroid_every, n_sub)
+        codebooks = train_pq_codebooks(embeddings, n_dims)
     if not codebooks:
         return embeddings.select(
             "vec_id",
@@ -875,23 +852,14 @@ def pq_assign(
             F.lit(0).cast("long").alias("code_cid"),
         ).limit(0)
     base = _quantized(embeddings)
-    vexp = _subspace_rows(base.select("vec_id", "e"), "vec_id", n_dims, n_sub)
+    vexp = _subspace_rows(base.select("vec_id", "e"), "vec_id", n_dims)
     vexp = vexp.withColumn("m", F.col("m").cast("long"))
     return _assign_l2(vexp, codebooks, ["vec_id", "m"]).select(
         "vec_id", "m", F.col("cid").alias("code_cid")
     )
 
 
-def pq_adc_topk(
-    embeddings: DataFrame,
-    n_dims: int,
-    centroid_every: int = IVF_CENTROID_EVERY,
-    n_sub: int = PQ_SUBSPACES,
-    query_every: int = ANN_QUERY_EVERY,
-    k: int = ANN_TOP_K,
-    rerank_c: int = PQ_RERANK_C,
-    train_iters: int = IVF_TRAIN_ITERS,
-) -> DataFrame:
+def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
     """PQ search via ADC: queries build per-subspace lookup tables of
     (query-sub · centroid-sub) inner products plus the centroids'
     squared norms (Q × M × K rows — tiny, broadcast); every vector's
@@ -905,43 +873,30 @@ def pq_adc_topk(
     code) — never raw vectors.
 
     Ranking is two-stage (the standard production ADC shape): the code
-    scan keeps the top ``rerank_c`` candidates per query by ADC score,
+    scan keeps the top PQ_RERANK_C candidates per query by ADC score,
     then ONLY those C·Q ids come back for their raw vectors and are
     re-ranked by exact cosine — ADC score ties among cohort-mates
     (vectors sharing codes) can no longer scramble the final top-k.
     Both scores are rounded to micro-units (BIGINT) so FP summation
     order can't flip equal-score neighbors; ties break by neighbor id.
     Codebooks are TRAINED (per-subspace integer-space Lloyd's); codes
-    come from the map-only pq_assign. ADC scoring runs in the micro
-    scale (cosine is scale-invariant); the exact re-rank scores RAW
-    vectors. Output: (query_id, rank, neighbor_id)."""
-    codebooks = train_pq_codebooks(
-        embeddings, n_dims, centroid_every, n_sub, iters=train_iters
-    )
+    come from pq_assign. Both stages run in the micro scale (cosine is
+    scale-invariant): the exact re-rank scores the candidates' and
+    queries' _quantized micro-unit image e, not the raw float vectors.
+    Queries are the vec_id % ANN_QUERY_EVERY cohort; ANN_TOP_K
+    neighbors each. Output: (query_id, rank, neighbor_id)."""
+    codebooks = train_pq_codebooks(embeddings, n_dims)
     if not codebooks:
-        return embeddings.select(
-            F.col("vec_id").alias("query_id"),
-            F.lit(0).cast("long").alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
-        ).limit(0)
-    spark = embeddings.sparkSession
-    cexp = spark.createDataFrame(
-        [
-            (int(m), int(cid), [float(x) for x in ce])
-            for m, book in sorted(codebooks.items())
-            for cid, ce in book
-        ],
-        "m long, cid long, ce array<double>",
-    )
-    codes = pq_assign(embeddings, n_dims, centroid_every, n_sub,
-                      codebooks=codebooks)
+        return _empty_topk(embeddings)
+    cexp = _codebook_frame(embeddings.sparkSession, codebooks)
+    codes = pq_assign(embeddings, n_dims, codebooks=codebooks)
     base = _quantized(embeddings)
     v = base.select("vec_id", "e")
     qexp = _subspace_rows(
-        v.filter(F.col("vec_id") % query_every == 0), "query_id", n_dims, n_sub
+        v.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0), "query_id", n_dims
     ).withColumnRenamed("se", "qe")
     qnorm = (
-        base.filter(F.col("vec_id") % query_every == 0)
+        base.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0)
         .select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qn"))
     )
     lut = qexp.join(cexp, "m").select(
@@ -962,11 +917,8 @@ def pq_adc_topk(
             .cast("long").alias("score_u"),
         )
     )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("score_u"), F.asc("vec_id"))
-    cand = (
-        scored.withColumn("rnc", F.row_number().over(wc))
-        .filter(F.col("rnc") <= rerank_c)
-        .select("query_id", "vec_id")
+    cand = _topk(scored, "score_u", "vec_id", PQ_RERANK_C).select(
+        "query_id", "vec_id"
     )
     # Exact re-rank: the candidate list is hard-capped at C rows per
     # query by the row_number cut above, so broadcasting it turns the
@@ -975,7 +927,7 @@ def pq_adc_topk(
     # driver batches queries, keeping C·Q bounded — same contract as
     # the broadcast LUT.)
     qfull = (
-        v.filter(F.col("vec_id") % query_every == 0)
+        v.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0)
         .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
     )
     exact = (
@@ -991,23 +943,18 @@ def pq_adc_topk(
             ).cast("long").alias("exact_u"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("exact_u"), F.asc("vec_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"),
-                F.col("vec_id").alias("neighbor_id"))
+    return _topk(exact, "exact_u", "vec_id", ANN_TOP_K).withColumnRenamed(
+        "vec_id", "neighbor_id"
     )
 
 
 def ivf_assign(
     embeddings: DataFrame,
-    centroid_every: int = IVF_CENTROID_EVERY,
     centroids: list | None = None,
     n_dims: int | None = None,
 ) -> DataFrame:
     """IVF coarse quantization against TRAINED centroids (Lloyd's,
-    seeded from the vec_id % centroid_every cohort; cluster ids stay
+    seeded from the vec_id % IVF_CENTROID_EVERY cohort; cluster ids stay
     the seed vec_ids): every vector goes to its nearest centroid by
     cosine (ties → lowest centroid id). Round-5 verdict #2 shape: the
     broadcast-join scores stay in their input partitions and the
@@ -1019,7 +966,7 @@ def ivf_assign(
     train_ivf_centroids) to share one trained table across assignment
     + search. Output: (vec_id, centroid_id)."""
     if centroids is None:
-        centroids = train_ivf_centroids(embeddings, centroid_every, n_dims=n_dims)
+        centroids = train_ivf_centroids(embeddings, n_dims=n_dims)
     if not centroids:
         return embeddings.select(
             "vec_id", F.lit(0).cast("long").alias("centroid_id")
@@ -1027,36 +974,24 @@ def ivf_assign(
     return _assign_cosine(_quantized(embeddings), centroids)
 
 
-def ivf_probed_topk(
-    embeddings: DataFrame,
-    centroid_every: int = IVF_CENTROID_EVERY,
-    n_probe: int = IVF_PROBES,
-    query_every: int = ANN_QUERY_EVERY,
-    k: int = ANN_TOP_K,
-    n_dims: int | None = None,
-    train_iters: int = IVF_TRAIN_ITERS,
-) -> DataFrame:
-    """IVF search: queries probe their ``n_probe`` nearest TRAINED
-    centroids and brute-force only the vectors assigned to those cells.
-    Assignment is the map-only literal-fold (see ivf_assign); query
-    probing sorts the per-row scored centroid array (array_sort with a
-    score-desc/cid-asc comparator) and slices the top n_probe — also
-    map-only on the tiny query side. Candidate scoring joins on the
-    cell id, so no stage ever shuffles the full vector set against the
-    queries. Output: (query_id, rank, neighbor_id)."""
-    centroids = train_ivf_centroids(
-        embeddings, centroid_every, iters=train_iters, n_dims=n_dims
-    )
+def ivf_probed_topk(embeddings: DataFrame, n_dims: int | None = None) -> DataFrame:
+    """IVF search: queries (the vec_id % ANN_QUERY_EVERY cohort) probe
+    their IVF_PROBES nearest TRAINED centroids and brute-force only the
+    vectors assigned to those cells; ANN_TOP_K neighbors each.
+    Assignment is ivf_assign's broadcast join + map-side partial_min
+    argmin (only id-rows exchange); query probing sorts the per-row
+    scored centroid array (array_sort with a score-desc/cid-asc
+    comparator) and slices the top IVF_PROBES — map-only on the tiny
+    query side. Candidate scoring joins on the cell id, so no stage
+    ever shuffles the full vector set against the queries.
+    Output: (query_id, rank, neighbor_id)."""
+    centroids = train_ivf_centroids(embeddings, n_dims=n_dims)
     if not centroids:
-        return embeddings.select(
-            F.col("vec_id").alias("query_id"),
-            F.lit(0).cast("long").alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
-        ).limit(0)
-    assign = ivf_assign(embeddings, centroid_every, centroids=centroids)
+        return _empty_topk(embeddings)
+    assign = ivf_assign(embeddings, centroids=centroids)
     base = _quantized(embeddings)
 
-    queries = base.filter(F.col("vec_id") % query_every == 0).select(
+    queries = base.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qv"),
         F.col("nrm").alias("qn"),
@@ -1064,10 +999,7 @@ def ivf_probed_topk(
     cscored = F.transform(
         _cent_array(centroids),
         lambda c: F.struct(
-            F.floor(
-                _dot(F.col("qv"), c["ce"]) / (F.col("qn") * c["cn"])
-                * F.lit(SCORE_SCALE) + F.lit(0.5)
-            ).cast("long").alias("score_q"),
+            _cosine_score_q(F.col("qv"), F.col("qn"), c["ce"], c["cn"]).alias("score_q"),
             c["cid"].alias("cid"),
         ),
     )
@@ -1084,7 +1016,7 @@ def ivf_probed_topk(
         "qv",
         "qn",
         F.explode(
-            F.transform(F.slice(by_score, 1, n_probe), lambda s: s["cid"])
+            F.transform(F.slice(by_score, 1, IVF_PROBES), lambda s: s["cid"])
         ).alias("centroid_id"),
     )
 
@@ -1092,19 +1024,8 @@ def ivf_probed_topk(
         F.col("vec_id") != F.col("query_id")
     ).hint("merge")  # planner-opaque cardinality; see embedding_near_dups
     scored = cand.join(base, "vec_id").withColumn(
-        "score_q",
-        F.floor(
-            _dot(F.col("qv"), F.col("e")) / (F.col("qn") * F.col("nrm"))
-            * F.lit(SCORE_SCALE) + F.lit(0.5)
-        ).cast("long"),
+        "score_q", _cosine_score_q(F.col("qv"), F.col("qn"), F.col("e"), F.col("nrm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
-        )
+    return _topk(scored, "score_q", "vec_id", ANN_TOP_K).withColumnRenamed(
+        "vec_id", "neighbor_id"
     )

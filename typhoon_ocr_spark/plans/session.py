@@ -167,8 +167,6 @@ class PipelineConfig:
     Broadcast to executors as plain literals in the plan."""
 
     anchor_budget: int = 4000      # ocr_utils.py:391 library default
-    task_type: str = "default"
-    figure_language: str = "Thai"
     salt_buckets: int = 0          # extra salt for the pre-parse spread; 0=off
     # The engine no longer reads this: every document linearizes where
     # it is parsed. Kept only because the benchmark's shape counts
