@@ -74,6 +74,75 @@ def test_simhash_bucket_cap_drops_degenerate_buckets(spark):
     assert not any(a.startswith("f") for a, _ in ids)
 
 
+def test_simhash_null_fingerprints_never_pair(spark):
+    """Null fingerprints are dropped before bucketing: two null rows
+    are not a hamming-0 pair, and they never pair with a real one."""
+    rows = [
+        ("a", None),
+        ("b", None),
+        ("c", _fp("0000000000000000")),
+        ("d", _fp("0000000000000001")),
+    ]
+    sh = spark.createDataFrame(rows, "doc_id string, simhash string")
+    got = [tuple(r) for r in simhash_pairs_from_fingerprints(sh).collect()]
+    assert got == [("c", "d", 1)]
+
+
+def test_simhash_segment_and_bit_boundaries(spark):
+    """Shift/mask edge cases: the leading bit (values >= 32768), the
+    all-ones fingerprint, and hamming-2 pairs whose differing bits sit
+    on segment edges so exactly one segment is shared — a segment cut
+    off by one bit would miss them. The bucket cap sits below the row
+    count, so a cut that degenerates to a constant (one bucket holding
+    every row) is dropped rather than pairing everything. Hamming must
+    equal a Python popcount of the xor, as a bigint."""
+    import itertools
+
+    from pyspark.sql.types import LongType
+
+    from typhoon_ocr_spark.functions.textsql import simhash_segment_bounds
+
+    def bit(pos):  # 1-based position from the left of the string
+        return 1 << (SIMHASH_BITS - pos)
+
+    ones = (1 << SIMHASH_BITS) - 1
+    vals = {
+        "zero": 0,
+        "lead": bit(1),
+        "lead2": bit(1) | bit(2),
+        "ones": ones,
+        "ones_no_lead": ones ^ bit(1),
+        "ones_no_last": ones ^ bit(SIMHASH_BITS),
+    }
+    edges = [start for start, _ in simhash_segment_bounds()[1:]]
+    assert edges == [7, 12]
+    straddles = [(6, 7), (11, 12), (6, 12), (7, 12), (6, 11), (1, 16)]
+    for i, (p, q) in enumerate(straddles):
+        base = 0xB000 | (0x111 * (i + 1))  # leading bit set, distinct per pair
+        vals[f"s{i}a"] = base
+        vals[f"s{i}b"] = base ^ bit(p) ^ bit(q)
+    fps = [(k, format(v, f"0{SIMHASH_BITS}b")) for k, v in sorted(vals.items())]
+
+    def popcount(x, y):
+        return bin(vals[x] ^ vals[y]).count("1")
+
+    expected = {
+        (a, b, popcount(a, b))
+        for a, b in itertools.combinations(sorted(vals), 2)
+        if popcount(a, b) <= 2
+    }
+    for i in range(len(straddles)):
+        assert (f"s{i}a", f"s{i}b", 2) in expected
+    assert ("lead", "zero", 1) in expected and ("ones", "ones_no_lead", 1) in expected
+
+    out = simhash_pairs_from_fingerprints(
+        spark.createDataFrame(fps, "doc_id string, simhash string"),
+        max_bucket=len(fps) - 1,
+    )
+    assert out.schema["hamming"].dataType == LongType()
+    assert {tuple(r) for r in out.collect()} == expected
+
+
 def test_minhash_bucket_cap(spark):
     """A duplicate-text flood above the cap produces no candidate pairs
     (the cluster is findable by exact dedup; LSH skips the N^2 blowup),

@@ -14,8 +14,11 @@ Scale notes:
   shingles; candidate pairs are a self-equi-join on (band, band_hash)
   — the classic banding trick keeps the join fan-out tiny vs a full
   cross join;
-- all hashes are md5 hex strings and minima are lexicographic, chosen
-  for engine-portability (no 64-bit int conversions).
+- MinHash hashes are md5 hex strings and minima are lexicographic,
+  chosen for engine-portability (no 64-bit int conversions);
+- SimHash fingerprints leave simhash_fingerprints as '0'/'1' strings
+  (the oracle's column) and become a bigint inside the pair search,
+  where segments are shift/mask slices and Hamming is bit_count(xor).
 """
 
 from __future__ import annotations
@@ -30,7 +33,6 @@ from ..functions.textsql import (
     MINHASH_SLICE_HEX,
     SHINGLE_WORDS,
     SIMHASH_BITS,
-    SIMHASH_HEX_HIGH,
     SIMHASH_MAX_BUCKET,
     SIMHASH_MAX_HAMMING,
     WORD_SPLIT_PATTERN,
@@ -365,28 +367,33 @@ def simhash_pairs_from_fingerprints(
     lands in exactly SIMHASH_SEGMENTS buckets; buckets larger than
     ``max_bucket`` are dropped via window count before any collect_list
     buffers them (see _bucket_pairs); cross-segment duplicates collapse
-    in the final distinct. Output: (doc_a, doc_b, hamming)."""
+    in the final distinct. Output: (doc_a, doc_b, hamming BIGINT).
+
+    Integer shape: the '0'/'1' string (the ``simhash`` query's column)
+    becomes a bigint once at entry; segments are shift/mask slices of
+    it, the bigint is the bucket payload, and Hamming distance is one
+    ``bit_count(a ^ b)``. Null fingerprints are dropped at entry, so
+    they never pair."""
+    fp = sh.filter(F.col("simhash").isNotNull()).select(
+        "doc_id", F.conv("simhash", 2, 10).cast("long").alias("simhash")
+    )
     segs = [
         F.struct(
             F.lit(i).alias("seg"),
-            F.substring("simhash", start, length).alias("seg_val"),
+            F.shiftrightunsigned("simhash", SIMHASH_BITS - start + 1 - length)
+            .bitwiseAND((1 << length) - 1)
+            .alias("seg_val"),
         )
         for i, (start, length) in enumerate(simhash_segment_bounds())
     ]
-    exploded = sh.select(
+    exploded = fp.select(
         "doc_id", "simhash", F.explode(F.array(*segs)).alias("s")
     ).select("doc_id", "simhash", "s.seg", "s.seg_val")
 
     pairs = _bucket_pairs(
         exploded, ["seg", "seg_val"], "doc_id", max_bucket, payload_cols=["simhash"]
     )
-    hamming = sum(
-        F.when(
-            F.substring(F.col("a.simhash"), j, 1) != F.substring(F.col("b.simhash"), j, 1),
-            1,
-        ).otherwise(0)
-        for j in range(1, SIMHASH_BITS + 1)
-    )
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
         pairs.withColumn("hamming", hamming.cast("long"))
         .filter(F.col("hamming") <= max_hamming)
