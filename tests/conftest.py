@@ -16,6 +16,10 @@ def spark():
         app_name="typhoon-ocr-spark-tests",
         master="local[4]",
         shuffle_partitions=8,
+        # JDK 17's default sharing, set by the caller: the suite writes no
+        # class-data archive into the user's cache (test_session_cds.py
+        # runs the archive in a cache of its own)
+        extra_conf={"spark.driver.extraJavaOptions": "-Xshare:auto"},
     )
     session.sparkContext.setLogLevel("ERROR")
     yield session
