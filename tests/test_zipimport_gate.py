@@ -1,4 +1,4 @@
-"""The worker-side zip-import gate (functions/zipimport_gate.py).
+"""The worker-side zip-import gate (typhoon_ocr_spark/zipimport_gate.py).
 
 Each check runs in a fresh interpreter so the import machinery of the
 test process is never patched.
@@ -35,7 +35,7 @@ def test_unchanged_archive_is_not_reread(tmp_path):
     out = _run(
         f"""
         import importlib, sys, zipfile, zipimport
-        from typhoon_ocr_spark.functions import zipimport_gate
+        from typhoon_ocr_spark import zipimport_gate
 
         path = {str(tmp_path / "zpkg.zip")!r}
         with zipfile.ZipFile(path, "w") as z:
@@ -78,3 +78,51 @@ def test_driver_import_leaves_import_machinery_alone(tmp_path):
         tmp_path,
     )
     assert out == "True"
+
+
+def test_engine_oracle_import_loads_no_spark(tmp_path):
+    """The package ``__init__`` installs the gate, yet importing the
+    oracle outside Spark loads neither pyspark nor pandas."""
+    out = _run(
+        """
+        import sys
+        import typhoon_ocr_spark.oracle.pdfmini, typhoon_ocr_spark.oracle.mdflatten
+        print(sorted(m for m in ("pandas", "pyarrow", "pyspark") if m in sys.modules))
+        """,
+        tmp_path,
+    )
+    assert out == "[]"
+
+
+def test_worker_running_only_an_oracle_udf_is_gated(spark):
+    """A Python worker whose only engine UDF is ``markdown_flatten_udf``
+    has the gate. Its body is pickled by value and the oracle function
+    it calls by reference, so the worker imports ``oracle.mdflatten``
+    and never the ``functions`` package."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from typhoon_ocr_spark.functions import markdown_flatten_udf
+    from typhoon_ocr_spark.oracle import markdown_to_plain_text
+
+    def gated(md: pd.Series) -> pd.Series:
+        import sys
+
+        names = [getattr(hook, "__name__", "") for hook in sys.path_hooks]
+        return pd.Series(["StampedZipImporter" in names] * len(md))
+
+    texts = ["# title", "*x* and `y`"]
+    sc = spark.sparkContext
+    # An environment key of its own gives the query's first UDF, and so
+    # the query, a fresh Python worker pool: no worker of an earlier
+    # test (which may have imported the functions package) answers.
+    sc.environment["TYPHOON_GATE_PROBE"] = "1"
+    try:
+        probe = pandas_udf(gated, "boolean")
+        df = spark.createDataFrame([(t,) for t in texts], ["md"]).coalesce(1)
+        rows = df.select(probe("md").alias("gated"),
+                         markdown_flatten_udf("md").alias("flat")).collect()
+    finally:
+        del sc.environment["TYPHOON_GATE_PROBE"]
+    assert [r.flat for r in rows] == [markdown_to_plain_text(t) for t in texts]
+    assert [r.gated for r in rows] == [True, True]

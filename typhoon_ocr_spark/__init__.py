@@ -14,6 +14,7 @@ Layout
                   (partitioned parquet + manifest) readers/writers.
 - ``plans/``      SparkSession builders, job configs, pipeline assembly.
 - ``streaming/``  checkpoint-resumable batch runner + metrics.
+- ``zipimport_gate``  worker-side gate on per-task zip re-reads.
 
 Everything here derives from public knowledge only: the PySpark API and
 the reference repo's observable behavior (cited by file:line in
@@ -21,3 +22,9 @@ docstrings).
 """
 
 __version__ = "0.1.0"
+
+# Inside a Python worker, stop per-task re-reads of unchanged zip
+# archives; every pickled engine reference imports this package first.
+from .zipimport_gate import install_in_worker  # noqa: E402
+
+install_in_worker()

@@ -4,16 +4,13 @@ Every Python hot-path runs inside a pandas UDF body over whole
 pd.Series (Arrow record-batch transport) — never row-at-a-time Python
 UDFs. Anything expressible with pyspark.sql.functions stays JVM-side.
 
-Every engine module a Python worker unpickles passes through this
-package, so importing it gates the worker's per-task zip re-reads
-(see zipimport_gate).
+A worker running one of these UDFs may never import this package (the
+UDF body travels by value, the oracle functions it calls by reference),
+so the worker's zip-import gate is installed by the engine package's
+``__init__`` (see ``typhoon_ocr_spark.zipimport_gate``), not here.
 """
 
-from .zipimport_gate import install_in_worker
-
-install_in_worker()
-
-from .udfs import (  # noqa: E402
+from .udfs import (
     sniff_kind_col,
     stage_pages_udf,
     parse_response_udf,

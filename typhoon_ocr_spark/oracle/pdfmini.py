@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Dict, List, Optional, Tuple, Union
+from typing import Dict, List, Optional, Tuple
 
 from .elements import (
     BoundingBox,
@@ -47,40 +47,109 @@ IDENTITY = [1.0, 0.0, 0.0, 1.0, 0.0, 0.0]
 # --------------------------------------------------------------------------
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
-_REF_TAIL_RE = re.compile(rb"(\d+)\s+R(?![A-Za-z0-9])")
 _WS_RUN_RE = re.compile(rb"[\x00\t\n\x0c\r ]+")
-_NUMBER_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
 _HEX_FILTER_RE = re.compile(rb"[^0-9a-fA-F]")
-_SIMPLE_LITERAL_RE = re.compile(rb"[^()\\]*\)")
 
-# master scanner: one compiled alternation per token class; the lexer
-# dispatches on lastgroup instead of probing byte classes one call at
-# a time (the tokenizer dominated parse CPU in profiles). Leading
-# whitespace folds into the same match so the common token costs ONE
-# regex call, not a ws-match plus a token-match.
-_SCAN_RE = re.compile(
-    rb"[\x00\t\n\x0c\r ]*"
-    rb"(?:(?P<num>[+-]?(?:\d+\.?\d*|\.\d+))"
-    rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<comment>%[^\r\n]*))?"
+# Master scanner: one compiled alternation per token class, leading
+# whitespace folded into the same match, so the common token costs ONE
+# regex call and callers dispatch on ``lastgroup``. Besides numbers,
+# names, operators and comments it takes the two common string shapes
+# whole: a literal with no escape and no nesting (``str``) and a hex
+# string of bare digits (``hex``). Anything else that starts at a
+# delimiter leaves ``lastgroup`` None and goes to the lexer's slow path.
+_NUM = rb"[+-]?(?:\d+\.?\d*|\.\d+)"
+_SPACE = rb"[\x00\t\n\x0c\r ]"
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+_VALUE = (  # every token class but the comment
+    rb"(?P<num>" + _NUM + rb")"
+    rb"|(?P<name>/" + _REGULAR + rb"*)"
+    rb"|(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9]" + _REGULAR + rb"*)"
+    rb"|\((?P<str>[^()\\]*)\)"
+    rb"|<(?P<hex>[0-9A-Fa-f]*)>"
+)
+_TOKEN = _VALUE + rb"|(?P<comment>%[^\r\n]*)"
+_SCAN_RE = re.compile(_SPACE + rb"*(?:" + _TOKEN + rb")?")
+# Object syntax also has indirect references: ``ref`` is a dot-free
+# integer, then whitespace and comments, then ``\d+\s+R`` not followed by
+# an alphanumeric. The possessive run takes every comment to its end of
+# line, so no digits inside a comment can pass for the generation number.
+# Content streams can't contain refs.
+_REF = rb"(?P<ref>[+-]?\d+)(?:[\x00\t\n\x0c\r ]|%[^\r\n]*+)++\d+\s+R(?![A-Za-z0-9])"
+_OBJ_SCAN_RE = re.compile(_SPACE + rb"*(?:" + _REF + rb"|" + _TOKEN + rb")?")
+# A dictionary entry in one match: the end of the dictionary (``end``),
+# a comment (``skip``), or a name key (``key``) followed, when the
+# scanner takes it whole, by its value under the value's own token
+# group. A comment or delimiter where the value starts leaves
+# ``lastgroup`` "key"; anything else where a key belongs leaves it None.
+_ENTRY = _SPACE + rb"*(?:(?P<end>>>)|(?P<skip>%[^\r\n]*)|(?P<key>/" + _REGULAR + rb"*)" + _SPACE + rb"*(?:"
+_ENTRY_RE = re.compile(_ENTRY + _VALUE + rb")?)?")
+_OBJ_ENTRY_RE = re.compile(_ENTRY + _REF + rb"|" + _VALUE + rb")?)?")
+
+# The content interpreter's scanner also takes the three operations that
+# make up nearly every text run whole, operands and operator in one
+# match: "/F1 12 Tf" (``tf``), "x y Td" (``td_x``, ``td``) and
+# "(s) Tj" / "<hex> Tj" (``tj``, ``tjh``). Each matches only where the
+# token scanner would split the same bytes into exactly those tokens:
+# numbers and names are maximal (whitespace follows them) and the
+# operator ends at whitespace, a delimiter or the end of the stream.
+_OP_END = rb"(?!" + _REGULAR + rb")"
+# at most 30 digits, far below int()'s digit limit; a longer number
+# fails the fused match and is scanned as a plain token
+_SHORT_NUM = rb"[+-]?(?:\d{1,15}\.?\d{0,15}|\.\d{1,15})"
+_CONTENT_SCAN_RE = re.compile(
+    _SPACE + rb"*(?:"
+    rb"(?P<tf>/" + _REGULAR + rb"*" + _SPACE + rb"+" + _NUM + _SPACE + rb"*Tf)" + _OP_END
+    + rb"|(?P<td_x>" + _SHORT_NUM + rb")" + _SPACE + rb"+(?P<td>" + _SHORT_NUM + rb")"
+    + _SPACE + rb"*Td" + _OP_END
+    + rb"|\((?P<tj>[^()\\]*)\)" + _SPACE + rb"*Tj" + _OP_END
+    + rb"|<(?P<tjh>[0-9A-Fa-f]*)>" + _SPACE + rb"*Tj" + _OP_END
+    + rb"|" + _TOKEN + rb")?"
 )
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
+_ESCAPES = {0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12, 0x28: 40, 0x29: 41, 0x5C: 92}
+
+
+def _number(raw: bytes):
+    if b"." in raw:
+        return float(raw)
+    try:
+        return int(raw)
+    except ValueError:  # beyond the int digit limit
+        return float(raw)
+
+
+def _hex_bytes(digits: bytes) -> bytes:
+    if len(digits) % 2:
+        digits += b"0"
+    return bytes.fromhex(digits.decode("ascii"))
+
+
+def _scanned(m: "re.Match", kind: str):
+    """Value of a token the scanner matched whole (not a comment)."""
+    if kind == "num":
+        return _number(m.group(kind))
+    if kind == "ref":
+        return ("ref", int(m.group(kind)))
+    if kind == "str":
+        return m.group(kind)
+    if kind == "hex":
+        return _hex_bytes(m.group(kind))
+    return m.group(kind).decode("latin-1")  # name or op
 
 
 class _Lexer:
     """Tokenizer for PDF object syntax + content streams.
 
-    ``refs=False`` disables the indirect-reference ("N 0 R") lookahead
-    after integers — content streams can't contain refs, and the
-    lookahead's save/skip-ws/match per number is measurably hot
-    (content interpretation is ~half of parse CPU)."""
+    ``refs=False`` scans without the indirect-reference ("N 0 R")
+    alternative: content streams can't contain refs. The content
+    interpreter runs its own scan loop and comes here only for tokens
+    that start at a delimiter the scanner doesn't take whole."""
 
     def __init__(self, data: bytes, pos: int = 0, refs: bool = True) -> None:
         self.data = data
         self.pos = pos
-        self.refs = refs
+        self.scan = (_OBJ_SCAN_RE if refs else _SCAN_RE).match
+        self.entry = (_OBJ_ENTRY_RE if refs else _ENTRY_RE).match
 
     def _skip_ws(self) -> None:
         d, n = self.data, len(self.data)
@@ -98,26 +167,22 @@ class _Lexer:
     def next_token(self):
         """Return next token: float/int, bytes (string), str (name or
         operator), list, dict, ("ref", n), or None at end."""
-        d, n = self.data, len(self.data)
+        d, n, scan = self.data, len(self.data), self.scan
         while True:
             if self.pos >= n:
                 return None
-            m = _SCAN_RE.match(d, self.pos)
-            if m and m.lastgroup:
-                kind = m.lastgroup
-                self.pos = m.end()
-                if kind == "num":
-                    return self._finish_number(m.group(kind))
+            m = scan(d, self.pos)
+            kind = m.lastgroup
+            self.pos = m.end()
+            if kind is not None:
                 if kind == "comment":
                     continue
-                return m.group(kind).decode("latin-1")  # name or op
-            if m and m.end() > self.pos:
-                self.pos = m.end()  # pure whitespace before a delimiter
-                if self.pos >= n:
-                    return None
+                return _scanned(m, kind)
+            if self.pos >= n:
+                return None
 
             c = d[self.pos]
-            if c == 0x28:  # ( literal string
+            if c == 0x28:  # ( literal string with escapes or nesting
                 return self._literal_string()
             if c == 0x3C:  # < or <<
                 if self.pos + 1 < n and d[self.pos + 1] == 0x3C:
@@ -127,47 +192,32 @@ class _Lexer:
             if c == 0x5B:  # [
                 self.pos += 1
                 items = []
-                while True:
-                    self._skip_ws()
-                    if self.pos < n and d[self.pos] == 0x5D:
-                        self.pos += 1
-                        return items
-                    tok = self.next_token()
-                    if tok is None:
-                        return items
-                    items.append(tok)
+                while self.pos < n:
+                    m = scan(d, self.pos)
+                    kind = m.lastgroup
+                    if kind is None:
+                        self.pos = m.end()
+                        if self.pos < n and d[self.pos] == 0x5D:
+                            self.pos += 1
+                            return items
+                        tok = self.next_token()
+                        if tok is None:
+                            return items
+                        items.append(tok)
+                    else:
+                        self.pos = m.end()
+                        if kind != "comment":
+                            items.append(_scanned(m, kind))
+                return items
             if c == 0x5D:
                 self.pos += 1
                 return "]"
             # lone delimiter we don't handle; skip it
             self.pos += 1
 
-    def _finish_number(self, raw: bytes):
-        # look ahead for "N 0 R" indirect reference
-        if self.refs and b"." not in raw:
-            save = self.pos
-            self._skip_ws()
-            m = _REF_TAIL_RE.match(self.data, self.pos)
-            if m:
-                self.pos = m.end()
-                return ("ref", int(raw))
-            self.pos = save
-        try:
-            return int(raw)
-        except ValueError:
-            try:
-                return float(raw)
-            except ValueError:
-                return 0
-
     def _literal_string(self) -> bytes:
         d, n = self.data, len(self.data)
         self.pos += 1
-        # fast path: no escapes, no nesting before the closing paren
-        m = _SIMPLE_LITERAL_RE.match(d, self.pos)
-        if m:
-            self.pos = m.end()
-            return m.group(0)[:-1]
         out = bytearray()
         depth = 1
         while self.pos < n:
@@ -177,10 +227,8 @@ class _Lexer:
                 if self.pos >= n:
                     break
                 e = d[self.pos]
-                simple = {0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12,
-                          0x28: 40, 0x29: 41, 0x5C: 92}
-                if e in simple:
-                    out.append(simple[e])
+                if e in _ESCAPES:
+                    out.append(_ESCAPES[e])
                     self.pos += 1
                 elif e in b"01234567":
                     oct_digits = bytearray()
@@ -218,25 +266,36 @@ class _Lexer:
             end = len(d)
         digits = _HEX_FILTER_RE.sub(b"", d[self.pos : end])
         self.pos = end + 1
-        if len(digits) % 2:
-            digits += b"0"
-        return bytes.fromhex(digits.decode("ascii"))
+        return _hex_bytes(digits)
 
     def _dict_body(self) -> dict:
-        d, n = self.data, len(self.data)
+        d, entry = self.data, self.entry
         out: dict = {}
         while True:
-            self._skip_ws()
-            if self.pos + 1 < n and d[self.pos] == 0x3E and d[self.pos + 1] == 0x3E:
-                self.pos += 2
+            m = entry(d, self.pos)
+            kind = m.lastgroup
+            if kind is None:  # a delimiter or a token that isn't a key
+                key = self.next_token()
+                if key is None:
+                    return out
+                if isinstance(key, str) and key.startswith("/"):
+                    out[key] = self.next_token()
+                continue  # any other key token is dropped, its value read as a key
+            self.pos = m.end()
+            if kind == "end":
                 return out
-            key = self.next_token()
-            if key is None:
-                return out
-            if not (isinstance(key, str) and key.startswith("/")):
+            if kind == "skip":
                 continue
-            value = self.next_token()
-            out[key] = value
+            key, value = m.group("key", kind)
+            key = key.decode("latin-1")
+            if kind == "name":
+                out[key] = value.decode("latin-1")
+            elif kind == "ref":
+                out[key] = ("ref", int(value))
+            elif kind == "key":
+                out[key] = self.next_token()
+            else:
+                out[key] = _scanned(m, kind)
 
 
 def _decode_pdf_text(raw: bytes) -> str:
@@ -361,13 +420,18 @@ def _decode_stream(raw: bytes, info: dict, deref) -> bytes:
 # --------------------------------------------------------------------------
 
 _STARTXREF_RE = re.compile(rb"startxref\s+(\d+)")
-_XREF_ENTRY_RE = re.compile(rb"(\d{10})\s(\d{5})\s([nf])")
+# one xref row, after the whitespace and comments _Lexer._skip_ws skips
+_XREF_ROW_RE = re.compile(
+    rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*+)*+(\d{10})\s(\d{5})\s([nf])"
+)
+_XREF_SUBSECTION_RE = re.compile(rb"(\d+)\s+(\d+)")
+_STREAM_KEYWORD_RE = re.compile(rb"stream(\r\n|\n|\r)")
 
 
 def _stream_extent(data: bytes, lex_pos: int, info: dict, deref) -> Tuple[int, int]:
     """(start, end) of the raw stream bytes for a stream object whose
     dict has just been lexed (lexer position = lex_pos)."""
-    m = re.compile(rb"stream(\r\n|\n|\r)").search(data, lex_pos)
+    m = _STREAM_KEYWORD_RE.search(data, lex_pos)
     if not m:
         raise MiniPdfError("stream keyword missing")
     start = m.end()
@@ -443,14 +507,13 @@ def _parse_classic_xref_at(data: bytes, pos: int, offsets, objstms, trailer) -> 
         if data[lex.pos : lex.pos + 7] == b"trailer":
             lex.pos += 7
             break
-        m = re.compile(rb"(\d+)\s+(\d+)").match(data, lex.pos)
+        m = _XREF_SUBSECTION_RE.match(data, lex.pos)
         if not m:
             raise MiniPdfError("xref subsection header malformed")
         first, count = int(m.group(1)), int(m.group(2))
         lex.pos = m.end()
         for num in range(first, first + count):
-            lex._skip_ws()
-            em = _XREF_ENTRY_RE.match(data, lex.pos)
+            em = _XREF_ROW_RE.match(data, lex.pos)
             if not em:
                 raise MiniPdfError("xref entry malformed")
             lex.pos = em.end()
@@ -523,6 +586,7 @@ class _Document:
             self._scanned = False
         self.offsets = offsets
         self._cache: Dict[int, object] = {}
+        self._parsed: Dict[int, Tuple[object, int]] = {}
         self._objstm_cache: Dict[int, Dict[int, object]] = {}
 
     def _resolve_offset(self, num: int) -> Optional[int]:
@@ -552,9 +616,18 @@ class _Document:
             off = self._resolve_offset(num)
             if off is None:
                 raise MiniPdfError(f"missing object {num}")
-            value = _Lexer(self.data, off).next_token()
+            value = self._parse_at(off)[0]
         self._cache[num] = value
         return value
+
+    def _parse_at(self, off: int) -> Tuple[object, int]:
+        """(value, end) of the object body at ``off``, lexed once: a
+        stream's dict serves both ``obj`` and ``stream_bytes``."""
+        parsed = self._parsed.get(off)
+        if parsed is None:
+            lex = _Lexer(self.data, off)
+            parsed = self._parsed[off] = (lex.next_token(), lex.pos)
+        return parsed
 
     def _objstm_members(self, container: int) -> Dict[int, object]:
         """Decompress an /ObjStm and parse every member object."""
@@ -590,11 +663,10 @@ class _Document:
         off = self._resolve_offset(num)
         if off is None:
             raise MiniPdfError(f"stream object {num} missing (streams can't live in ObjStm)")
-        lex = _Lexer(self.data, off)
-        info = lex.next_token()  # the stream dict
+        info, dict_end = self._parse_at(off)  # the stream dict
         if not isinstance(info, dict):
             return b""
-        start, end = _stream_extent(self.data, lex.pos, info, self.deref)
+        start, end = _stream_extent(self.data, dict_end, info, self.deref)
         return _decode_stream(self.data[start:end], info, self.deref)
 
     def catalog(self) -> dict:
@@ -655,94 +727,156 @@ def page_count(data: bytes) -> int:
 # Content-stream interpretation (the layout-parse oracle)
 # --------------------------------------------------------------------------
 
+# operators the interpreter acts on; any other operator drops its operands
+_CONTENT_OPS = frozenset(
+    (b"Tj", b"Td", b"BT", b"ET", b"TJ", b"cm", b"q", b"Q", b"Do", b"Tm",
+     b"T*", b"TL", b"TD", b"'", b'"')
+)
+
+
+def _flat_array(data: bytes, pos: int):
+    """``(items, end)`` for a content-stream array opening just before
+    ``pos`` whose items the scanner takes whole (a TJ array), else None
+    (nested arrays, dicts, escaped strings, stray delimiters, end of data)."""
+    scan, n = _SCAN_RE.match, len(data)
+    items: list = []
+    while True:
+        m = scan(data, pos)
+        kind = m.lastgroup
+        pos = m.end()
+        if kind is None:
+            if pos < n and data[pos] == 0x5D:
+                return items, pos + 1
+            return None
+        if kind != "comment":
+            items.append(_scanned(m, kind))
+
+
 def _interpret_content(
     content: bytes,
     image_xobjects: Dict[str, bool],
 ) -> Tuple[List[TextElement], List[ImageElement]]:
+    """One scan loop over the stream: operands are pushed straight from
+    the scanner's match, operators dispatch on their bytes. Only tokens
+    that start at a delimiter the scanner doesn't take whole (escaped or
+    nested strings, spaced hex, dicts, non-flat arrays, stray delimiters)
+    go through ``_Lexer``."""
     texts: List[TextElement] = []
     images: List[ImageElement] = []
-    lex = _Lexer(content, refs=False)
     stack: List[object] = []
+    push = stack.append
     ctm = list(IDENTITY)
     ctm_stack: List[List[float]] = []
     tm = list(IDENTITY)
     tlm = list(IDENTITY)
     leading = 0.0
+    scan = _CONTENT_SCAN_RE.match
+    lexer = None
+    pos, n = 0, len(content)
 
-    def nums(k: int) -> List[float]:
-        vals = stack[-k:]
-        del stack[-k:]
-        return [float(v) for v in vals]
-
-    def show(raw: Union[bytes, list]) -> None:
-        if isinstance(raw, list):
-            text = "".join(_decode_pdf_text(item) for item in raw if isinstance(item, bytes))
-        else:
-            text = _decode_pdf_text(raw)
-        placed = mat_mult(tm, ctm)
-        texts.append(TextElement(text, placed[4], placed[5]))
-
-    def newline() -> None:
-        nonlocal tm, tlm
-        tlm = mat_mult([1, 0, 0, 1, 0.0, -leading], tlm)
-        tm = list(tlm)
-
-    while True:
-        tok = lex.next_token()
-        if tok is None:
-            break
-        if isinstance(tok, (int, float, bytes, list, dict, tuple)) or (
-            isinstance(tok, str) and tok.startswith("/")
-        ):
-            stack.append(tok)
+    while pos < n:
+        m = scan(content, pos)
+        kind = m.lastgroup
+        pos = m.end()
+        if kind == "op":
+            op = m.group(kind)
+        elif kind == "td":
+            x, y = m.group("td_x", kind)  # _SHORT_NUM: int() can't fail
+            push(float(x) if b"." in x else int(x))
+            push(float(y) if b"." in y else int(y))
+            op = b"Td"
+        elif kind == "tj":
+            push(m.group(kind))
+            op = b"Tj"
+        elif kind == "tf":
+            stack.clear()  # Tf isn't interpreted: drop its operands
             continue
+        elif kind == "num":
+            push(_number(m.group(kind)))
+            continue
+        elif kind == "tjh":
+            push(_hex_bytes(m.group(kind)))
+            op = b"Tj"
+        elif kind == "str":
+            push(m.group(kind))
+            continue
+        elif kind == "name":
+            push(m.group(kind).decode("latin-1"))
+            continue
+        elif kind == "hex":
+            push(_hex_bytes(m.group(kind)))
+            continue
+        elif kind == "comment":
+            continue
+        else:
+            if pos >= n:
+                break
+            if content[pos] == 0x5B:
+                flat = _flat_array(content, pos + 1)
+                if flat is not None:
+                    push(flat[0])
+                    pos = flat[1]
+                    continue
+            if lexer is None:
+                lexer = _Lexer(content, refs=False)
+            lexer.pos = pos
+            tok = lexer.next_token()
+            pos = lexer.pos
+            if tok is None:
+                break
+            if not isinstance(tok, str) or tok.startswith("/"):
+                push(tok)
+                continue
+            op = tok.encode("latin-1")
 
-        op = tok
+        if op not in _CONTENT_OPS:
+            stack.clear()  # unknown operator: drop its operands
+            continue
         try:
-            if op == "q":
-                ctm_stack.append(list(ctm))
-            elif op == "Q":
-                if ctm_stack:
-                    ctm = ctm_stack.pop()
-            elif op == "cm":
-                ctm = mat_mult(nums(6), ctm)
-            elif op == "BT":
+            if op == b"Td":
+                ty = float(stack.pop())
+                tx = float(stack.pop())
+                tlm = mat_mult([1, 0, 0, 1, tx, ty], tlm)
+                tm = list(tlm)
+            elif op == b"BT":
                 tm = list(IDENTITY)
                 tlm = list(IDENTITY)
-            elif op == "ET":
+            elif op == b"ET":
                 pass
-            elif op == "Td":
-                ty = float(stack.pop())
-                tx = float(stack.pop())
-                tlm = mat_mult([1, 0, 0, 1, tx, ty], tlm)
-                tm = list(tlm)
-            elif op == "TD":
-                ty = float(stack.pop())
-                tx = float(stack.pop())
-                leading = -ty
-                tlm = mat_mult([1, 0, 0, 1, tx, ty], tlm)
-                tm = list(tlm)
-            elif op == "Tm":
-                tm = nums(6)
-                tlm = list(tm)
-            elif op == "T*":
-                newline()
-            elif op == "TL":
-                leading = float(stack.pop())
-            elif op == "Tj":
-                show(stack.pop())
-            elif op == "TJ":
-                show(stack.pop())
-            elif op == "'":
-                newline()
-                show(stack.pop())
-            elif op == '"':
-                raw = stack.pop()
-                stack.pop()  # ac
-                stack.pop()  # aw
-                newline()
-                show(raw)
-            elif op == "Do":
+            elif op == b"Tj" or op == b"TJ" or op == b"'" or op == b'"':
+                if op == b"'":
+                    tlm = mat_mult([1, 0, 0, 1, 0.0, -leading], tlm)
+                    tm = list(tlm)
+                    raw = stack.pop()
+                elif op == b'"':
+                    raw = stack.pop()
+                    stack.pop()  # ac
+                    stack.pop()  # aw
+                    tlm = mat_mult([1, 0, 0, 1, 0.0, -leading], tlm)
+                    tm = list(tlm)
+                else:
+                    raw = stack.pop()
+                if isinstance(raw, list):
+                    text = "".join(
+                        _decode_pdf_text(item) for item in raw if isinstance(item, bytes)
+                    )
+                else:
+                    text = _decode_pdf_text(raw)
+                # the translation of tm x ctm (mat_mult's last two terms);
+                # a Tm that found fewer than six operands fails the unpack
+                _, _, _, _, e, f = tm
+                p, q, r, s, t, u = ctm
+                texts.append(TextElement(text, e * p + f * r + t, e * q + f * s + u))
+            elif op == b"cm":
+                vals = stack[-6:]
+                del stack[-6:]
+                ctm = mat_mult([float(v) for v in vals], ctm)
+            elif op == b"q":
+                ctm_stack.append(list(ctm))
+            elif op == b"Q":
+                if ctm_stack:
+                    ctm = ctm_stack.pop()
+            elif op == b"Do":
                 name = stack.pop()
                 if isinstance(name, str) and image_xobjects.get(name):
                     # unit square through the CTM, bbox normalized —
@@ -755,8 +889,22 @@ def _interpret_content(
                             BoundingBox(min(x0, x1), min(y0, y1), max(x0, x1), max(y0, y1)),
                         )
                     )
-            else:
-                stack.clear()  # unknown operator: drop its operands
+            elif op == b"Tm":
+                vals = stack[-6:]
+                del stack[-6:]
+                tm = [float(v) for v in vals]
+                tlm = list(tm)
+            elif op == b"T*":
+                tlm = mat_mult([1, 0, 0, 1, 0.0, -leading], tlm)
+                tm = list(tlm)
+            elif op == b"TL":
+                leading = float(stack.pop())
+            else:  # TD
+                ty = float(stack.pop())
+                tx = float(stack.pop())
+                leading = -ty
+                tlm = mat_mult([1, 0, 0, 1, tx, ty], tlm)
+                tm = list(tlm)
         except (IndexError, ValueError, TypeError):
             stack.clear()
 

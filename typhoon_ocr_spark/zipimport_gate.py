@@ -13,6 +13,13 @@ zipimporter (and the ``sys.path_hooks`` entry that makes new ones) for
 a subclass that re-reads its archive only when the archive's
 ``(st_mtime_ns, st_size)`` changed. Driver processes and Python 3.13+
 are left untouched.
+
+The package ``__init__`` calls it, so the gate is in place whatever
+engine module a worker unpickles first. cloudpickle pickles a UDF body
+by value when its decorated name shadows the function, and the
+engine functions it calls by reference: a worker running
+``markdown_flatten_udf`` imports ``oracle.mdflatten`` and never the
+``functions`` package.
 """
 
 from __future__ import annotations
@@ -61,10 +68,11 @@ def install() -> None:
 
 def install_in_worker() -> None:
     """``install`` inside a Python worker on CPython < 3.13; no-op
-    elsewhere (the driver keeps the stock import machinery)."""
+    elsewhere (the driver keeps the stock import machinery). A process
+    that hasn't imported pyspark's task context is not a worker, and
+    importing the engine there must not load pyspark."""
     if sys.version_info >= (3, 13):
         return
-    from pyspark import TaskContext
-
-    if TaskContext.get() is not None:
+    taskcontext = sys.modules.get("pyspark.taskcontext")
+    if taskcontext is not None and taskcontext.TaskContext.get() is not None:
         install()
