@@ -87,7 +87,7 @@ def test_frame_stats_hand_literals():
 
 
 def test_spark_surfaces_reproduce_hand_literals(spark):
-    """The same literals through the Spark UDF surfaces (mapInPandas
+    """The same literals through the Spark UDF surfaces (row_map
     plumbing included), not just the shared oracle functions."""
     from pyspark.sql import functions as F
 

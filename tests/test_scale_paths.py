@@ -193,6 +193,55 @@ def test_minhash_bands_py_parity(spark):
     assert batch == py and py  # identical, and non-trivial
 
 
+def test_row_map_contract(spark):
+    """functions.udfs.row_map, the one mapInArrow pass behind every
+    per-payload operator: None inputs reach ``fn``, ``fn`` fans a row
+    out to 0, 1 or 3 rows, the id column keeps its name, type and
+    values (string and bigint ids), a two-input ``fn`` works, and an
+    input whose rows all emit nothing is an empty frame with the
+    declared schema."""
+    from typhoon_ocr_spark.functions.udfs import row_map
+
+    def fan(v):
+        if v is None:
+            return [("<null>", -1)]
+        return [(v, i) for i in range(len(v))]  # "" → 0 rows, "abc" → 3
+
+    for id_type, ids in (
+        ("string", ["u1", "u2", "u3", "u4"]),
+        ("bigint", [10, 2**40, -3, 7]),
+    ):
+        src = spark.createDataFrame(
+            list(zip(ids, [None, "", "a", "abc"])), f"key {id_type}, v string"
+        )
+        out = row_map(src, fan, "s string, i long")
+        assert out.schema.simpleString() == f"struct<key:{id_type},s:string,i:bigint>"
+        assert sorted(tuple(r) for r in out.collect()) == sorted(
+            [(ids[0], "<null>", -1), (ids[2], "a", 0)]
+            + [(ids[3], "abc", i) for i in range(3)]
+        )
+
+    # two inputs, the id passed again as one (ocr_message_fingerprints'
+    # (url, url, html) shape)
+    two = spark.createDataFrame(
+        [(1, "x", 2), (2, "y", None)], "id bigint, s string, n int"
+    )
+    out = row_map(
+        two.select("id", "id", "s", "n"),
+        lambda i, s, n: [(f"{i}:{s * (n or 0)}",)],
+        "rep string",
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [(1, "1:xx"), (2, "2:")]
+
+    empty = row_map(
+        spark.createDataFrame([("a", "x"), ("b", None)], "key string, v string"),
+        lambda v: [],
+        "s string, i long",
+    )
+    assert empty.schema.simpleString() == "struct<key:string,s:string,i:bigint>"
+    assert empty.collect() == []
+
+
 def test_streaming_near_dup_flags_across_batches(spark, tmp_path):
     """A near-duplicate arriving in batch 2 of a document from batch 1
     is flagged (band-bucket state survives the micro-batch boundary);

@@ -256,6 +256,64 @@ def test_round2_operator_plan_invariants(frames):
     assert p.count("Exchange") == 0 or "REPARTITION_BY_NUM" in p
 
 
+def _per_payload_operators(spark, fixture_dir):
+    """The nine operators that fan a payload out through row_map, on the
+    smoke fixture's pages and media tables."""
+    from typhoon_ocr_spark.operators import extract, multimodal
+
+    pages = spark.read.parquet(os.path.join(fixture_dir, "pages.parquet"))
+    media = spark.read.parquet(os.path.join(fixture_dir, "media.parquet"))
+    return {
+        "extract_pdf_tables": extract.extract_pdf_tables(pages),
+        "page_render_fingerprints": extract.page_render_fingerprints(pages),
+        "ocr_message_fingerprints": extract.ocr_message_fingerprints(pages),
+        "extract_media_features": multimodal.extract_media_features(media),
+        "page_image_features": multimodal.page_image_features(pages),
+        "image_pixel_stats": multimodal.image_pixel_stats(pages),
+        "resize_images": multimodal.resize_images(pages),
+        "media_meta": multimodal.media_meta(media),
+        "frame_pixel_stats": multimodal.frame_pixel_stats(media),
+    }
+
+
+def test_per_payload_operators_are_one_python_pass(spark, fixture_dir):
+    """Each per-payload operator is one pruned scan feeding exactly one
+    MapInArrow: no pandas UDF to evaluate, no array column to explode.
+    On this single-file fixture the only exchange allowed is the gated
+    adaptive spread (REPARTITION_BY_NUM)."""
+    for name, df in _per_payload_operators(spark, fixture_dir).items():
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert p.count("Scan parquet") == 1, name
+        assert p.count("MapInArrow") == 1, name
+        for node in ("ArrowEvalPython", "MapInPandas", "Generate"):
+            assert node not in p, (name, node)
+        assert p.count("Exchange") == 0 or (
+            p.count("Exchange") == 1 and "REPARTITION_BY_NUM" in p
+        ), name
+
+
+def test_pdf_per_page_operators_match_goldens(spark, fixture_dir):
+    """extract_pdf_tables, page_render_fingerprints and
+    ocr_message_fingerprints equal the fixture goldens row for row:
+    the pages with a table (expected_pages), every page's render
+    fingerprint (expected_renders) and request-envelope sha
+    (expected_messages)."""
+    ops = _per_payload_operators(spark, fixture_dir)
+
+    def golden(name):
+        return spark.read.parquet(os.path.join(fixture_dir, f"expected_{name}.parquet"))
+
+    tables = golden("pages").filter(F.col("table_md").isNotNull())
+    for got, exp, n_rows in (
+        (ops["extract_pdf_tables"], tables, 19),
+        (ops["page_render_fingerprints"], golden("renders"), 290),
+        (ops["ocr_message_fingerprints"], golden("messages"), 290),
+    ):
+        rows = sorted(tuple(r) for r in got.collect())
+        assert rows == sorted(tuple(r) for r in exp.select(*got.columns).collect())
+        assert len(rows) == n_rows
+
+
 def test_top_open_orders_is_take_ordered(spark):
     """Top-k must plan TakeOrderedAndProject (parallel partial top-k),
     never a row_number() over an unpartitioned window that funnels all

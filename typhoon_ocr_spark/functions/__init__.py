@@ -1,8 +1,10 @@
-"""Functions: Arrow-vectorized pandas UDFs + native column expressions.
+"""Functions: Arrow-vectorized pandas UDFs, the row map + native column
+expressions.
 
-Every Python hot-path runs inside a pandas UDF body over whole
-pd.Series (Arrow record-batch transport) — never row-at-a-time Python
-UDFs. Anything expressible with pyspark.sql.functions stays JVM-side.
+Every Python hot-path runs per Arrow record batch — a pandas UDF body
+over whole pd.Series, or a ``row_map`` pass fanning each row's payload
+out to typed rows — never row-at-a-time Python UDFs. Anything
+expressible with pyspark.sql.functions stays JVM-side.
 
 A worker running one of these UDFs may never import this package (the
 UDF body travels by value, the oracle functions it calls by reference),

@@ -1,10 +1,14 @@
-"""Pandas UDFs + native expressions for the extraction pipeline.
+"""Pandas UDFs, the row map and native expressions for the extraction
+pipeline and the per-payload operators.
 
 Design rules (SURVEY.md §4.2):
 - each UDF takes ONLY the columns it needs (column pruning through the
   opaque UDF boundary is manual);
-- per-row Python exists only inside Series.map over the pure oracle
-  functions — the Arrow batch is the vectorization unit;
+- per-row Python exists only inside a batch loop over the pure oracle
+  functions — the Arrow batch is the vectorization unit. A 1:1 column
+  function is a pandas UDF inside a projection; a payload that fans out
+  to zero or more typed rows keyed by its row's id goes through
+  ``row_map`` (one mapInArrow pass, no array column to explode);
 - anything natively expressible (sniffing magic bytes, struct
   assembly, sort/agg) is a JVM column expression instead.
 
@@ -18,7 +22,7 @@ from __future__ import annotations
 from typing import Optional
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
@@ -92,6 +96,50 @@ def sniff_kind_col(html_col: str = "html") -> Column:
 
 
 # ---------------------------------------------------------------------------
+# Row maps (mapInArrow): one input row's payload → zero or more rows
+# ---------------------------------------------------------------------------
+
+def row_map(src: DataFrame, fn, fields: str) -> DataFrame:
+    """mapInArrow over ``src`` = (id, *inputs): ``fn(*inputs)`` returns
+    the row tuples one input row fans out to (zero or more; None inputs
+    reach ``fn``, which decides their rows), and each output row is
+    (that row's id, *row). The emitted id values are Arrow ``take``s of
+    the input column — never round-tripped through Python objects — so
+    the id keeps its name and type. ``fields`` is one DDL string
+    ("band int, band_hash string"); the Arrow types come from the
+    declared Spark schema, so the produced batches always match it."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    id_field = src.schema.fields[0]
+    schema = StructType(
+        [StructField(id_field.name, id_field.dataType)]
+        + _parse_datatype_string(fields).fields
+    )
+    pa_types = [to_arrow_type(f.dataType) for f in schema.fields[1:]]
+    names = [f.name for f in schema.fields]
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            inputs = [batch.column(j).to_pylist() for j in range(1, batch.num_columns)]
+            take, rows = [], []
+            for i, args in enumerate(zip(*inputs)):
+                for row in fn(*args):
+                    take.append(i)
+                    rows.append(row)
+            if take:
+                cols = [batch.column(0).take(pa.array(take, type=pa.int32()))]
+                cols += [
+                    pa.array(vals, type=t) for vals, t in zip(zip(*rows), pa_types)
+                ]
+                yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return src.mapInArrow(gen, schema)
+
+
+# ---------------------------------------------------------------------------
 # Pandas UDFs (Arrow-vectorized)
 # ---------------------------------------------------------------------------
 
@@ -157,110 +205,6 @@ def stage_pages_udf(
         [one(*args) for args in zip(url, kind, payload, budget)],
         dtype="object",
     )
-
-
-TABLE_PAGE_STRUCT = StructType(
-    [
-        StructField("page", IntegerType()),
-        StructField("table_md", StringType()),
-    ]
-)
-
-RENDER_PAGE_STRUCT = StructType(
-    [
-        StructField("page", IntegerType()),
-        StructField("render_w", IntegerType()),
-        StructField("render_h", IntegerType()),
-        StructField("render_sha", StringType()),
-    ]
-)
-
-
-@pandas_udf(ArrayType(RENDER_PAGE_STRUCT))
-def page_renders_udf(payload: pd.Series) -> pd.Series:
-    """BINARY pdf payload → per-page layout raster fingerprints: each
-    page renders to a real grayscale PNG (oracle/render.py — the
-    engine's render_pdf_to_base64png path, ocr_utils.py:119-146) and
-    reports (dims, sha256 of the PNG bytes). The blob itself never
-    leaves the task — downstream carries 64-byte fingerprints."""
-    import hashlib
-
-    from ..oracle.render import render_page_bitmap
-    from ..oracle.images import encode_png_gray
-
-    def one(blob: Optional[bytes]) -> list:
-        if blob is None:
-            return []
-        try:
-            reports = parse_pdf(bytes(blob))
-        except Exception:
-            return []
-        out = []
-        for idx, report in enumerate(reports, start=1):
-            w, h, pixels = render_page_bitmap(report)
-            png = encode_png_gray(w, h, pixels)
-            out.append(
-                {"page": idx, "render_w": w, "render_h": h,
-                 "render_sha": hashlib.sha256(png).hexdigest()}
-            )
-        return out
-
-    return payload.map(one)
-
-
-MESSAGE_PAGE_STRUCT = StructType(
-    [
-        StructField("page", IntegerType()),
-        StructField("message_sha", StringType()),
-    ]
-)
-
-
-@pandas_udf(ArrayType(MESSAGE_PAGE_STRUCT))
-def ocr_message_shas_udf(url: pd.Series, payload: pd.Series) -> pd.Series:
-    """BINARY pdf payload → per-page sha256 of the COMPLETE LLM request
-    envelope (prompt + base64 page render; prepare_ocr_messages,
-    ocr_utils.py:582-619). The multi-KB envelope never leaves the task
-    — only its 64-hex fingerprint does."""
-    from ..oracle.render import page_ocr_message_sha
-
-    def one(u, blob):
-        if blob is None:
-            return []
-        try:
-            reports = parse_pdf(bytes(blob))
-        except Exception:
-            return []
-        return [
-            {"page": idx, "message_sha": page_ocr_message_sha(u, report, idx)}
-            for idx, report in enumerate(reports, start=1)
-        ]
-
-    return pd.Series([one(u, b) for u, b in zip(url, payload)], dtype="object")
-
-
-@pandas_udf(ArrayType(TABLE_PAGE_STRUCT))
-def page_tables_udf(payload: pd.Series) -> pd.Series:
-    """BINARY pdf payload → per-page markdown tables via deterministic
-    table-cell grouping (oracle/tables.py — the north star's
-    "table-cell grouping into markdown tables"). Pages whose runs don't
-    form a grid yield table_md NULL; parse failures yield no rows
-    (error handling lives in the main pipeline)."""
-    from ..oracle.tables import detect_table
-
-    def one(blob: Optional[bytes]) -> list:
-        if blob is None:
-            return []
-        try:
-            reports = parse_pdf(bytes(blob))
-        except Exception:
-            return []
-        return [
-            {"page": idx, "table_md": detect_table(report.text_elements)}
-            for idx, report in enumerate(reports, start=1)
-        ]
-
-    return payload.map(one)
 
 
 @pandas_udf(StringType())

@@ -38,6 +38,7 @@ from ..functions.textsql import (
     WORD_SPLIT_PATTERN,
     simhash_segment_bounds,
 )
+from ..functions.udfs import row_map
 from ..plans.spread import maybe_spread
 
 
@@ -141,9 +142,9 @@ def _bands_of_shingles(sh: list) -> list:
 
 def _shingles_of_tokens(raw_tokens: list) -> list:
     """Raw split() output (may contain '' empties) → the document's
-    3-word shingle strings; [] when too short. ' '.join is byte-equal
-    to the JVM concat_ws(' ') the oracle twin mirrors."""
-    toks = [t for t in raw_tokens if t]
+    3-word shingle strings; [] when too short or null. ' '.join is
+    byte-equal to the JVM concat_ws(' ') the oracle twin mirrors."""
+    toks = [t for t in raw_tokens or () if t]
     k = SHINGLE_WORDS
     if len(toks) < k:
         return []
@@ -159,53 +160,6 @@ def _raw_tokens(documents: DataFrame, text_col: str) -> DataFrame:
         "doc_id",
         F.split(F.lower(F.col(text_col)), WORD_SPLIT_PATTERN).alias("_rawtoks"),
     )
-
-
-def _id_preserving_map(
-    src: DataFrame, fn, out_fields: list, null_row: tuple | None = None
-) -> DataFrame:
-    """mapInArrow over (id, payload) preserving the caller's id column
-    name and type: ``fn(payload_value) -> [row-tuple...]`` fans each
-    non-null payload out to zero or more rows; a null payload emits
-    ``null_row`` when given (else nothing); emitted id values are
-    Arrow ``take``s of the input column (never round-tripped through
-    Python objects). ``out_fields`` is [(name, spark_sql_type)];
-    Arrow types come from the Spark schema so the produced batches
-    always match the declared mapInArrow schema."""
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
-
-    id_field = src.schema.fields[0]
-    schema = StructType(
-        [StructField(id_field.name, id_field.dataType)]
-        + [StructField(n, _parse_datatype_string(t)) for n, t in out_fields]
-    )
-    pa_types = [to_arrow_type(f.dataType) for f in schema.fields]
-    names = [f.name for f in schema.fields]
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            payload = batch.column(1).to_pylist()
-            take, rows = [], []
-            for i, val in enumerate(payload):
-                if val is None:
-                    if null_row is not None:
-                        take.append(i)
-                        rows.append(null_row)
-                    continue
-                for row in fn(val):
-                    take.append(i)
-                    rows.append(row)
-            if take:
-                cols = [ids.take(pa.array(take, type=pa.int32()))]
-                for j in range(len(out_fields)):
-                    cols.append(pa.array([r[j] for r in rows], type=pa_types[j + 1]))
-                yield pa.RecordBatch.from_arrays(cols, names=names)
-
-    return src.mapInArrow(gen, schema)
 
 
 def minhash_bands(
@@ -240,9 +194,7 @@ def minhash_bands(
         def fn(raw):
             return _bands_of_shingles(_shingles_of_tokens(raw))
 
-    return _id_preserving_map(
-        src, fn, [("band", "int"), ("band_hash", "string")]
-    )
+    return row_map(src, fn, "band int, band_hash string")
 
 
 def minhash_candidate_pairs(
@@ -309,11 +261,15 @@ def _simhash_of_tokens(raw_tokens: list) -> list:
     vote sum is >= 0 (0 tokens → all-'1', the empty-fold value the old
     JVM aggregate produced). Vote counting is a NumPy column sum over
     the hex-byte matrix — md5 hex chars are 0-9a-f, so 'top bit set'
-    is exactly (byte >= 'a') | (byte in '89')."""
+    is exactly (byte >= 'a') | (byte in '89'). A null text keeps its
+    old row ('0'×16, null n_tokens: CASE WHEN null>=0 yields '0',
+    size(null) yields null)."""
     import hashlib
 
     import numpy as np
 
+    if raw_tokens is None:
+        return [("0" * SIMHASH_BITS, None)]
     toks = [t for t in raw_tokens if t]
     n = len(toks)
     if not n:
@@ -340,14 +296,11 @@ def simhash_fingerprints(documents: DataFrame, text_col: str = "text") -> DataFr
     the SIMHASH_BITS votes as a NumPy column sum. The old plan ran 16
     separate interpreted F.aggregate folds over the token-hash array
     per row (the residual interpreted-HOF hot spot the r5 verdict
-    flagged) — measured 2.2 s → ~0.4 s at sf1.0. A null text keeps its
-    old row ('0'×16, null n_tokens: CASE WHEN null>=0 yields '0',
-    size(null) yields null)."""
-    return _id_preserving_map(
+    flagged) — measured 2.2 s → ~0.4 s at sf1.0."""
+    return row_map(
         _raw_tokens(documents, text_col),
         _simhash_of_tokens,
-        [("simhash", "string"), ("n_tokens", "long")],
-        null_row=("0" * SIMHASH_BITS, None),
+        "simhash string, n_tokens long",
     )
 
 

@@ -35,17 +35,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.udfs import (
-    ocr_message_shas_udf,
-    page_renders_udf,
-    page_tables_udf,
-    sniff_kind_col,
-    stage_pages_udf,
-)
+from ..functions.udfs import row_map, sniff_kind_col, stage_pages_udf
+from ..oracle.pdfmini import parse_pdf
 from ..plans.session import PipelineConfig
 from ..plans.spread import maybe_spread
-
-PAGE_COLUMNS = ["url", "kind", "page", "anchor_text", "text", "success", "error"]
 
 
 def classify_pages(pages: DataFrame) -> DataFrame:
@@ -107,52 +100,83 @@ def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -
     )
 
 
+def _pdf_rows(pages: DataFrame, *cols: str) -> DataFrame:
+    """(url, *cols, html) of the pdf rows: single scan, kind-routed
+    natively, so only pdf payloads reach the row map."""
+    base = classify_pages(pages).filter(F.col("kind") == "pdf")
+    return base.select("url", *cols, "html")
+
+
+def _per_page(blob, page_row) -> list:
+    """``page_row(page, report)`` for each parsed page of a pdf payload,
+    pages numbered from 1. A null or unparseable payload has no rows:
+    its error row belongs to the main pipeline (extract_pages)."""
+    if blob is None:
+        return []
+    try:
+        reports = parse_pdf(blob)
+    except Exception:
+        return []
+    return [page_row(idx, report) for idx, report in enumerate(reports, start=1)]
+
+
 def extract_pdf_tables(pages: DataFrame) -> DataFrame:
     """Deterministic table extraction: pdf payloads → one row per page
     whose positioned runs form a grid, rendered as GitHub markdown
     (oracle/tables.py clustering; the north star's "table-cell grouping
-    into markdown tables"). Single scan, kind-routed natively, pdf
-    payloads only reach the parse UDF. Output: (url, page, table_md)."""
-    base = classify_pages(pages).select("url", "kind", "html")
-    return (
-        base.filter(F.col("kind") == "pdf")
-        .select("url", F.explode(page_tables_udf("html")).alias("pt"))
-        .select("url", F.col("pt.page").cast("long").alias("page"), "pt.table_md")
-        .filter(F.col("table_md").isNotNull())
-    )
+    into markdown tables"). Pages whose runs don't form a grid, and
+    parse failures (error handling lives in the main pipeline), yield
+    no rows. Output: (url, page, table_md)."""
+    from ..oracle.tables import detect_table
+
+    def table_row(idx, report):
+        return idx, detect_table(report.text_elements)
+
+    return row_map(
+        _pdf_rows(pages),
+        lambda blob: _per_page(blob, table_row),
+        "page long, table_md string",
+    ).filter(F.col("table_md").isNotNull())
 
 
 def page_render_fingerprints(pages: DataFrame) -> DataFrame:
-    """Layout rasters for every pdf page: real PNG render per page
-    (oracle/render.py), surfaced as (url, page, render_w, render_h,
-    render_sha) — the fingerprint proves the render path end-to-end
-    without shipping image blobs through the plan. Single scan, pruned
-    to url+html, pdf rows only reach the UDF."""
-    base = classify_pages(pages).select("url", "kind", "html")
-    return (
-        base.filter(F.col("kind") == "pdf")
-        .select("url", F.explode(page_renders_udf("html")).alias("pr"))
-        .select(
-            "url",
-            F.col("pr.page").cast("long").alias("page"),
-            F.col("pr.render_w").cast("long").alias("render_w"),
-            F.col("pr.render_h").cast("long").alias("render_h"),
-            "pr.render_sha",
-        )
+    """Layout rasters for every pdf page: each page renders to a real
+    grayscale PNG (oracle/render.py — the engine's
+    render_pdf_to_base64png path, ocr_utils.py:119-146), surfaced as
+    (url, page, render_w, render_h, render_sha) — the fingerprint proves
+    the render path end-to-end; the blob never leaves the task and no
+    image bytes ship through the plan."""
+    import hashlib
+
+    from ..oracle.images import encode_png_gray
+    from ..oracle.render import render_page_bitmap
+
+    def render_row(idx, report):
+        w, h, pixels = render_page_bitmap(report)
+        return idx, w, h, hashlib.sha256(encode_png_gray(w, h, pixels)).hexdigest()
+
+    return row_map(
+        _pdf_rows(pages),
+        lambda blob: _per_page(blob, render_row),
+        "page long, render_w long, render_h long, render_sha string",
     )
 
 
 def ocr_message_fingerprints(pages: DataFrame) -> DataFrame:
-    """Per-page fingerprints of the full LLM request envelope (prompt
-    template applied to the page anchor + the page's base64 PNG render)
-    — the engine-side prepare_ocr_messages, proven end-to-end by sha
-    without shuffling multi-KB envelopes. Output: (url, page,
-    message_sha)."""
-    base = classify_pages(pages).select("url", "kind", "html")
-    return (
-        base.filter(F.col("kind") == "pdf")
-        .select("url", F.explode(ocr_message_shas_udf("url", "html")).alias("pm"))
-        .select("url", F.col("pm.page").cast("long").alias("page"), "pm.message_sha")
+    """Per-page sha256 of the COMPLETE LLM request envelope (prompt
+    template applied to the page anchor + the page's base64 PNG render;
+    prepare_ocr_messages, ocr_utils.py:582-619) — proven end-to-end by
+    sha; the multi-KB envelope never leaves the task. Output: (url,
+    page, message_sha)."""
+    from ..oracle.render import page_ocr_message_sha
+
+    def rows(url, blob):
+        return _per_page(
+            blob, lambda idx, report: (idx, page_ocr_message_sha(url, report, idx))
+        )
+
+    return row_map(
+        _pdf_rows(pages, "url"), rows, "page long, message_sha string"
     )
 
 

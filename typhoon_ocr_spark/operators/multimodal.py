@@ -8,7 +8,8 @@ see media_meta); lossy WebP, compressed-audio and video FRAME decode
 remain clearly-marked stubs (VP8/AAC/H.264 are out of scope
 in-sandbox) — the Spark-side plumbing around all of it is real and
 tested: schemas,
-mapInPandas batch shape, Arrow-safe binary handling, and the native
+the row_map batch shape (one mapInArrow pass per operator, ids kept
+as Arrow takes), Arrow-safe binary handling, and the native
 dimension/frame arithmetic (which follows the reference's resize rule,
 /root/reference/packages/typhoon_ocr/typhoon_ocr/ocr_utils.py:467-494,
 and render-resolution formula, ocr_utils.py:138).
@@ -17,43 +18,12 @@ and render-resolution formula, ocr_utils.py:138).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
+from ..functions.udfs import row_map, sniff_kind_col
 from ..plans.spread import maybe_spread
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),     # image | audio | video
-        StructField("payload", BinaryType()),  # opaque encoded bytes
-        StructField("width", LongType()),      # typed metadata
-        StructField("height", LongType()),
-        StructField("duration_ms", LongType()),
-        StructField("format", StringType()),
-    ]
-)
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload_sha", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
 
 FEATURE_DIM = 8
 
@@ -156,42 +126,39 @@ def decode_media(payload: bytes, fmt: str):
     )
 
 
-def extract_media_features(media: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over opaque media payloads.
-
-    Arrow-batch plumbing is production-shaped: batches stream through
-    the iterator (bounded memory regardless of table size), only the
-    needed columns enter the UDF, output conforms to FEATURE_SCHEMA.
-    Feature values are REAL pixel statistics for payloads the stdlib
-    codecs decode (PNG/GIF/baseline JPEG/WebP-lossless) and a marked sha-derived fake
-    otherwise (audio/video/lossy-WebP need PIL/ffmpeg).
-    Output: (media_id, payload_sha, n_bytes, features[8])."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [bytes(p) if p is not None else b"" for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload_sha": [hashlib.sha256(p).hexdigest() for p in payloads],
-                    "n_bytes": [len(p) for p in payloads],
-                    "features": [_decode_features(p) for p in payloads],
-                }
-            )
-
-    return maybe_spread(
-        media.select("media_id", "payload"), "media_id"
-    ).mapInPandas(batches, FEATURE_SCHEMA)
+def _raster_payloads(pages: DataFrame) -> DataFrame:
+    """(url, html) of the raster rows of a pages corpus — single pruned
+    scan, kind-routed natively, spread by the gated adaptive spread."""
+    image_rows = pages.withColumn("kind", sniff_kind_col("html")).filter(
+        F.col("kind") == "image"
+    )
+    return maybe_spread(image_rows.select("url", "html"), "url")
 
 
-PAGE_FEATURE_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("payload_sha", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("features", ArrayType(DoubleType())),
+def _media_payloads(media: DataFrame) -> DataFrame:
+    """(media_id, payload), spread by the gated adaptive spread."""
+    return maybe_spread(media.select("media_id", "payload"), "media_id")
+
+
+FEATURE_FIELDS = "payload_sha string, n_bytes long, features array<double>"
+
+
+def _feature_rows(payload) -> list:
+    payload = payload or b""
+    return [
+        (hashlib.sha256(payload).hexdigest(), len(payload), _decode_features(payload))
     ]
-)
+
+
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """Feature extraction over opaque media payloads, one row_map pass:
+    only the needed columns enter it, output conforms to
+    FEATURE_FIELDS. Feature values are REAL pixel statistics for
+    payloads the stdlib codecs decode (PNG/GIF/baseline JPEG/
+    WebP-lossless) and a marked sha-derived fake otherwise
+    (audio/video/lossy-WebP need PIL/ffmpeg).
+    Output: (media_id, payload_sha, n_bytes, features[8])."""
+    return row_map(_media_payloads(media), _feature_rows, FEATURE_FIELDS)
 
 
 def page_image_features(pages: DataFrame) -> DataFrame:
@@ -200,46 +167,10 @@ def page_image_features(pages: DataFrame) -> DataFrame:
     an actual PNG/GIF/JPEG/WebP, so the vectors are pixel statistics
     (mean, spread, aspect, quadrant means, 1.0 marker) from the stdlib
     codecs, not the sha fallback; only header-only WebP shells (lossy
-    VP8) fall back, visibly (marker absent). Same Arrow-batch shape:
-    only url+payload enter the UDF.
+    VP8) fall back, visibly (marker absent). Same row_map shape:
+    only url+payload enter the pass.
     Output: (url, payload_sha, n_bytes, features[8])."""
-    from ..functions.udfs import sniff_kind_col
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [bytes(p) if p is not None else b"" for p in pdf["html"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "payload_sha": [hashlib.sha256(p).hexdigest() for p in payloads],
-                    "n_bytes": [len(p) for p in payloads],
-                    "features": [_decode_features(p) for p in payloads],
-                }
-            )
-
-    image_rows = pages.withColumn("kind", sniff_kind_col("html")).filter(
-        F.col("kind") == "image"
-    )
-    return maybe_spread(
-        image_rows.select("url", "html"), "url"
-    ).mapInPandas(batches, PAGE_FEATURE_SCHEMA)
-
-
-IMAGE_STATS_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("img_kind", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_samples", LongType()),     # pixels*channels (png) / NULL
-        StructField("mean_pm", LongType()),       # per-mille of full scale
-        StructField("spread_pm", LongType()),
-        StructField("decoded", StringType()),     # 'real' | 'header-only' | 'decode-error'
-    ]
-)
-
-_IMAGE_STATS_COLS = ("img_kind", "width", "height", "n_samples",
-                     "mean_pm", "spread_pm", "decoded")
+    return row_map(_raster_payloads(pages), _feature_rows, FEATURE_FIELDS)
 
 
 def image_pixel_stats(pages: DataFrame) -> DataFrame:
@@ -251,43 +182,23 @@ def image_pixel_stats(pages: DataFrame) -> DataFrame:
     payloads whose body won't decode become decoded='decode-error'
     rows (never task failures).
     Row semantics live in oracle/images.image_stats_row — the single
-    function the fixture golden also runs. mapInPandas streams Arrow
+    function the fixture golden also runs. row_map streams Arrow
     batches — bounded memory at any corpus size; only url+payload enter
-    the UDF."""
-    from ..functions.udfs import sniff_kind_col
+    the pass. n_samples is pixels*channels; mean_pm/spread_pm are
+    per-mille of full scale; decoded is 'real' | 'header-only' |
+    'decode-error'."""
     from ..oracle.images import image_stats_row
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("url",) + _IMAGE_STATS_COLS}
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                stats = image_stats_row(bytes(payload) if payload is not None else b"")
-                if stats is None:
-                    continue
-                rows["url"].append(url)
-                for col, val in zip(_IMAGE_STATS_COLS, stats):
-                    rows[col].append(val)
-            yield pd.DataFrame(rows)
+    def rows(payload):
+        stats = image_stats_row(payload or b"")
+        return [] if stats is None else [stats]
 
-    image_rows = pages.withColumn("kind", sniff_kind_col("html")).filter(
-        F.col("kind") == "image"
+    return row_map(
+        _raster_payloads(pages),
+        rows,
+        "img_kind string, width long, height long, n_samples long, "
+        "mean_pm long, spread_pm long, decoded string",
     )
-    return maybe_spread(
-        image_rows.select("url", "html"), "url"
-    ).mapInPandas(batches, IMAGE_STATS_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("new_width", LongType()),
-        StructField("new_height", LongType()),
-        StructField("resized_png", BinaryType()),  # NULL when unresized
-        StructField("error", StringType()),        # NULL on success
-    ]
-)
 
 
 def resize_images(pages: DataFrame, max_size: int = 2048) -> DataFrame:
@@ -297,47 +208,33 @@ def resize_images(pages: DataFrame, max_size: int = 2048) -> DataFrame:
     of the longest side to ``max_size`` when a side exceeds 300 px,
     re-encode as PNG. Images under the threshold keep their original
     payload (resized_png NULL), undecodable payloads become error rows
-    (never task failures). mapInPandas streams Arrow batches; only
-    url+payload enter the UDF and the resized bytes leave it — nothing
-    else shuffles. Output: RESIZED_SCHEMA."""
-    from ..functions.udfs import sniff_kind_col
+    (error NULL on success; never task failures). row_map streams Arrow
+    batches; only url+payload enter the pass and the resized bytes leave
+    it — nothing else shuffles. Output: (url, width, height, new_width,
+    new_height, resized_png, error)."""
     from ..oracle.images import (
         ImageError,
         image_dimensions,
         resize_image_payload,
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("url", "width", "height", "new_width",
-                                    "new_height", "resized_png", "error")}
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, nw, nh, png = resize_image_payload(data, max_size)
-                    err = None
-                except (ImageError, NotImplementedError) as exc:
-                    try:
-                        w, h = image_dimensions(data)
-                    except ImageError:
-                        w = h = None
-                    nw = nh = png = None
-                    err = str(exc)[:200]
-                rows["url"].append(url)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["new_width"].append(nw)
-                rows["new_height"].append(nh)
-                rows["resized_png"].append(png)
-                rows["error"].append(err)
-            yield pd.DataFrame(rows)
+    def rows(payload):
+        data = payload or b""
+        try:
+            return [(*resize_image_payload(data, max_size), None)]
+        except (ImageError, NotImplementedError) as exc:
+            try:
+                w, h = image_dimensions(data)
+            except ImageError:
+                w = h = None
+            return [(w, h, None, None, None, str(exc)[:200])]
 
-    image_rows = pages.withColumn("kind", sniff_kind_col("html")).filter(
-        F.col("kind") == "image"
+    return row_map(
+        _raster_payloads(pages),
+        rows,
+        "width long, height long, new_width long, new_height long, "
+        "resized_png binary, error string",
     )
-    return maybe_spread(
-        image_rows.select("url", "html"), "url"
-    ).mapInPandas(batches, RESIZED_SCHEMA)
 
 
 def media_from_documents(documents: DataFrame) -> DataFrame:
@@ -359,18 +256,11 @@ def media_from_documents(documents: DataFrame) -> DataFrame:
     )
 
 
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_kind", StringType()),   # wav | mp4
-        StructField("sample_rate", LongType()),
-        StructField("channels", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("duration_ms", LongType()),
-        StructField("mean_pm", LongType()),        # |PCM| per-mille
-        StructField("spread_pm", LongType()),
-        StructField("decoded", StringType()),      # real | header-only | decode-error
-    ]
+# single definition: the fields drive the output here AND the golden
+# columns of fixtures.generate_media
+MEDIA_META_FIELDS = (
+    "media_kind string, sample_rate long, channels long, n_samples long, "
+    "duration_ms long, mean_pm long, spread_pm long, decoded string"
 )
 
 
@@ -381,43 +271,23 @@ def media_meta(frames: DataFrame) -> DataFrame:
     out of scope, same contract as lossy WebP), malformed bodies
     become decode-error rows, unrecognized payloads are dropped. Row
     semantics live in oracle/media.media_meta_row — the single
-    function the fixture golden also runs. mapInPandas streams Arrow
-    batches; only (media_id, payload) enter the UDF.
-    Input: (media_id, payload). Output: MEDIA_META_SCHEMA."""
+    function the fixture golden also runs. row_map streams Arrow
+    batches; only (media_id, payload) enter the pass.
+    Input: (media_id, payload). Output: (media_id, MEDIA_META_FIELDS);
+    media_kind is wav | mp4, mean_pm is |PCM| per-mille, decoded is
+    real | header-only | decode-error."""
     from ..oracle.media import media_meta_row
 
-    # single definition: the schema drives the column order here AND
-    # in fixtures.generate_media's golden (review: three hand-kept
-    # copies would silently misalign zip(cols, row))
-    cols = tuple(f.name for f in MEDIA_META_SCHEMA.fields[1:])
+    def rows(payload):
+        row = media_meta_row(payload or b"")
+        return [] if row is None else [row]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("media_id",) + cols}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = media_meta_row(bytes(payload) if payload is not None else b"")
-                if row is None:
-                    continue
-                rows["media_id"].append(mid)
-                for name, val in zip(cols, row):
-                    rows[name].append(val)
-            yield pd.DataFrame(rows)
-
-    return maybe_spread(
-        frames.select("media_id", "payload"), "media_id"
-    ).mapInPandas(batches, MEDIA_META_SCHEMA)
+    return row_map(_media_payloads(frames), rows, MEDIA_META_FIELDS)
 
 
-FRAME_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", LongType()),   # 1-fps sample index
-        StructField("src_frame", LongType()),   # source frame it maps to
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("mean_pm", LongType()),
-        StructField("spread_pm", LongType()),
-    ]
+FRAME_STATS_FIELDS = (
+    "frame_idx long, src_frame long, width long, height long, "
+    "mean_pm long, spread_pm long"
 )
 
 
@@ -431,32 +301,19 @@ def frame_pixel_stats(media: DataFrame) -> DataFrame:
     sample-table walk and stay the documented out-of-scope stub; rows
     that aren't parseable rawg videos are dropped. Row semantics live
     in oracle/media.frame_stats_rows — the single function the fixture
-    golden also runs. mapInPandas streams Arrow batches; only
-    (media_id, payload) enter the UDF and only the small stats rows
+    golden also runs. row_map streams Arrow batches; only
+    (media_id, payload) enter the pass and only the small stats rows
     leave — frame pixels never shuffle.
-    Input: (media_id, payload). Output: FRAME_STATS_SCHEMA."""
+    Input: (media_id, payload). Output: (media_id, FRAME_STATS_FIELDS);
+    frame_idx is the 1-fps sample index, src_frame the source frame it
+    maps to."""
     from ..oracle.media import frame_stats_rows
 
-    cols = tuple(f.name for f in FRAME_STATS_SCHEMA.fields)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in cols}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                stats = frame_stats_rows(
-                    bytes(payload) if payload is not None else b""
-                )
-                if stats is None:
-                    continue
-                for row in stats:
-                    rows["media_id"].append(media_id)
-                    for name, val in zip(cols[1:], row):
-                        rows[name].append(val)
-            yield pd.DataFrame(rows)
-
-    return maybe_spread(
-        media.select("media_id", "payload"), "media_id"
-    ).mapInPandas(batches, FRAME_STATS_SCHEMA)
+    return row_map(
+        _media_payloads(media),
+        lambda payload: frame_stats_rows(payload or b"") or [],
+        FRAME_STATS_FIELDS,
+    )
 
 
 def frame_plan(meta: DataFrame, fps: float = 1.0) -> DataFrame:

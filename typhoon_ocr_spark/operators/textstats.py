@@ -1,7 +1,8 @@
 """Text-analysis operators: language ID, quality scoring, token
 counting, document fingerprinting — the per-document scoring stages of
-a training-data pipeline, all pure column expressions (JVM-side,
-whole-stage-codegen; zero Python in the hot path).
+a training-data pipeline, pure column expressions (JVM-side,
+whole-stage-codegen; zero Python in the hot path) except top_bigram,
+whose per-document argmax is one functions.udfs.row_map pass.
 
 Cross-engine determinism: ratios are emitted as rounded per-mille
 BIGINTs, hashes as md5 hex strings (see functions/textsql.py).
@@ -34,8 +35,9 @@ from ..functions.textsql import (
     THAI_NEGATED_CLASS,
     WS_SPLIT_PATTERN,
 )
+from ..functions.udfs import row_map
 from ..plans.spread import maybe_spread
-from .dedup import _id_preserving_map, _raw_tokens, word_tokens
+from .dedup import _raw_tokens, word_tokens
 
 
 def _per_mille(num: Column, den: Column) -> Column:
@@ -336,12 +338,13 @@ def training_corpus_keep(documents: DataFrame, text_col: str = "text") -> DataFr
 
 def _top_bigram_of_tokens(raw_tokens: list) -> list:
     """One (bigram, occurrences, n_bigrams) row for a document's raw
-    split() output (empties dropped here); [] when <2 word tokens.
+    split() output (empties dropped here); [] when <2 word tokens or
+    null.
     Tie-break = min((-count, bigram)): Python str ordering is code
     point order == the JVM UTF8String binary order for valid UTF-8."""
     from collections import Counter
 
-    toks = [t for t in raw_tokens if t]
+    toks = [t for t in raw_tokens or () if t]
     if len(toks) < 2:
         return []
     counts = Counter(map(" ".join, zip(toks, toks[1:])))
@@ -365,10 +368,10 @@ def top_bigram(documents: DataFrame, text_col: str = "text") -> DataFrame:
     with ZERO exchanges (a per-document statistic never needed a
     shuffle). The per-mille share is computed by the same JVM
     expression as before on the one-row-per-doc output."""
-    picked = _id_preserving_map(
+    picked = row_map(
         _raw_tokens(documents, text_col),
         _top_bigram_of_tokens,
-        [("bigram", "string"), ("occurrences", "long"), ("n_bigrams", "long")],
+        "bigram string, occurrences long, n_bigrams long",
     )
     return picked.select(
         "doc_id",

@@ -17,8 +17,6 @@ from __future__ import annotations
 
 import re
 
-_STEPS_COMPILED = False
-
 
 def markdown_to_plain_text(markdown: str) -> str:
     if not markdown:

@@ -674,14 +674,16 @@ def generate_media(n_rows: int):
         write_mp4_video,
         write_wav,
     )
-    from ..operators.multimodal import MEDIA_META_SCHEMA
+    from ..operators.multimodal import FRAME_STATS_FIELDS, MEDIA_META_FIELDS
 
     media_ids, payloads = [], []
-    from ..operators.multimodal import FRAME_STATS_SCHEMA
-
-    meta_cols = tuple(f.name for f in MEDIA_META_SCHEMA.fields[1:])
+    # (name, type) pairs of the operators' DDL field strings
+    meta_fields = [f.split() for f in MEDIA_META_FIELDS.split(",")]
+    meta_cols = tuple(name for name, _ in meta_fields)
     golden = {k: [] for k in ("media_id",) + meta_cols}
-    frame_cols = tuple(f.name for f in FRAME_STATS_SCHEMA.fields)
+    frame_cols = ("media_id",) + tuple(
+        f.split()[0] for f in FRAME_STATS_FIELDS.split(",")
+    )
     frames_golden = {k: [] for k in frame_cols}
     for i in range(n_rows):
         mod = i % 10
@@ -728,8 +730,8 @@ def generate_media(n_rows: int):
     golden_schema = pa.schema(
         [("media_id", pa.int64())]
         + [
-            (f.name, pa.string() if f.dataType.simpleString() == "string" else pa.int64())
-            for f in MEDIA_META_SCHEMA.fields[1:]
+            (name, pa.string() if ddl_type == "string" else pa.int64())
+            for name, ddl_type in meta_fields
         ]
     )
     frames_schema = pa.schema([(c, pa.int64()) for c in frame_cols])
