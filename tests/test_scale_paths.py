@@ -163,12 +163,15 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
     assert any(r[1] > r[3] for r in user1_rows)
 
 
-def test_minhash_bands_py_parity(spark):
-    """The streaming operator's pure-Python band computation must match
-    the batch dedup.minhash_bands exactly (same constants, same md5
-    slicing) or streaming and batch dedup would disagree."""
-    from typhoon_ocr_spark.operators.dedup import minhash_bands
-    from typhoon_ocr_spark.streaming.stateful import minhash_bands_py
+def test_streaming_near_dups_batch_parity(spark, tmp_path):
+    """streaming_near_dups over one micro-batch yields exactly the batch
+    dedup.minhash_candidate_pairs of the same frame: the stream takes
+    its bands from minhash_bands, so tokenizer, shingles and band
+    hashes cannot drift between the two. Thai, punctuation, too-short,
+    null and empty texts pair with nothing; the case/punctuation
+    variant and the one-word extension pair with their originals."""
+    from typhoon_ocr_spark.operators.dedup import minhash_candidate_pairs
+    from typhoon_ocr_spark.streaming.stateful import streaming_near_dups
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -177,20 +180,31 @@ def test_minhash_bands_py_parity(spark):
         "punct,separated;tokens!here  double  spaces",
         None,  # null text → no bands
         "",  # empty text → no bands
+        "The Quick brown FOX -- jumps over the lazy dog!",
+        "ข้อมูล เอกสาร ระบบ ภาษา ไทย 123 mixed LANGUAGE text again",
     ]
-    docs = spark.createDataFrame(
-        [(str(i), t) for i, t in enumerate(texts)], "doc_id string, text string"
+    schema = "doc_id string, text string"
+    docs = spark.createDataFrame([(str(i), t) for i, t in enumerate(texts)], schema)
+    src = str(tmp_path / "src")
+    docs.coalesce(1).write.parquet(src)
+
+    stream_pairs: set = set()
+    q = (
+        streaming_near_dups(spark.readStream.schema(schema).parquet(src))
+        .writeStream.outputMode("update")
+        .foreachBatch(
+            lambda df, bid: stream_pairs.update(
+                (r["doc_a"], r["doc_b"]) for r in df.collect()
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    batch = {
-        (r["doc_id"], r["band"], r["band_hash"])
-        for r in minhash_bands(docs).collect()
-    }
-    py = {
-        (str(i), b, h)
-        for i, t in enumerate(texts)
-        for b, h in minhash_bands_py(t)
-    }
-    assert batch == py and py  # identical, and non-trivial
+    q.awaitTermination()
+    batch_pairs = {tuple(r) for r in minhash_candidate_pairs(docs).collect()}
+    assert stream_pairs == batch_pairs and batch_pairs  # identical, non-trivial
+    assert ("0", "6") in batch_pairs
 
 
 def test_row_map_contract(spark):

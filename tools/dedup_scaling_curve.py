@@ -111,16 +111,10 @@ def main() -> None:
     emb10 = replicate_embeddings(emb1)
 
     dims = similarity.EMB_DIMS
-    def jaccard_then_release(d, e):
-        df = dedup.jaccard_pairs(d)
-        n = df.count()
-        df._persisted_shingles.unpersist(blocking=False)
-        return n
-
     ops = {
         "minhash_pairs": lambda d, e: dedup.minhash_candidate_pairs(d).count(),
         "simhash_near_dups": lambda d, e: dedup.simhash_near_dups(d).count(),
-        "jaccard_pairs": jaccard_then_release,
+        "jaccard_pairs": lambda d, e: dedup.jaccard_pairs(d).count(),
         "embedding_near_dups": lambda d, e: similarity.embedding_near_dups(
             e, n_dims=dims
         ).count(),

@@ -10,10 +10,15 @@ __spark_entry__ built from the same constants
 Scale notes:
 - exact dedup is a hash groupBy — one shuffle on a 32-char key, with
   map-side partial aggregation;
+- a document's 3-word shingles have one implementation: JVM
+  lower+split tokens (_raw_tokens) feed one row_map pass whose Python
+  core (_shingles_of_tokens) builds them; MinHash bands, Jaccard sets,
+  the shingle hashes of n-gram coverage and decontamination, and the
+  streaming MinHash twin all read that pass;
 - minhash signatures are computed per-row (no shuffle) from word
   shingles; candidate pairs are a self-equi-join on (band, band_hash)
   — the classic banding trick keeps the join fan-out tiny vs a full
-  cross join;
+  cross join; Jaccard scores each pair where its bucket forms it;
 - MinHash hashes are md5 hex strings and minima are lexicographic,
   chosen for engine-portability (no 64-bit int conversions);
 - SimHash fingerprints leave simhash_fingerprints as '0'/'1' strings
@@ -49,47 +54,6 @@ def word_tokens(col: Column) -> Column:
     )
 
 
-def word_shingles(tokens: Column) -> Column:
-    """3-word shingles (1-based element_at, mirroring the DuckDB twin).
-    Fewer than 3 tokens → empty array (note: sequence() would count
-    DOWN for stop<start, hence the explicit guard).
-
-    Perf shape: the token expression is BOUND to a lambda variable via
-    a single-element transform before any element_at touches it.
-    Higher-order-function lambdas evaluate interpreted, per element —
-    referencing the raw ``tokens`` tree inside the shingle lambda
-    re-ran the whole split/lower/filter pipeline 3x PER SHINGLE
-    (O(len²) per document; measured 14.5 s → 3.5 s for the shingle
-    explode at sf0.1)."""
-    k = SHINGLE_WORDS
-
-    def build(arr: Column) -> Column:
-        make = F.transform(
-            F.sequence(F.lit(1), F.size(arr) - (k - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(arr, i + j) for j in range(k)]
-            ),
-        )
-        return F.when(F.size(arr) >= k, make).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return F.element_at(F.transform(F.array(tokens), build), 1)
-
-
-def shingle_frame(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """The shared shingle lineage: (doc_id, sh array<string>) — the one
-    place 3-word shingles are computed. minhash_* and jaccard_pairs all
-    derive from this frame so a verification pass can persist it once
-    instead of re-tokenizing the corpus per consumer. Docs with fewer
-    than SHINGLE_WORDS tokens get an empty array. The (doc_id, text)
-    projection is spread first (see plans.spread.maybe_spread) so
-    tokenization parallelizes even off a single-row-group input file."""
-    src = maybe_spread(documents.select("doc_id", text_col), "doc_id")
-    toks = word_tokens(F.col(text_col))
-    return src.select("doc_id", word_shingles(toks).alias("sh"))
-
-
 def exact_dup_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup: group by md5(text); keeper = min doc_id.
     Output: (text_md5, dup_count, keeper_id)."""
@@ -107,10 +71,10 @@ def exact_dup_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _bands_of_shingles(sh: list) -> list:
     """[(band, band_hash)] for one document's shingle strings — the
-    per-doc core shared by the batch mapInArrow path and the streaming
-    twin. One md5 per shingle; slice minima via a NumPy byte-matrix
-    column-min (lexicographic on ASCII hex = UTF8String min); band hash
-    = md5 of the '|'-joined slice minima. Empty input → []."""
+    per-doc core of minhash_bands and jaccard_pairs. One md5 per
+    shingle; slice minima via a NumPy byte-matrix column-min
+    (lexicographic on ASCII hex = UTF8String min); band hash = md5 of
+    the '|'-joined slice minima. Empty input → []."""
     import hashlib
 
     import numpy as np
@@ -155,18 +119,15 @@ def _raw_tokens(documents: DataFrame, text_col: str) -> DataFrame:
     """(doc_id, _rawtoks) — the spread (doc_id, text) projection split
     into raw lowercase tokens by JVM codegen (empties kept; the Python
     per-document cores drop them). The one input shape of the
-    token-level mapInArrow passes (MinHash bands, SimHash, top bigram)."""
+    token-level row_map passes (MinHash bands, Jaccard sets, shingle
+    hashes, SimHash, top bigram)."""
     return maybe_spread(documents.select("doc_id", text_col), "doc_id").select(
         "doc_id",
         F.split(F.lower(F.col(text_col)), WORD_SPLIT_PATTERN).alias("_rawtoks"),
     )
 
 
-def minhash_bands(
-    documents: DataFrame,
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def minhash_bands(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """LSH banding: hash each band of MINHASH_PERMS/MINHASH_BANDS
     consecutive signature slices. Output: (doc_id, band, band_hash).
 
@@ -179,29 +140,18 @@ def minhash_bands(
     8 min(substring) buffers → band-hash projection, which measured
     12.7 s at sf1.0 against ~0.5 s for this pass (the whole
     signatures/bands stage is CPU in either engine; Python's C md5 +
-    column-min beat the interpreted shingle lambda + wide agg by ~20x).
-    When a prebuilt ``shingle_frame`` is passed (jaccard_pairs shares
-    its persisted lineage), the same pass consumes the shingle arrays
-    directly."""
-    if shingles is not None:
-        # caller-shaped lineage (jaccard_pairs passes its persisted,
-        # already-spread shingle_frame) — don't re-exchange it
-        src = shingles.select("doc_id", "sh")
-        fn = _bands_of_shingles
-    else:
-        src = _raw_tokens(documents, text_col)
-
-        def fn(raw):
-            return _bands_of_shingles(_shingles_of_tokens(raw))
-
-    return row_map(src, fn, "band int, band_hash string")
+    column-min beat the interpreted shingle lambda + wide agg by ~20x)."""
+    return row_map(
+        _raw_tokens(documents, text_col),
+        lambda raw: _bands_of_shingles(_shingles_of_tokens(raw)),
+        "band int, band_hash string",
+    )
 
 
 def minhash_candidate_pairs(
     documents: DataFrame,
     text_col: str = "text",
     max_bucket: int = MINHASH_MAX_BUCKET,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidates: distinct doc pairs sharing any LSH band
     bucket. Output: (doc_a, doc_b), doc_a < doc_b.
@@ -221,7 +171,7 @@ def minhash_candidate_pairs(
     aggregation buffer ever materializes an uncapped bucket; the
     groupBy then reuses the window's hash partitioning (one exchange
     total). The DuckDB oracle applies the identical cap."""
-    bands = minhash_bands(documents, text_col, shingles=shingles)
+    bands = minhash_bands(documents, text_col)
     return _bucket_pairs(bands, ["band", "band_hash"], "doc_id", max_bucket)
 
 
@@ -366,60 +316,59 @@ def simhash_near_dups(documents: DataFrame, text_col: str = "text") -> DataFrame
     return simhash_pairs_from_fingerprints(sh)
 
 
-def jaccard_pairs(
-    documents: DataFrame,
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def jaccard_pairs(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact 3-word-shingle Jaccard for MinHash candidate pairs
     (verification stage of the near-dup pipeline). Output:
     (doc_a, doc_b, jaccard_pct BIGINT 0..100).
 
-    Single-lineage shape (round-2 verdict): the shingle frame is built
-    ONCE and persisted; the minhash→bands→pairs candidate side AND both
-    verification join sides read from that cache, so the corpus is
-    tokenized and shingled exactly once instead of three times. At
-    100 TB the same pattern holds with the persist swapped for a
-    parquet checkpoint of the shingle/signature frames.
+    One-pass shape: the minhash_bands row_map also emits each
+    document's distinct shingle set on every one of its band rows, so
+    a candidate pair is scored where its bucket forms it, as SimHash
+    scores Hamming: the corpus is tokenized and shingled once, no set
+    frame joins back, and nothing is persisted, so no cache entry
+    outlives the query. The set rides each of the document's
+    MINHASH_BANDS rows through the bucket exchange; a pair sharing
+    several bands is scored once per band and the final distinct keeps
+    one row. Docs too short to shingle have no bands, hence no pairs."""
 
-    Cache lifetime: one CacheManager entry per DISTINCT input corpus
-    per session (repeat calls on the same frame dedupe via plan
-    equality); the entry is exposed as ``result._persisted_shingles``
-    for callers to unpersist. Long-lived sessions sweeping many
-    corpora should pass their own (checkpointed) ``shingles`` frame
-    instead — then nothing is persisted here."""
-    sh = shingles if shingles is not None else shingle_frame(documents, text_col)
-    if shingles is None:
-        from pyspark import StorageLevel
+    def bands_and_set(raw):
+        sh = _shingles_of_tokens(raw)
+        shset = list(dict.fromkeys(sh))
+        return [(b, h, shset) for b, h in _bands_of_shingles(sh)]
 
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    # merge hint: the candidate frame's cardinality is unknowable to
-    # the planner (bucket fan-out); a broadcast guess is an unbounded
-    # driver build at scale — sort-merge joins stream instead
-    pairs = minhash_candidate_pairs(documents, text_col, shingles=sh).hint("merge")
-    sets_df = sh.select(
-        "doc_id", F.array_distinct(F.col("sh")).alias("shset")
-    ).filter(F.size("shset") > 0)
-    a = sets_df.alias("a")
-    b = sets_df.alias("b")
+    rows = row_map(
+        _raw_tokens(documents, text_col),
+        bands_and_set,
+        "band int, band_hash string, shset array<string>",
+    )
+    pairs = _bucket_pairs(
+        rows, ["band", "band_hash"], "doc_id", MINHASH_MAX_BUCKET, payload_cols=["shset"]
+    )
     inter = F.size(F.array_intersect(F.col("a.shset"), F.col("b.shset")))
     union = F.size(F.array_union(F.col("a.shset"), F.col("b.shset")))
-    result = (
-        pairs.join(a, pairs.doc_a == F.col("a.doc_id"))
-        .join(b, pairs.doc_b == F.col("b.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.lit(100.0) * inter / union).cast("long").alias("jaccard_pct"),
-        )
-    )
-    if shingles is None:
-        # cache entries live in the CacheManager until unpersisted;
-        # long-lived sessions invoking this repeatedly over DIFFERENT
-        # inputs should release the handle after consuming the result
-        # (identical inputs dedupe to one entry via plan equality)
-        result._persisted_shingles = sh
-    return result
+    return pairs.select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.round(F.lit(100.0) * inter / union).cast("long").alias("jaccard_pct"),
+    ).distinct()
+
+
+def _shingle_hashes(documents: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, s_h): one row per DISTINCT 3-word shingle of each
+    document, as the md5 hex of the shingle — the fixed-width key of
+    n-gram coverage and decontamination (no raw shingle text moves).
+    The same _raw_tokens → row_map pass as minhash_bands; hashlib md5
+    is byte-equal to the md5 the oracle twins use. Docs too short
+    to shingle emit no rows."""
+    import hashlib
+
+    def hashes(raw):
+        return [
+            (hashlib.md5(s.encode("utf-8")).hexdigest(),)
+            for s in dict.fromkeys(_shingles_of_tokens(raw))
+        ]
+
+    return row_map(_raw_tokens(documents, text_col), hashes, "s_h string")
 
 
 def ngram_dup_coverage(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -431,17 +380,14 @@ def ngram_dup_coverage(documents: DataFrame, text_col: str = "text") -> DataFram
     copied documents that MinHash whole-doc similarity misses.
 
     Scale shape: shingles hash to md5 before any shuffle (fixed-width
-    keys, no raw text moves); one groupBy with map-side partial agg
-    counts docs per shingle; the join back is keyed on the same hash —
-    sort-merge streams, nothing builds in one memory. Docs too short
-    to shingle report zeros via the left join.
+    keys, no raw text moves) and are already distinct per document
+    (_shingle_hashes; doc_id keys the corpus), so no dedup exchange
+    runs; one groupBy with map-side partial agg counts docs per
+    shingle; the join back is keyed on the same hash — sort-merge
+    streams, nothing builds in one memory. Docs too short to shingle
+    report zeros via the left join.
     Output: (doc_id, n_shingles, n_dup_shingles, dup_pct)."""
-    sh = (
-        shingle_frame(documents, text_col)
-        .select("doc_id", F.explode("sh").alias("s"))
-        .select("doc_id", F.md5("s").alias("s_h"))
-        .dropDuplicates(["doc_id", "s_h"])
-    )
+    sh = _shingle_hashes(documents, text_col)
     counts = sh.groupBy("s_h").agg(F.count("*").cast("long").alias("cnt"))
     per_doc = (
         sh.join(counts.hint("merge"), "s_h")
@@ -482,25 +428,17 @@ def decontamination_flags(
     Scale shape: the benchmark side is TINY by construction (eval sets
     are kilobytes against a 100 TB corpus), so its distinct shingle
     hashes broadcast and the corpus side never shuffles raw shingles —
-    scan → shingle → broadcast semi-join → one groupBy(doc) with
-    map-side partial agg (count_distinct). Docs too short to shingle
-    report zeros via the left join.
+    scan → shingle hashes → broadcast semi-join → one groupBy(doc)
+    with map-side partial agg (a plain count: _shingle_hashes is
+    already distinct per document). Docs too short to shingle report
+    zeros via the left join.
     Output: (doc_id, n_hits, contaminated)."""
-    bench = (
-        shingle_frame(benchmark, text_col)
-        .select(F.explode("sh").alias("s"))
-        .select(F.md5("s").alias("s_h"))
-        .distinct()
-    )
-    doc_sh = (
-        shingle_frame(documents, text_col)
-        .select("doc_id", F.explode("sh").alias("s"))
-        .select("doc_id", F.md5("s").alias("s_h"))
-    )
+    bench = _shingle_hashes(benchmark, text_col).select("s_h").distinct()
     hits = (
-        doc_sh.join(F.broadcast(bench), "s_h")
+        _shingle_hashes(documents, text_col)
+        .join(F.broadcast(bench), "s_h")
         .groupBy("doc_id")
-        .agg(F.count_distinct("s_h").cast("long").alias("n_hits"))
+        .agg(F.count("*").cast("long").alias("n_hits"))
     )
     return (
         documents.select("doc_id")

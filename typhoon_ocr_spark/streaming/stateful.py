@@ -12,7 +12,6 @@ emits the updated cumulative row for users present in the batch.
 
 from __future__ import annotations
 
-import re
 from typing import Iterable, Tuple
 
 import pandas as pd
@@ -28,8 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.textsql import WORD_SPLIT_PATTERN
-from ..operators.dedup import _bands_of_shingles, _shingles_of_tokens
+from ..operators.dedup import minhash_bands
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -129,17 +127,6 @@ def _first_seen(
 STREAM_BUCKET_CAP = 16
 
 
-def minhash_bands_py(text: str) -> list:
-    """Pure-Python twin of dedup.minhash_bands for ONE document: the
-    Python regex stands in for the JVM lower+split tokenizer; shingles,
-    slice minima and band hashes are the batch operator's own
-    per-document core. Parity with the batch operator is pinned by
-    tests/test_scale_paths.py::test_minhash_bands_py_parity."""
-    return _bands_of_shingles(
-        _shingles_of_tokens(re.split(WORD_SPLIT_PATTERN, (text or "").lower()))
-    )
-
-
 def _bucket_update(
     key: Tuple, frames: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
@@ -195,9 +182,11 @@ def streaming_near_dups(
     state_ttl_ms: int = 0,
 ) -> DataFrame:
     """Continuous MinHash near-dup candidates: each arriving document's
-    LSH bands (computed in an Arrow-batched pandas UDF — no shuffle of
-    text beyond the band grouping) are checked against the bucket
-    members remembered in keyed GroupState, so a near-duplicate of a
+    LSH bands (the batch dedup.minhash_bands pass itself — JVM tokens,
+    one mapInArrow row_map, so stream and batch share one tokenizer and
+    band core by construction; no shuffle of text beyond the band
+    grouping) are checked against the bucket members remembered in
+    keyed GroupState, so a near-duplicate of a
     document from ANY earlier micro-batch is flagged the moment it
     arrives. Output: (doc_a, doc_b, band, band_hash) in the INPUT id
     column's type — numeric ids order numerically, exactly like the
@@ -220,18 +209,6 @@ def streaming_near_dups(
     the bucket is idle — meant for continuous triggers, not
     availableNow drains (which keep scheduling batches while any
     timeout is pending)."""
-    from pyspark.sql.functions import pandas_udf
-
-    bands_type = ArrayType(
-        StructType(
-            [StructField("band", LongType()), StructField("band_hash", StringType())]
-        )
-    )
-
-    @pandas_udf(bands_type)
-    def bands_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(minhash_bands_py)
-
     id_type = stream.schema[doc_col].dataType
     out_schema = StructType(
         [
@@ -246,10 +223,11 @@ def streaming_near_dups(
     def update_with_ttl(key, frames, state):
         return _bucket_update_ttl(key, frames, state, state_ttl_ms)
 
-    bands = stream.select(
-        F.col(doc_col).alias("doc_id"),
-        F.explode(bands_udf(F.col(text_col))).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"))
+    # band as bigint: the state key schema stays (band bigint,
+    # band_hash string), so existing checkpoints keep loading
+    bands = minhash_bands(
+        stream.select(F.col(doc_col).alias("doc_id"), text_col), text_col
+    ).withColumn("band", F.col("band").cast("long"))
     return bands.groupBy("band", "band_hash").applyInPandasWithState(
         update_with_ttl if state_ttl_ms > 0 else _bucket_update,
         outputStructType=out_schema,
