@@ -388,3 +388,142 @@ def test_cosine_topk_ranks_zero_norm_first(spark, monkeypatch):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = similarity.cosine_topk(emb, query_every=every, k=k).collect()
     assert sorted(tuple(r) for r in got) == ref
+
+
+def _routing(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_lsh_routing_skips_degenerate_vectors(spark):
+    """A null, short or null-element vector gets no routing row (as
+    cosine_topk skips it) and leaves every clean vector's rows as they
+    are without it: it no longer lands in the all-'0' bucket of every
+    table, nor gets a null multi-probe cell."""
+    from typhoon_ocr_spark.sources.fixtures import planted_embeddings
+
+    rows = planted_embeddings(300, dims=64, cohort_size=8, noise=0.15)
+    schema = "vec_id long, embedding array<float>"
+    bad = [(1000, None), (1100, [0.5] * 10), (1200, [None] + [0.5] * 63)]
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + bad, schema)
+    for op in (
+        lambda e: similarity.lsh_sign_buckets(e, n_dims=64),
+        lambda e: similarity.lsh_table_buckets(e, n_dims=64),
+        lambda e: similarity.lsh_query_probes(e, n_dims=64, multiprobe=1),
+    ):
+        got = dirty.transform(op).collect()
+        assert not {r[0] for r in got} & {1000, 1100, 1200}
+        want = _routing(clean.transform(op))
+        assert sorted(tuple(r) for r in got) == want and want
+
+
+def test_lsh_routing_bit_parity_with_jvm_fold(spark):
+    """The NumPy routing pass must route exactly like the JVM fold
+    ``_dot`` against the plane literals: same sign bits (NaN >= 0 as
+    Spark orders it) and the same multi-probe flip (lowest |projection|,
+    lowest plane index on a tie, never a NaN unless all are), on
+    planted vectors plus a NaN coordinate, +0.0/-0.0 vectors and a
+    vector whose projection onto one plane is exactly 0.0."""
+    from functools import reduce
+
+    from typhoon_ocr_spark.sources.fixtures import planted_embeddings
+
+    dims, ppt = 8, similarity.ANN_LSH_PLANES_PER_TABLE
+    planes = similarity.lsh_plane_signs(dims, similarity.ANN_LSH_TABLES * ppt)
+    on_plane = [s if i < dims // 2 else -s for i, s in enumerate(planes[1])]
+    rows = planted_embeddings(200, dims=dims, cohort_size=8, noise=0.15) + [
+        (1001, [0.0] * dims),
+        (1002, [-0.0] * dims),
+        (1003, [0.3, float("nan")] + [0.5] * (dims - 2)),
+        (1004, on_plane),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    def jvm_reference(flip_cells):
+        e = F.transform("embedding", lambda x: x.cast("double"))
+        projs = [
+            similarity._dot(F.col("e"), F.array(*[F.lit(s) for s in signs]))
+            for signs in planes
+        ]
+
+        def bucket(ps, flip=None):
+            return F.concat(*[
+                F.when(p >= 0, F.lit("0" if j == flip else "1"))
+                .otherwise(F.lit("1" if j == flip else "0"))
+                for j, p in enumerate(ps)
+            ])
+
+        cells = []
+        for t in range(similarity.ANN_LSH_TABLES):
+            ps = projs[t * ppt:(t + 1) * ppt]
+            cells.append((t, bucket(ps)))
+            if flip_cells:
+                absv = [F.abs(p) for p in ps]
+                flip = None
+                for j in range(ppt):
+                    cond = reduce(lambda a, b: a & b, [
+                        absv[i] > absv[j] if i < j else absv[i] >= absv[j]
+                        for i in range(ppt) if i != j
+                    ])
+                    flip = (F.when if flip is None else flip.when)(cond, bucket(ps, j))
+                cells.append((t, flip))
+        tb = F.explode(F.array(*[
+            F.struct(F.lit(t).cast("int").alias("t"), b.alias("bucket")) for t, b in cells
+        ]))
+        return _routing(
+            emb.select("vec_id", e.alias("e"))
+            .select("vec_id", tb.alias("tb"))
+            .select("vec_id", "tb.t", "tb.bucket")
+        )
+
+    own, probed = jvm_reference(False), jvm_reference(True)
+    assert own and len(probed) == 2 * len(own)
+    assert _routing(similarity.lsh_table_buckets(emb, n_dims=dims)) == own
+    for multiprobe, ref in ((0, own), (1, probed)):
+        got = similarity.lsh_query_probes(
+            emb, query_every=1, n_dims=dims, multiprobe=multiprobe
+        )
+        assert _routing(got) == ref
+    # the single-table planes are the first ANN_SIGN_PLANES of the family
+    assert similarity.ANN_SIGN_PLANES == 2 * ppt
+    by_vec = {(v, t): b for v, t, b in own}
+    assert _routing(similarity.lsh_sign_buckets(emb, n_dims=dims)) == sorted(
+        (v, by_vec[(v, 0)] + by_vec[(v, 1)]) for v, t, _ in own if t == 0
+    )
+
+
+def test_lsh_query_probes_rejects_bad_multiprobe(spark):
+    with pytest.raises(ValueError, match="multiprobe"):
+        similarity.lsh_query_probes(_emb(spark), n_dims=64, multiprobe=2)
+
+
+@pytest.mark.parametrize(
+    "op,bound",
+    # a fifth of the py4j calls these builds took with per-plane
+    # literal folds (3,255 / 17,475 / 42,548 at sf0.1, warm)
+    [("lsh_sign_buckets", 651), ("embedding_near_dups", 3495),
+     ("lsh_bucketed_topk", 8509)],
+)
+def test_lsh_builds_take_few_py4j_calls(spark, monkeypatch, op, bound):
+    """Building a sign-LSH query is a handful of JVM round trips, not
+    one per plane literal: count ClientServerConnection.send_command
+    calls over a warm build with the width given."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    emb = _emb(spark)
+    build = getattr(similarity, op)
+    build(emb, n_dims=64)
+    gc.collect()
+    calls = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counted(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(cs.ClientServerConnection, "send_command", counted)
+        build(emb, n_dims=64)
+    assert 0 < calls[0] <= bound, calls[0]

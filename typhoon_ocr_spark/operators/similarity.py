@@ -22,16 +22,19 @@ Scale notes:
 - bucket pair fan-out is OOM-safe: window-count cap before any
   collect_list (shared _bucket_pairs helper);
 - norms are precomputed once per vector;
-- exact brute-force scoring (``cosine_topk``) is one vectorized NumPy
-  mapInArrow pass, bit-identical to the JVM fold; the bucketed, IVF
-  and PQ operators still score with the JVM higher-order-function
-  fold ``_dot`` (zip_with + aggregate).
+- exact brute-force scoring (``cosine_topk``) and the sign-LSH
+  routing projections are vectorized NumPy mapInArrow passes over one
+  dot kernel (``_np_dots``), bit-identical to the JVM fold; the
+  near-dup verify, the bucketed top-k and the IVF and PQ operators
+  still score with the JVM higher-order-function fold ``_dot``
+  (zip_with + aggregate).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..functions.textsql import ANN_QUERY_EVERY, ANN_TOP_K
@@ -57,8 +60,13 @@ ANN_SIGN_PLANES = 8  # hyperplanes of the single-table lsh_sign_buckets
 
 def _probe_dims(df) -> int:
     """Actual embedding width, 0 for an empty/null-headed frame (a
-    None-subscript here used to crash the driver on empty corpora)."""
-    row = df.filter(F.col("e").isNotNull()).select(F.size("e").alias("n")).first()
+    None-subscript here used to crash the driver on empty corpora).
+    One tiny driver job: callers that know the width pass ``n_dims``
+    instead. NEVER default the width to a constant: every vector of
+    another width is skipped (routing) or scored null (``_dot``)."""
+    row = df.filter(F.col("embedding").isNotNull()).select(
+        F.size("embedding").alias("n")
+    ).first()
     return int(row["n"]) if row is not None and row["n"] is not None else 0
 
 
@@ -194,14 +202,23 @@ def _score_chunk(cand_e, cand_ids, q_ids, qm, qn, np):
     -inf (dropped before emit — the join condition vec_id != query_id
     removed them entirely). Returns (B, Q) scores."""
     nrm = _np_row_norms(cand_e)
-    num = np.zeros((cand_e.shape[0], qm.shape[0]), dtype=np.float64)
-    for d in range(cand_e.shape[1]):
-        t = np.multiply.outer(cand_e[:, d], qm[:, d])
-        num = num + t
     den = np.multiply.outer(nrm, qn)
-    s = num / den
+    s = _np_dots(cand_e, qm, np) / den
     s[cand_ids[:, None] == q_ids[None, :]] = -np.inf
     return s
+
+
+def _np_dots(a, b, np):
+    """(len(a), len(b)) matrix of the row dots a[i]·b[j], each the
+    exact FP operation sequence of the JVM fold ``_dot`` (see
+    _np_row_norms): per dimension, in order, one rounded multiply and
+    one rounded add. The one dot kernel of the exact top-k scores and
+    the sign-LSH projections."""
+    out = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
+    for d in range(a.shape[1]):
+        t = np.multiply.outer(a[:, d], b[:, d])
+        out = out + t
+    return out
 
 
 def _topk_stream(batches, q_ids, qm, qn, k, np):
@@ -245,21 +262,10 @@ def _topk_stream(batches, q_ids, qm, qn, k, np):
                 keep_n.append(ids[order][valid])
 
     for batch in batches:
-        tbl = pa.Table.from_batches([batch])
-        vid = tbl.column("vec_id")
-        emb = tbl.column("embedding")
-        ids = vid.to_numpy(zero_copy_only=False).astype(np.int64)
-        mat = _list_col_matrix(emb, dims, np)
-        if mat is None:  # ragged/null rows: densify the clean subset
-            keep_rows = []
-            raw = emb.to_pylist()
-            for i, v in enumerate(raw):
-                if v is not None and len(v) == dims and None not in v:
-                    keep_rows.append(i)
-            mat = np.array(
-                [[float(x) for x in raw[i]] for i in keep_rows], dtype=np.float64
-            ).reshape(len(keep_rows), dims)
-            ids = ids[keep_rows]
+        ids, mat = _list_col_matrix(
+            batch.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64),
+            batch.column("embedding"), dims, np,
+        )
         if len(ids):
             pend_ids.append(ids)
             pend_vecs.append(mat)
@@ -278,22 +284,26 @@ def _topk_stream(batches, q_ids, qm, qn, k, np):
         )
 
 
-def _list_col_matrix(chunked, dims, np):
-    """(rows, dims) float64 matrix from an Arrow list<float> column, or
-    None when any row is null/ragged or holds a null element (caller
-    densifies the clean rows)."""
-    import pyarrow as pa
-
-    mats = []
-    for chunk in chunked.chunks if hasattr(chunked, "chunks") else [chunked]:
-        if chunk.null_count or chunk.values.null_count:
-            return None
-        offs = chunk.offsets.to_numpy(zero_copy_only=False)
-        if len(offs) > 1 and not (np.diff(offs) == dims).all():
-            return None
-        flat = chunk.values.to_numpy(zero_copy_only=False).astype(np.float64)
-        mats.append(flat[int(offs[0]):int(offs[-1])].reshape(-1, dims))
-    return np.concatenate(mats) if len(mats) != 1 else mats[0]
+def _list_col_matrix(ids, emb, dims, np):
+    """(kept ids, (rows, dims) float64 matrix) of one Arrow batch: the
+    rows of the list<float> column ``emb`` holding exactly ``dims``
+    non-null elements, and their entries of ``ids`` (anything with
+    ``take``). Null, null-element and ragged vectors are skipped — the
+    one rule for degenerate vectors of every NumPy similarity pass."""
+    offs = emb.offsets.to_numpy(zero_copy_only=False)
+    keep = np.diff(offs) == dims
+    if emb.null_count:
+        keep &= emb.is_valid().to_numpy(zero_copy_only=False)
+    vals = emb.values  # offsets index this whole child array
+    if vals.null_count:
+        holes = np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))
+        holes = np.concatenate(([0], holes))
+        keep &= holes[offs[1:]] == holes[offs[:-1]]
+    flat = vals.to_numpy(zero_copy_only=False).astype(np.float64)
+    if keep.all():
+        return ids, flat[offs[0]:offs[-1]].reshape(len(keep), dims)
+    rows = np.flatnonzero(keep)
+    return ids.take(rows), flat[offs[rows][:, None] + np.arange(dims)]
 
 
 NEAR_DUP_COSINE = 0.42  # calibrated to the synthetic corpus (max ~0.51)
@@ -318,60 +328,64 @@ def embedding_near_dups_exact(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _doubles(embeddings: DataFrame, n_dims: int | None,
-             id_col: str = "vec_id") -> tuple:
-    """(id_col, e) with e the embedding cast to doubles, and its width:
-    ``n_dims`` when given, else probed (one tiny driver job; 0 for an
-    empty or all-null frame). NEVER default the width to a constant:
-    zip_with against a wrong-width plane literal yields null dots →
-    every bit '0' → one global bucket, silently."""
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    vid = F.col("vec_id") if id_col == "vec_id" else F.col("vec_id").alias(id_col)
-    df = embeddings.select(vid, e.alias("e"))
-    return df, (_probe_dims(df) if n_dims is None else n_dims)
+def _lsh_routing(embeddings: DataFrame, n_dims: int | None, n_tables: int,
+                 planes_per_table: int, multiprobe: int = 0,
+                 id_col: str = "vec_id") -> DataFrame:
+    """The sign-LSH front every routing operator composes: one
+    mapInArrow pass over (id_col, embedding) emitting (id_col, t INT,
+    bucket) rows. Table t takes planes [t*ppt, (t+1)*ppt) of one
+    deterministic ``lsh_plane_signs`` family, so the DuckDB oracle can
+    inline identical constants; the projections are _np_dots folds,
+    bit-identical to the JVM fold ``_dot``. Bit j of a bucket is '1'
+    iff projection j >= 0, NaN included (Spark orders NaN above every
+    double). With ``multiprobe`` each table also emits the bucket with
+    its lowest-|projection| bit flipped: ties go to the lowest plane
+    index, and a NaN is never lowest unless every projection is NaN.
+    Null, null-element and wrong-width vectors are skipped
+    (_list_col_matrix); the width is ``n_dims`` or, when None, probed
+    (_probe_dims). A 0-width frame routes nothing."""
+    import numpy as np
 
-
-def _sign_tables(embeddings: DataFrame, n_dims: int | None, n_tables: int,
-                 planes_per_table: int, id_col: str = "vec_id") -> tuple:
-    """The sign-LSH front every routing operator composes: the
-    ``_doubles`` frame and, per table, the projections of e onto its
-    hyperplanes — table t takes planes [t*ppt, (t+1)*ppt) of one
-    deterministic family, so the DuckDB oracle can inline identical
-    constants. No tables for a 0-width (empty) frame."""
-    df, n_dims = _doubles(embeddings, n_dims, id_col)
-    if not n_dims:
-        return df, []
-    projs = [
-        _dot(F.col("e"), F.array(*[F.lit(s) for s in signs]))
-        for signs in lsh_plane_signs(n_dims, n_tables * planes_per_table)
-    ]
-    return df, [
-        projs[t * planes_per_table:(t + 1) * planes_per_table] for t in range(n_tables)
-    ]
-
-
-def _bucket(projs: list, flip: int | None = None) -> Column:
-    """Bucket string of one table: one sign bit per projection ('1' iff
-    >= 0), concatenated; bit ``flip`` inverted (a multi-probe cell)."""
-    return F.concat(*[
-        F.when(p >= 0, F.lit("0" if j == flip else "1"))
-        .otherwise(F.lit("1" if j == flip else "0"))
-        for j, p in enumerate(projs)
+    src = embeddings.select(F.col("vec_id").alias(id_col), "embedding")
+    dims = _probe_dims(src) if n_dims is None else n_dims
+    planes = np.array(lsh_plane_signs(dims, n_tables * planes_per_table))
+    schema = StructType([
+        src.schema[id_col],
+        StructField("t", IntegerType()),
+        StructField("bucket", StringType()),
     ])
 
+    def route(batches):
+        import numpy as _np
+        import pyarrow as pa
 
-def _routing_rows(df: DataFrame, id_col: str, cells: list) -> DataFrame:
-    """(id_col, t, bucket): one row per (table, bucket) cell of
-    ``cells`` = [(t, bucket Column)], exploded in one pass over ``df``;
-    the empty routing table when there are no cells (empty corpus)."""
-    if not cells:
-        return df.select(
-            id_col, F.lit(0).cast("int").alias("t"), F.lit("").alias("bucket")
-        ).limit(0)
-    rows = [F.struct(F.lit(t).cast("int").alias("t"), b.alias("bucket")) for t, b in cells]
-    return df.select(
-        id_col, F.explode(F.array(*rows)).alias("tb")
-    ).select(id_col, "tb.t", "tb.bucket")
+        for batch in batches:
+            ids, mat = _list_col_matrix(batch.column(0), batch.column(1), dims, _np)
+            n = len(mat)
+            if not (n and dims):
+                continue
+            p = _np_dots(mat, planes, _np).reshape(n, n_tables, planes_per_table)
+            bits = _np.isnan(p) | (p >= 0)
+            cells = [bits]
+            if multiprobe:
+                a = _np.abs(p)  # fmin skips NaN: an all-NaN table flips bit 0
+                low = _np.argmax(a == _np.fmin.reduce(a, axis=2, keepdims=True), axis=2)
+                cells.append(bits ^ (_np.arange(planes_per_table) == low[..., None]))
+            chars = (_np.stack(cells, axis=2) + ord("0")).astype(_np.uint8)
+            per_row = n_tables * len(cells)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(_np.repeat(_np.arange(n), per_row)),
+                    pa.array(
+                        _np.tile(_np.repeat(_np.arange(n_tables), len(cells)), n),
+                        type=pa.int32(),
+                    ),
+                    pa.array(chars.view(f"S{planes_per_table}").ravel().astype(str)),
+                ],
+                names=[id_col, "t", "bucket"],
+            )
+
+    return src.mapInArrow(route, schema)
 
 
 def lsh_table_buckets(embeddings: DataFrame, n_dims: int | None = None) -> DataFrame:
@@ -380,13 +394,12 @@ def lsh_table_buckets(embeddings: DataFrame, n_dims: int | None = None) -> DataF
     Output keeps the id only — vectors are re-joined AFTER candidate
     dedup so the bucket shuffle never carries embeddings.
 
-    ``n_dims=None`` probes the actual width (one tiny driver job);
-    pass it explicitly (the driver contract passes 64) to skip the
-    probe."""
-    df, tables = _sign_tables(
-        embeddings, n_dims, ANN_LSH_TABLES, ANN_LSH_PLANES_PER_TABLE
-    )
-    return _routing_rows(df, "vec_id", [(t, _bucket(p)) for t, p in enumerate(tables)])
+    A vector that is null, holds a null element or is not ``n_dims``
+    wide gets no routing row in any table (as ``cosine_topk`` skips
+    it), so it is never anyone's candidate. ``n_dims=None`` probes the
+    actual width (one tiny driver job); pass it explicitly (the driver
+    contract passes 64) to skip the probe."""
+    return _lsh_routing(embeddings, n_dims, ANN_LSH_TABLES, ANN_LSH_PLANES_PER_TABLE)
 
 
 def lsh_query_probes(
@@ -399,33 +412,15 @@ def lsh_query_probes(
     table, the query's own bucket plus (multiprobe=1) the bucket with
     its lowest-|projection| bit flipped. Tie on |projection| breaks to
     the lowest plane index — the DuckDB twin implements the identical
-    argmin, so candidate sets match bit-for-bit.
+    argmin, so candidate sets match bit-for-bit. Degenerate query
+    vectors are skipped as in ``lsh_table_buckets``.
     Output: (query_id, t, bucket)."""
-    assert multiprobe in (0, 1), "oracle twin mirrors 0/1 only"
-    df, tables = _sign_tables(
-        embeddings.filter(F.col("vec_id") % query_every == 0),
-        n_dims, ANN_LSH_TABLES, ANN_LSH_PLANES_PER_TABLE, id_col="query_id",
+    if multiprobe not in (0, 1):
+        raise ValueError(f"multiprobe must be 0 or 1, got {multiprobe!r}")
+    return _lsh_routing(
+        embeddings.filter(F.col("vec_id") % query_every == 0), n_dims,
+        ANN_LSH_TABLES, ANN_LSH_PLANES_PER_TABLE, multiprobe, id_col="query_id",
     )
-    cells = []
-    for t, projs in enumerate(tables):
-        cells.append((t, _bucket(projs)))
-        if multiprobe:
-            absv = [F.abs(p) for p in projs]
-
-            def argmin_cond(j: int):
-                cond = F.lit(True)
-                for i in range(len(projs)):
-                    if i < j:
-                        cond = cond & (absv[i] > absv[j])
-                    elif i > j:
-                        cond = cond & (absv[i] >= absv[j])
-                return cond
-
-            flip = F.when(argmin_cond(0), _bucket(projs, flip=0))
-            for j in range(1, len(projs)):
-                flip = flip.when(argmin_cond(j), _bucket(projs, flip=j))
-            cells.append((t, flip))
-    return _routing_rows(df, "query_id", cells)
 
 
 def embedding_near_dups(
@@ -481,7 +476,8 @@ def lsh_bucketed_topk(
     ``cosine_topk`` is reported in BENCH.md."""
     # resolve the width once: lsh_table_buckets and lsh_query_probes
     # would otherwise each fire their own driver-side width-probe job
-    _, n_dims = _doubles(embeddings, n_dims)
+    if n_dims is None:
+        n_dims = _probe_dims(embeddings)
     buckets = lsh_table_buckets(embeddings, n_dims=n_dims)
     qb = lsh_query_probes(
         embeddings, query_every=query_every, n_dims=n_dims, multiprobe=multiprobe
@@ -534,11 +530,9 @@ def lsh_sign_buckets(embeddings: DataFrame, n_dims: int | None = None) -> DataFr
     table, no explode). Bucket-join variant of ANN: at 10^12 vectors,
     equal buckets become the join key and brute force runs only within
     buckets. Pass ``n_dims`` explicitly to skip the driver-side width
-    probe. Output: (vec_id, bucket)."""
-    df, tables = _sign_tables(embeddings, n_dims, 1, ANN_SIGN_PLANES)
-    if not tables:  # empty corpus: empty result, not a crash
-        return df.select("vec_id", F.lit("").alias("bucket")).limit(0)
-    return df.select("vec_id", _bucket(tables[0]).alias("bucket"))
+    probe. Degenerate vectors are skipped as in ``lsh_table_buckets``.
+    Output: (vec_id, bucket)."""
+    return _lsh_routing(embeddings, n_dims, 1, ANN_SIGN_PLANES).select("vec_id", "bucket")
 
 
 IVF_CENTROID_EVERY = 50
@@ -746,7 +740,7 @@ def train_ivf_centroids(embeddings: DataFrame, n_dims: int | None = None) -> lis
     exceeds IVF_MAX_CENTROIDS (see _effective_every)."""
     base = _quantized(embeddings)
     if n_dims is None:
-        n_dims = _probe_dims(base)
+        n_dims = _probe_dims(embeddings)
     if not n_dims:
         return []
     cents = _lloyd(
