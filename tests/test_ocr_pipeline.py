@@ -190,6 +190,12 @@ def test_ocr_document_end_to_end_under_runner(spark, endpoint, tmp_path):
     assert "plain html doc" in docs["https://t/html"]["extracted_text"]
     assert not docs["https://t/junk"]["success"]
 
+    # 4. the bucket counters are taken after the transform: the failed
+    # model calls of the poison pages count as errors, with the junk row
+    n_poison = sum(p for plist in prompts.values() for _, _, p in plist)
+    assert n_poison == 1
+    assert sum(m["n_error"] for m in job.metrics()) == n_poison + 1
+
 
 def test_ocr_document_resume_no_duplicate_calls(spark, tmp_path):
     """Crash after the first bucket commit, rerun: committed pages'

@@ -508,13 +508,20 @@ def test_lsh_builds_take_few_py4j_calls(spark, monkeypatch, op, bound):
     """Building a sign-LSH query is a handful of JVM round trips, not
     one per plane literal: count ClientServerConnection.send_command
     calls over a warm build with the width given."""
+    emb = _emb(spark)
+    build = getattr(similarity, op)
+    calls = _warm_build_calls(monkeypatch, lambda: build(emb, n_dims=64))
+    assert 0 < calls <= bound, calls
+
+
+def _warm_build_calls(monkeypatch, build) -> int:
+    """py4j round trips (ClientServerConnection.send_command calls) of
+    the second of two ``build()`` calls."""
     import gc
 
     import py4j.clientserver as cs
 
-    emb = _emb(spark)
-    build = getattr(similarity, op)
-    build(emb, n_dims=64)
+    build()
     gc.collect()
     calls = [0]
     send = cs.ClientServerConnection.send_command
@@ -525,5 +532,66 @@ def test_lsh_builds_take_few_py4j_calls(spark, monkeypatch, op, bound):
 
     with monkeypatch.context() as m:
         m.setattr(cs.ClientServerConnection, "send_command", counted)
-        build(emb, n_dims=64)
-    assert 0 < calls[0] <= bound, calls[0]
+        build()
+    return calls[0]
+
+
+def test_ivf_probed_topk_build_takes_few_py4j_calls(spark, monkeypatch):
+    """IVF probes are ranked by the ``_topk`` window over the broadcast
+    centroid table, not a literal C×(D+3) centroid array sorted by a
+    comparator: a warm build (training included) at 40 centroids took
+    23,600-28,300 round trips with the literal array."""
+    from typhoon_ocr_spark.sources.fixtures import planted_embeddings
+
+    emb = spark.createDataFrame(
+        planted_embeddings(2000), "vec_id long, embedding array<float>"
+    )
+    calls = _warm_build_calls(
+        monkeypatch, lambda: similarity.ivf_probed_topk(emb, n_dims=64)
+    )
+    assert 0 < calls <= 15000, calls
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pq_training_runs_no_more_jobs_than_ivf(spark):
+    """All PQ subspaces train in one Lloyd's run keyed by (m, cid), so
+    training PQ_SUBSPACES codebooks fires no more jobs than training
+    the IVF cells on the same frame (one run per subspace fired about
+    PQ_SUBSPACES times as many)."""
+    emb = _emb(spark)
+    ivf = _job_count(spark, lambda: similarity.train_ivf_centroids(emb, n_dims=64))
+    pq = _job_count(spark, lambda: similarity.train_pq_codebooks(emb, n_dims=64))
+    assert 0 < pq <= ivf, (pq, ivf)
+
+
+def test_train_pq_codebooks_rejects_uneven_dims(spark):
+    with pytest.raises(ValueError, match="n_dims"):
+        similarity.train_pq_codebooks(_emb(spark), n_dims=63)
+
+
+def test_probed_width_is_the_common_width(spark):
+    """One ragged vector read first must not set the width of a pass:
+    the probed width is the most common clean length, so routing with
+    it equals routing with the width given."""
+    from typhoon_ocr_spark.sources.fixtures import planted_embeddings
+
+    rows = [(0, [0.5] * 10)] + planted_embeddings(200)[1:]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+    probed = sorted(tuple(r) for r in similarity.lsh_table_buckets(emb).collect())
+    given = sorted(
+        tuple(r) for r in similarity.lsh_table_buckets(emb, n_dims=64).collect()
+    )
+    assert probed == given and len(given) == 199 * similarity.ANN_LSH_TABLES

@@ -27,7 +27,12 @@ Scale notes:
   dot kernel (``_np_dots``), bit-identical to the JVM fold; the
   near-dup verify, the bucketed top-k and the IVF and PQ operators
   still score with the JVM higher-order-function fold ``_dot``
-  (zip_with + aggregate).
+  (zip_with + aggregate);
+- the IVF cells and the PQ codebooks train in one integer-space
+  Lloyd's loop (``_lloyd``) keyed by a list of columns: all PQ
+  subspaces train together keyed by (m, cid), and IVF probes are the
+  ``_topk`` of the query cohort scored against the broadcast centroid
+  table, the shapes of their DuckDB twins.
 """
 
 from __future__ import annotations
@@ -59,15 +64,22 @@ ANN_SIGN_PLANES = 8  # hyperplanes of the single-table lsh_sign_buckets
 
 
 def _probe_dims(df) -> int:
-    """Actual embedding width, 0 for an empty/null-headed frame (a
-    None-subscript here used to crash the driver on empty corpora).
-    One tiny driver job: callers that know the width pass ``n_dims``
-    instead. NEVER default the width to a constant: every vector of
-    another width is skipped (routing) or scored null (``_dot``)."""
-    row = df.filter(F.col("embedding").isNotNull()).select(
-        F.size("embedding").alias("n")
-    ).first()
-    return int(row["n"]) if row is not None and row["n"] is not None else 0
+    """Actual embedding width by ``_common_width`` over the vectors
+    with no null element, so one ragged vector never sets a pass's
+    width; 0 when there is none. One driver action: callers that know
+    the width pass ``n_dims`` instead. NEVER default the width to a
+    constant: every vector of another width is skipped (routing) or
+    scored null (``_dot``)."""
+    clean = F.forall("embedding", lambda x: x.isNotNull())
+    rows = df.filter(clean).groupBy(F.size("embedding").alias("n")).count().collect()
+    return _common_width({r["n"]: r["count"] for r in rows})
+
+
+def _common_width(counts) -> int:
+    """The one width rule, of the width probe and the exact top-k's
+    query cohort: the most common length in {length: count}, ties to
+    the longest; 0 for no vectors."""
+    return max(counts, key=lambda n: (counts[n], n), default=0)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -167,10 +179,7 @@ def _clean_query_rows(rows):
     from collections import Counter
 
     ok = [r for r in rows if r[1] is not None and None not in r[1]]
-    lens = Counter(len(r[1]) for r in ok)
-    if not lens:
-        return []
-    dims = max(lens, key=lambda n: (lens[n], n))
+    dims = _common_width(Counter(len(r[1]) for r in ok))
     return [r for r in ok if len(r[1]) == dims]
 
 
@@ -567,12 +576,12 @@ MICRO = 1_000_000.0
 SCORE_SCALE = 1_000_000_000_000.0
 
 # Product quantization: split the vector into PQ_SUBSPACES contiguous
-# sub-vectors; each gets its own codebook (trained per subspace by the
-# same integer-space Lloyd's, seeded from the deterministic cohort). A
-# vector is stored as PQ_SUBSPACES small codes — at 10^12 vectors the
-# search scans CODES (a few bytes/vector), not raw floats; queries
-# score candidates via ADC (asymmetric distance: per-subspace lookup
-# tables of query-to-centroid dots, summed).
+# sub-vectors; each gets its own codebook (all trained in one run of the
+# integer-space Lloyd's keyed by (m, cid), seeded from the deterministic
+# cohort). A vector is stored as PQ_SUBSPACES small codes — at 10^12
+# vectors the search scans CODES (a few bytes/vector), not raw floats;
+# queries score candidates via ADC (asymmetric distance: per-subspace
+# lookup tables of query-to-centroid dots, summed).
 PQ_SUBSPACES = 4
 
 # ADC quantization loses within-cohort order (cohort-mates share codes,
@@ -595,19 +604,21 @@ def _l2(a: Column, b: Column) -> Column:
 
 
 def _subspace_rows(frame: DataFrame, id_alias: str, n_dims: int) -> DataFrame:
-    """(id, m, se): one row per (vector, subspace) with the sub-vector.
-    Requires n_dims % PQ_SUBSPACES == 0."""
+    """(id, m, se [, sq]): one row per (vector, subspace) with the
+    sub-vector of ``e``, and of the integer ``qe`` as ``sq`` when the
+    frame has it (training sums it). Requires n_dims % PQ_SUBSPACES == 0."""
     width = n_dims // PQ_SUBSPACES
+    cols = [(c, a) for c, a in (("e", "se"), ("qe", "sq")) if c in frame.columns]
     subs = [
         F.struct(
             F.lit(m).cast("int").alias("m"),
-            F.slice(F.col("e"), m * width + 1, width).alias("se"),
+            *[F.slice(F.col(c), m * width + 1, width).alias(a) for c, a in cols],
         )
         for m in range(PQ_SUBSPACES)
     ]
     return frame.select(
         F.col("vec_id").alias(id_alias), F.explode(F.array(*subs)).alias("s")
-    ).select(id_alias, "s.m", "s.se")
+    ).select(id_alias, "s.m", *[f"s.{a}" for _, a in cols])
 
 
 def _quantized(embeddings: DataFrame) -> DataFrame:
@@ -634,19 +645,6 @@ def _py_norm(coords: list) -> float:
     import math
 
     return math.sqrt(acc)
-
-
-def _cent_array(centroids: list) -> Column:
-    """Literal array<struct<cid,ce,cn>> from [(cid, coords, norm)].
-    C·D literals constant-fold once — per-row cost is the fold itself."""
-    return F.array(*[
-        F.struct(
-            F.lit(int(cid)).cast("long").alias("cid"),
-            F.array(*[F.lit(float(x)) for x in ce]).alias("ce"),
-            F.lit(float(cn)).cast("double").alias("cn"),
-        )
-        for cid, ce, cn in centroids
-    ])
 
 
 def _centroid_frame(spark, centroids: list) -> DataFrame:
@@ -698,26 +696,35 @@ def _assign_cosine(base: DataFrame, centroids: list, carry: list = ()) -> DataFr
     )
 
 
-def _lloyd(frame: DataFrame, every: int, seed_col: str, assign, key: str,
+def _lloyd(frame: DataFrame, every: int, seed_col: str, assign, key: list,
            int_col: str, width: int) -> list:
     """Integer-space Lloyd's shared by the IVF cells and the PQ
-    sub-codebooks: seed [(cid, coords)] from the deterministic cohort's
-    ``seed_col`` (vec_id % every == 0; cluster ids stay the seed
-    vec_ids), then IVF_TRAIN_ITERS rounds of ``assign(cents)`` (a frame
-    keyed by cluster ``key`` carrying the BIGINT ``int_col`` vector)
-    followed by a map-side-partial groupBy of exact INTEGER coordinate
-    sums. Only the C×(width+1) aggregate rows reach the driver — the
-    per-iteration driver materialization of C centroids is the k-means
-    contract (MLlib's KMeans does the same). Empty clusters keep their
-    previous centroid. Sorted by cid; [] when the cohort is empty."""
-    seeds = frame.filter(F.col("vec_id") % every == 0).select("vec_id", seed_col).collect()
-    cents = sorted((int(r["vec_id"]), [float(x) for x in r[seed_col]]) for r in seeds)
+    codebooks. Clusters are keyed by the columns ``key``: the last is
+    the cluster id, the seed vec_id of the deterministic cohort
+    (vec_id % every == 0), and any before it are columns of ``frame``
+    that train side by side in the same run (PQ's subspace m). Seeds
+    [(*key, coords)] come from the cohort's ``seed_col``; then
+    IVF_TRAIN_ITERS rounds of ``assign(cents)`` (a frame keyed by
+    ``key`` carrying the BIGINT ``int_col`` vector) followed by a
+    map-side-partial groupBy of exact INTEGER coordinate sums. Only the
+    C×(width+1) aggregate rows reach the driver — the per-iteration
+    driver materialization of C centroids is the k-means contract
+    (MLlib's KMeans does the same). Empty clusters keep their previous
+    centroid. Sorted by key; [] when the cohort is empty."""
+    seeds = (
+        frame.filter(F.col("vec_id") % every == 0)
+        .select(*key[:-1], "vec_id", seed_col)
+        .collect()
+    )
+    cents = sorted(
+        (*[int(x) for x in r[:-1]], [float(x) for x in r[-1]]) for r in seeds
+    )
     if not cents:
         return []
     for _ in range(IVF_TRAIN_ITERS):
         sums = (
             assign(cents)
-            .groupBy(key)
+            .groupBy(*key)
             .agg(
                 F.count(F.lit(1)).alias("cnt"),
                 *[F.sum(F.col(int_col)[d]).alias(f"s{d}") for d in range(width)],
@@ -725,10 +732,11 @@ def _lloyd(frame: DataFrame, every: int, seed_col: str, assign, key: str,
             .collect()
         )
         upd = {
-            int(r[key]): [float(r[f"s{d}"]) / float(r["cnt"]) for d in range(width)]
+            tuple(int(r[k]) for k in key):
+                [float(r[f"s{d}"]) / float(r["cnt"]) for d in range(width)]
             for r in sums
         }
-        cents = [(cid, upd.get(cid, ce)) for cid, ce in cents]
+        cents = [(*c[:-1], upd.get(c[:-1], c[-1])) for c in cents]
     return cents
 
 
@@ -748,7 +756,7 @@ def train_ivf_centroids(embeddings: DataFrame, n_dims: int | None = None) -> lis
         lambda cs: _assign_cosine(
             base, [(cid, ce, _py_norm(ce)) for cid, ce in cs], carry=["qe"]
         ),
-        "centroid_id", "qe", n_dims,
+        ["centroid_id"], "qe", n_dims,
     )
     return [(cid, ce, _py_norm(ce)) for cid, ce in cents]
 
@@ -795,32 +803,35 @@ def _codebook_frame(spark, books: dict) -> DataFrame:
 
 
 def train_pq_codebooks(embeddings: DataFrame, n_dims: int) -> dict:
-    """Per-subspace integer-space Lloyd's (L2 metric — the standard PQ
-    objective, see _lloyd), seeded from the cohort's sub-vectors. Same
-    determinism contract as train_ivf_centroids. Returns
-    {m: [(cid, coords)]} for the PQ_SUBSPACES subspaces. Subspaces
-    train as separate tiny jobs — training is the offline path; at
-    scale it runs on a sample, never the full corpus."""
-    assert n_dims % PQ_SUBSPACES == 0, "dims must split evenly into subspaces"
-    w = n_dims // PQ_SUBSPACES
-    every = _effective_every(embeddings)
-    base = _quantized(embeddings)
+    """Integer-space Lloyd's over every subspace at once (L2 metric —
+    the standard PQ objective, see _lloyd): one run over the
+    (vec_id, m, se, sq) subspace rows pq_assign encodes, keyed by
+    (m, cid) and seeded from the cohort's sub-vectors, so its jobs do
+    not multiply with PQ_SUBSPACES. Same determinism contract as
+    train_ivf_centroids. Returns {m: [(cid, coords)]} for the
+    PQ_SUBSPACES subspaces; {} when the cohort is empty. Training is
+    the offline path; at scale it runs on a sample, never the full
+    corpus."""
+    if n_dims % PQ_SUBSPACES:
+        raise ValueError(
+            f"n_dims must split evenly into {PQ_SUBSPACES} subspaces, got {n_dims!r}"
+        )
+    sub = _subspace_rows(
+        _quantized(embeddings).select("vec_id", "qe", "e"), "vec_id", n_dims
+    ).withColumn("m", F.col("m").cast("long"))
+    cents = _lloyd(
+        sub, _effective_every(embeddings), "se",
+        lambda cs: _assign_l2(sub, _books(cs), ["vec_id", "m"], carry=["sq"]),
+        ["m", "cid"], "sq", n_dims // PQ_SUBSPACES,
+    )
+    return _books(cents)
+
+
+def _books(cents: list) -> dict:
+    """{m: [(cid, coords)]} from _lloyd's sorted [(m, cid, coords)]."""
     books: dict = {}
-    for m in range(PQ_SUBSPACES):
-        sub = base.select(
-            F.lit(m).cast("long").alias("m"),
-            "vec_id",
-            F.slice(F.col("qe"), m * w + 1, w).alias("sq"),
-            F.slice(F.col("e"), m * w + 1, w).alias("se"),
-        )
-        book = _lloyd(
-            sub, every, "se",
-            lambda bk: _assign_l2(sub, {m: bk}, ["vec_id"], carry=["sq"]),
-            "cid", "sq", w,
-        )
-        if not book:
-            return {}
-        books[m] = book
+    for m, cid, ce in cents:
+        books.setdefault(m, []).append((cid, ce))
     return books
 
 
@@ -873,10 +884,11 @@ def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
     (vectors sharing codes) can no longer scramble the final top-k.
     Both scores are rounded to micro-units (BIGINT) so FP summation
     order can't flip equal-score neighbors; ties break by neighbor id.
-    Codebooks are TRAINED (per-subspace integer-space Lloyd's); codes
-    come from pq_assign. Both stages run in the micro scale (cosine is
-    scale-invariant): the exact re-rank scores the candidates' and
-    queries' _quantized micro-unit image e, not the raw float vectors.
+    Codebooks are TRAINED (one integer-space Lloyd's over all
+    subspaces, train_pq_codebooks); codes come from pq_assign. Both
+    stages run in the micro scale (cosine is scale-invariant): the
+    exact re-rank scores the candidates' and queries' _quantized
+    micro-unit image e by its norm nrm, not the raw float vectors.
     Queries are the vec_id % ANN_QUERY_EVERY cohort; ANN_TOP_K
     neighbors each. Output: (query_id, rank, neighbor_id)."""
     codebooks = train_pq_codebooks(embeddings, n_dims)
@@ -885,14 +897,11 @@ def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
     cexp = _codebook_frame(embeddings.sparkSession, codebooks)
     codes = pq_assign(embeddings, n_dims, codebooks=codebooks)
     base = _quantized(embeddings)
-    v = base.select("vec_id", "e")
+    qbase = base.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0)
     qexp = _subspace_rows(
-        v.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0), "query_id", n_dims
+        qbase.select("vec_id", "e"), "query_id", n_dims
     ).withColumnRenamed("se", "qe")
-    qnorm = (
-        base.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0)
-        .select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qn"))
-    )
+    qnorm = qbase.select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qn"))
     lut = qexp.join(cexp, "m").select(
         "query_id", "m", "cid",
         _dot(F.col("qe"), F.col("ce")).alias("part"),
@@ -920,20 +929,16 @@ def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
     # scan — the big side still never shuffles. (At 10^12 scale the
     # driver batches queries, keeping C·Q bounded — same contract as
     # the broadcast LUT.)
-    qfull = (
-        v.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0)
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
+    qfull = qbase.select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
     )
     exact = (
-        v.join(F.broadcast(cand), "vec_id")
+        base.select("vec_id", "e", "nrm").join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(qfull), "query_id")
         .select(
             "query_id", "vec_id",
             F.round(
-                _dot(F.col("e"), F.col("qe"))
-                / (F.sqrt(_dot(F.col("e"), F.col("e")))
-                   * F.sqrt(_dot(F.col("qe"), F.col("qe"))))
-                * 1e6
+                _dot(F.col("e"), F.col("qe")) / (F.col("nrm") * F.col("qn")) * 1e6
             ).cast("long").alias("exact_u"),
         )
     )
@@ -973,11 +978,12 @@ def ivf_probed_topk(embeddings: DataFrame, n_dims: int | None = None) -> DataFra
     their IVF_PROBES nearest TRAINED centroids and brute-force only the
     vectors assigned to those cells; ANN_TOP_K neighbors each.
     Assignment is ivf_assign's broadcast join + map-side partial_min
-    argmin (only id-rows exchange); query probing sorts the per-row
-    scored centroid array (array_sort with a score-desc/cid-asc
-    comparator) and slices the top IVF_PROBES — map-only on the tiny
-    query side. Candidate scoring joins on the cell id, so no stage
-    ever shuffles the full vector set against the queries.
+    argmin (only id-rows exchange); probing scores the tiny query
+    cohort against the broadcast centroid table and keeps the
+    IVF_PROBES best cells per query with the ``_topk`` tail (score
+    DESC, centroid id ASC), as the DuckDB twin does. Candidate scoring
+    joins on the cell id and broadcasts the query vectors back in, so
+    no stage ever shuffles the full vector set against the queries.
     Output: (query_id, rank, neighbor_id)."""
     centroids = train_ivf_centroids(embeddings, n_dims=n_dims)
     if not centroids:
@@ -990,34 +996,18 @@ def ivf_probed_topk(embeddings: DataFrame, n_dims: int | None = None) -> DataFra
         F.col("e").alias("qv"),
         F.col("nrm").alias("qn"),
     )
-    cscored = F.transform(
-        _cent_array(centroids),
-        lambda c: F.struct(
-            _cosine_score_q(F.col("qv"), F.col("qn"), c["ce"], c["cn"]).alias("score_q"),
-            c["cid"].alias("cid"),
-        ),
+    cscored = queries.join(
+        F.broadcast(_centroid_frame(embeddings.sparkSession, centroids))
+    ).select(
+        "query_id", "centroid_id",
+        _cosine_score_q(F.col("qv"), F.col("qn"), F.col("ce"), F.col("cn")).alias("score_q"),
     )
-    by_score = F.array_sort(
-        cscored,
-        lambda left, right: F.when(left["score_q"] > right["score_q"], F.lit(-1))
-        .when(left["score_q"] < right["score_q"], F.lit(1))
-        .when(left["cid"] < right["cid"], F.lit(-1))
-        .when(left["cid"] > right["cid"], F.lit(1))
-        .otherwise(F.lit(0)),
-    )
-    probes = queries.select(
-        "query_id",
-        "qv",
-        "qn",
-        F.explode(
-            F.transform(F.slice(by_score, 1, IVF_PROBES), lambda s: s["cid"])
-        ).alias("centroid_id"),
-    )
+    probes = _topk(cscored, "score_q", "centroid_id", IVF_PROBES)
 
-    cand = assign.join(F.broadcast(probes), "centroid_id").filter(
+    cand = assign.join(F.broadcast(probes.drop("rank")), "centroid_id").filter(
         F.col("vec_id") != F.col("query_id")
     ).hint("merge")  # planner-opaque cardinality; see embedding_near_dups
-    scored = cand.join(base, "vec_id").withColumn(
+    scored = cand.join(base, "vec_id").join(F.broadcast(queries), "query_id").withColumn(
         "score_q", _cosine_score_q(F.col("qv"), F.col("qn"), F.col("e"), F.col("nrm"))
     )
     return _topk(scored, "score_q", "vec_id", ANN_TOP_K).withColumnRenamed(

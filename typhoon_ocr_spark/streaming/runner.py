@@ -16,7 +16,9 @@ Two complementary runners (SURVEY.md §3.4 "Resume"):
    bucket reads only its own files via partition pruning — the 100 TB
    input is read twice total instead of once per bucket. Each bucket
    executes the extraction pipeline exactly once: the page frame is
-   observed (Observation API — counters ride the write action), the
+   observed after any page transform, as batch mode does (Observation
+   API — counters ride the write action; failed model calls count as
+   errors), the
    document rollup is derived from the same lineage, and the only
    action is the output write. No collect()/count() recomputes.
 
@@ -208,14 +210,15 @@ class ResumableExtractJob:
             if bucket in done:
                 continue
             t0 = time.time()
-            # single lineage: pages → observed page frame → doc rollup →
-            # write. The write is the only action; counters ride it.
-            page_frame, observation = observed_page_frame(
-                extract_pages(self._bucket_frame(bucket), self.config),
-                name=f"extract_metrics_{self.run_id}_{bucket}",
-            )
+            # single lineage: pages → page transform → observed page
+            # frame → doc rollup → write. The write is the only action;
+            # counters ride it and count the transform's failed pages.
+            page_frame = extract_pages(self._bucket_frame(bucket), self.config)
             if self.page_transform is not None:
                 page_frame = self.page_transform(page_frame)
+            page_frame, observation = observed_page_frame(
+                page_frame, name=f"extract_metrics_{self.run_id}_{bucket}"
+            )
             docs = (
                 assemble_documents(page_frame)
                 .withColumn("run_id", F.lit(self.run_id))
