@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 
 import pytest
 
@@ -24,6 +25,43 @@ def spark():
     session.sparkContext.setLogLevel("ERROR")
     yield session
     session.stop()
+
+
+@pytest.fixture
+def warm_build_calls(monkeypatch):
+    """``count(build)``: the py4j round trips
+    (ClientServerConnection.send_command calls) of the second of two
+    ``build()`` calls."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    def count(build) -> int:
+        from pyspark import SparkContext
+
+        build()
+        gc.collect()
+        # py4j frees dropped JVM objects from a worker thread that wakes
+        # about once a second; wait for it to send the first build's
+        # frees, so that none of them is counted with the second build
+        pending = SparkContext._gateway._gateway_client.finalizer_deque
+        deadline = time.monotonic() + 10
+        while pending and time.monotonic() < deadline:
+            time.sleep(0.01)
+        time.sleep(0.02)
+        calls = [0]
+        send = cs.ClientServerConnection.send_command
+
+        def counted(self, *args, **kwargs):
+            calls[0] += 1
+            return send(self, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(cs.ClientServerConnection, "send_command", counted)
+            build()
+        return calls[0]
+
+    return count
 
 
 @pytest.fixture(scope="session")

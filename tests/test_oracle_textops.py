@@ -185,3 +185,17 @@ class TestLossyAndInconsistent:
         # valid utf-8 stays as-is (acceptance = decode success)
         s = "ÃÃ"  # two leads, no continuation
         assert fix_text_lite(s) == s
+
+
+def test_char_fix_table_is_the_per_character_rule():
+    """fix_text_lite's per-character fixes run as one str.translate
+    table, gated by a search for the table's characters: for every code
+    point the table gives what the rule gives, and the gate finds every
+    character the table changes."""
+    from typhoon_ocr_spark.oracle.textops import _CHAR_FIX_RE, _CHAR_FIXES, _fix_char
+
+    for cp in range(0x110000):
+        ch = chr(cp)
+        fixed = _fix_char(ch)
+        assert ch.translate(_CHAR_FIXES) == fixed, hex(cp)
+        assert bool(_CHAR_FIX_RE.match(ch)) == (fixed != ch), hex(cp)

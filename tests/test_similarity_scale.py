@@ -504,39 +504,17 @@ def test_lsh_query_probes_rejects_bad_multiprobe(spark):
     [("lsh_sign_buckets", 651), ("embedding_near_dups", 3495),
      ("lsh_bucketed_topk", 8509)],
 )
-def test_lsh_builds_take_few_py4j_calls(spark, monkeypatch, op, bound):
+def test_lsh_builds_take_few_py4j_calls(spark, warm_build_calls, op, bound):
     """Building a sign-LSH query is a handful of JVM round trips, not
     one per plane literal: count ClientServerConnection.send_command
     calls over a warm build with the width given."""
     emb = _emb(spark)
     build = getattr(similarity, op)
-    calls = _warm_build_calls(monkeypatch, lambda: build(emb, n_dims=64))
+    calls = warm_build_calls(lambda: build(emb, n_dims=64))
     assert 0 < calls <= bound, calls
 
 
-def _warm_build_calls(monkeypatch, build) -> int:
-    """py4j round trips (ClientServerConnection.send_command calls) of
-    the second of two ``build()`` calls."""
-    import gc
-
-    import py4j.clientserver as cs
-
-    build()
-    gc.collect()
-    calls = [0]
-    send = cs.ClientServerConnection.send_command
-
-    def counted(self, *args, **kwargs):
-        calls[0] += 1
-        return send(self, *args, **kwargs)
-
-    with monkeypatch.context() as m:
-        m.setattr(cs.ClientServerConnection, "send_command", counted)
-        build()
-    return calls[0]
-
-
-def test_ivf_probed_topk_build_takes_few_py4j_calls(spark, monkeypatch):
+def test_ivf_probed_topk_build_takes_few_py4j_calls(spark, warm_build_calls):
     """IVF probes are ranked by the ``_topk`` window over the broadcast
     centroid table, not a literal C×(D+3) centroid array sorted by a
     comparator: a warm build (training included) at 40 centroids took
@@ -546,9 +524,7 @@ def test_ivf_probed_topk_build_takes_few_py4j_calls(spark, monkeypatch):
     emb = spark.createDataFrame(
         planted_embeddings(2000), "vec_id long, embedding array<float>"
     )
-    calls = _warm_build_calls(
-        monkeypatch, lambda: similarity.ivf_probed_topk(emb, n_dims=64)
-    )
+    calls = warm_build_calls(lambda: similarity.ivf_probed_topk(emb, n_dims=64))
     assert 0 < calls <= 15000, calls
 
 

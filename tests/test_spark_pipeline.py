@@ -112,6 +112,39 @@ def test_extract_documents_is_map_only(frames, tmp_path):
     assert "REPARTITION_BY_NUM" in lines[exchanges[0]]
 
 
+def test_extract_pages_runs_the_parse_udf_once(frames):
+    """The page array is inlined with inline_outer. Plain inline lets
+    Catalyst infer a ``size(pages) > 0`` filter and push it below the
+    parse UDF's projection, and the plan then evaluates the UDF twice
+    (two ArrowEvalPython nodes)."""
+    df = extract_pages(frames[0], PipelineConfig(anchor_budget=4001))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+
+
+@pytest.mark.parametrize(
+    "build,bound",
+    # 632 and 450-1,050 round trips when the sniff and the document fold
+    # were built from one Column per operator and literal
+    [(extract_documents, 60), (classify_pages, 12)],
+)
+def test_extraction_builds_take_few_py4j_calls(
+    frames, tmp_path, warm_build_calls, build, bound
+):
+    """The sniff and the document fold are SQL texts with constant
+    literals and each frame is a few projections, so a warm build is a
+    few dozen JVM round trips. The input has a file per core, as a
+    corpus has: the gated spread, which a single-file input fires, adds
+    about a dozen."""
+    pages = frames[0]
+    spark = pages.sparkSession
+    wide = str(tmp_path / "pages_wide.parquet")
+    pages.repartition(spark.sparkContext.defaultParallelism).write.parquet(wide)
+    src = spark.read.parquet(wide)
+    calls = warm_build_calls(lambda: build(src))
+    assert 0 < calls <= bound, calls
+
+
 def test_skew_documents_byte_identical(frames):
     """The fixture's skew-cohort documents (its largest pdfs, 60 pages
     at the smoke tier) linearize inside their parse task: through both

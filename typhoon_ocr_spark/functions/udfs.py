@@ -61,6 +61,27 @@ PAGE_STRUCT = StructType(
 # Native expressions
 # ---------------------------------------------------------------------------
 
+def sniff_kind_sql(html_col: str = "html") -> str:
+    """Payload routing as one SQL expression (``sniff_kind_col``'s
+    text), with constant literals only: building a projection of it is
+    one JVM round trip. ``html_col`` is read the way ``F.col`` reads a
+    name. The image test is parenthesized left-deep, as a ``|`` chain of
+    Columns builds it (the SQL parser would balance a bare OR chain)."""
+    c = html_col
+    return (
+        f"CASE WHEN {c} IS NULL OR length({c}) = 0 THEN 'junk' "
+        f"WHEN substring({c}, 1, 5) = X'255044462D' THEN 'pdf' "
+        f"WHEN (((substring({c}, 1, 8) = X'89504E470D0A1A0A' "
+        f"OR substring({c}, 1, 3) = X'FFD8FF') "
+        f"OR substring({c}, 1, 6) = X'474946383761') "
+        f"OR substring({c}, 1, 6) = X'474946383961') "
+        f"OR (substring({c}, 1, 4) = X'52494646' AND substring({c}, 9, 4) = X'57454250') "
+        "THEN 'image' "
+        f"WHEN startswith(ltrim(CAST(substring({c}, 1, 256) AS STRING)), '<') THEN 'html' "
+        "ELSE 'junk' END"
+    )
+
+
 def sniff_kind_col(html_col: str = "html") -> Column:
     """Payload routing as pure JVM expressions — no Python, no UDF
     (engine-side replacement for the extension dispatch at
@@ -72,27 +93,7 @@ def sniff_kind_col(html_col: str = "html") -> Column:
     html:  lossy-decoded 256-byte head, left-trimmed, starts with '<';
     junk:  everything else (incl. NULL/empty payloads).
     """
-    col = F.col(html_col)
-    is_pdf = F.substring(col, 1, 5) == F.lit(b"%PDF-")
-    is_image = (
-        (F.substring(col, 1, 8) == F.lit(b"\x89PNG\r\n\x1a\n"))
-        | (F.substring(col, 1, 3) == F.lit(b"\xff\xd8\xff"))
-        | (F.substring(col, 1, 6) == F.lit(b"GIF87a"))
-        | (F.substring(col, 1, 6) == F.lit(b"GIF89a"))
-        | (
-            (F.substring(col, 1, 4) == F.lit(b"RIFF"))
-            & (F.substring(col, 9, 4) == F.lit(b"WEBP"))
-        )
-    )
-    head = F.ltrim(F.substring(col, 1, 256).cast("string"))
-    is_html = F.startswith(head, F.lit("<"))
-    return (
-        F.when(col.isNull() | (F.length(col) == 0), F.lit("junk"))
-        .when(is_pdf, F.lit("pdf"))
-        .when(is_image, F.lit("image"))
-        .when(is_html, F.lit("html"))
-        .otherwise(F.lit("junk"))
-    )
+    return F.expr(sniff_kind_sql(html_col))
 
 
 # ---------------------------------------------------------------------------

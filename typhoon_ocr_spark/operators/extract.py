@@ -32,10 +32,10 @@ and its linearize share is a fraction of that parse.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.udfs import row_map, sniff_kind_col, stage_pages_udf
+from ..functions.udfs import row_map, sniff_kind_col, sniff_kind_sql, stage_pages_udf
 from ..oracle.pdfmini import parse_pdf
 from ..plans.session import PipelineConfig
 from ..plans.spread import maybe_spread
@@ -47,10 +47,11 @@ def classify_pages(pages: DataFrame) -> DataFrame:
 
 
 def _staged(pages: DataFrame, config: PipelineConfig) -> DataFrame:
-    """pages table → (url, kind, pages: array<struct<page, text,
+    """pages table → (url, kind, html, pages: array<struct<page, text,
     success, error>>), one row per input document, pages in page order,
-    page texts final."""
-    base = classify_pages(pages).select("url", "kind", "html")
+    page texts final. Callers project ``html`` away, so the blob never
+    leaves the parse stage."""
+    base = pages.selectExpr("url", f"{sniff_kind_sql('html')} AS kind", "html")
 
     if config.salt_buckets:
         # Optional pre-parse spread for pathologically clustered inputs
@@ -73,28 +74,28 @@ def _staged(pages: DataFrame, config: PipelineConfig) -> DataFrame:
         # corpus never pays this blob shuffle.
         base = maybe_spread(base, "url")
 
-    return base.select(
-        "url",
-        "kind",
-        stage_pages_udf("url", "kind", "html", F.lit(config.anchor_budget)).alias(
-            "pages"
-        ),
+    return base.withColumn(
+        "pages", stage_pages_udf("url", "kind", "html", F.lit(config.anchor_budget))
     )
 
 
 def extract_pages(pages: DataFrame, config: PipelineConfig = PipelineConfig()) -> DataFrame:
     """pages table → page-level extraction frame
-    (url, kind, page, anchor_text, text, success, error)."""
-    return _staged(pages, config).select("url", "kind", F.inline("pages")).select(
+    (url, kind, page, anchor_text, text, success, error).
+
+    The page array is never null or empty (every payload yields at
+    least one page row), so ``inline_outer`` gives the rows ``inline``
+    would; unlike ``inline`` it lets Catalyst infer no ``size(pages) >
+    0`` filter, which it would push below the parse UDF's projection
+    and so evaluate the UDF twice."""
+    rows = _staged(pages, config).selectExpr("url", "kind", "inline_outer(pages)")
+    return rows.selectExpr(
         "url",
         "kind",
         "page",
-        F.when(F.col("kind").isin("pdf", "image"), F.col("text"))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("anchor_text"),
-        F.when(F.col("error").isNotNull(), F.lit(""))  # failed page rows
-        .otherwise(F.col("text"))
-        .alias("text"),
+        "CASE WHEN kind IN ('pdf', 'image') THEN text ELSE CAST(NULL AS STRING) END"
+        " AS anchor_text",
+        "CASE WHEN error IS NOT NULL THEN '' ELSE text END AS text",  # failed page rows
         "success",
         "error",
     )
@@ -180,23 +181,23 @@ def ocr_message_fingerprints(pages: DataFrame) -> DataFrame:
     )
 
 
-def _assembled(pages: Column) -> list:
-    """The document fold over a page-ordered array of structs with page,
-    text and success fields (the parse UDF's page structs, which also
-    carry error, or assemble_documents' regrouped rows): the texts of
-    successful pages joined "\\n\\n" in page order (reference
-    app.py:581; array_join skips null texts), page_count = page total
-    (ocr_service.py:117-124), success = all pages succeeded (the
-    reference's all(), backend/services/ocr_service.py:321). JVM
-    higher-order functions only — no Python, no shuffle."""
-    return [
-        F.array_join(
-            F.transform(F.filter(pages, lambda p: p["success"]), lambda p: p["text"]),
-            "\n\n",
-        ).alias("extracted_text"),
-        F.size(pages).cast("bigint").alias("page_count"),
-        F.forall(pages, lambda p: p["success"]).alias("success"),
-    ]
+# The document fold over a page-ordered array ``pages`` of structs with
+# page, text and success fields (the parse UDF's page structs, which
+# also carry error, or assemble_documents' regrouped rows): the texts of
+# successful pages joined "\n\n" in page order (reference app.py:581;
+# array_join skips null texts), page_count = page total
+# (ocr_service.py:117-124), success = all pages succeeded (the
+# reference's all(), backend/services/ocr_service.py:321). JVM
+# higher-order functions only — no Python, no shuffle. SQL texts with
+# constant literals, so a projection of them is built in one round
+# trip; the delimiter is two raw newlines, which read the same under
+# any spark.sql.parser.escapedStringLiterals.
+_ASSEMBLED = (
+    "array_join(transform(filter(pages, p -> p.success), p -> p.text), '\n\n')"
+    " AS extracted_text",
+    "CAST(size(pages) AS BIGINT) AS page_count",
+    "forall(pages, p -> p.success) AS success",
+)
 
 
 def assemble_documents(page_frame: DataFrame) -> DataFrame:
@@ -204,7 +205,7 @@ def assemble_documents(page_frame: DataFrame) -> DataFrame:
     transformed after extract_pages (ocr_pages, the runner's
     page_transform, the job CLI): the page rows of each url are
     regrouped (one shuffle), ordered by page and folded by the same
-    ``_assembled`` as extract_documents."""
+    ``_ASSEMBLED`` as extract_documents."""
     return (
         page_frame.groupBy("url")
         .agg(
@@ -213,7 +214,7 @@ def assemble_documents(page_frame: DataFrame) -> DataFrame:
                 "pages"
             ),
         )
-        .select("url", "kind", *_assembled(F.col("pages")))
+        .selectExpr("url", "kind", *_ASSEMBLED)
     )
 
 
@@ -224,7 +225,7 @@ def extract_documents(pages: DataFrame, config: PipelineConfig = PipelineConfig(
     ``url`` is the pages table's unique key (FIXTURES.md §1): each
     output row is the fold of one input row's page array, and rows are
     not regrouped by url. The parse UDF emits pages in page order."""
-    return _staged(pages, config).select("url", "kind", *_assembled(F.col("pages")))
+    return _staged(pages, config).selectExpr("url", "kind", *_ASSEMBLED)
 
 
 def ocr_pages(

@@ -72,6 +72,40 @@ _CURLY_QUOTES = {"‘": "'", "’": "'", "‚": "'", "‛": "'",
 _TERMINAL_ESCAPE_RE = re.compile(r"\x1b\[[0-9;]*[mKHJ]")
 
 
+def _fix_char(ch: str) -> str:
+    """fix_c1_controls, fix_latin_ligatures, fix_character_width and
+    uncurl_quotes on one character, in that order."""
+    cp = ord(ch)
+    if 0x80 <= cp <= 0x9F:  # fix_c1_controls
+        ch = _CP1252_GRAPHICS.get(cp, ch)
+    if ch in _LIGATURES:
+        return _LIGATURES[ch]
+    if 0xFF01 <= cp <= 0xFF5E:  # fullwidth ASCII block
+        ch = chr(cp - 0xFF01 + 0x21)
+    elif ch == "\u3000":  # ideographic space
+        ch = " "
+    return _CURLY_QUOTES.get(ch, ch)
+
+
+# _fix_char as one str.translate table: it can only change the C1
+# controls, the ligatures, the fullwidth ASCII block, the ideographic
+# space and the curly quotes, and every other character maps to itself.
+# str.translate looks up every character of a non-ASCII text, so it
+# only runs on a text that holds one of the table's characters.
+_CHAR_FIXES = {
+    ord(ch): fixed
+    for ch in (
+        [chr(cp) for cp in range(0x80, 0xA0)]
+        + list(_LIGATURES)
+        + [chr(cp) for cp in range(0xFF01, 0xFF5F)]
+        + ["\u3000"]
+        + list(_CURLY_QUOTES)
+    )
+    if (fixed := _fix_char(ch)) != ch
+}
+_CHAR_FIX_RE = re.compile("[" + "".join(re.escape(chr(cp)) for cp in _CHAR_FIXES) + "]")
+
+
 def sloppy_1252_decode(raw: bytes) -> str:
     """Decode bytes the way a sloppy windows-1252 reader would (ftfy's
     sloppy-windows-1252: the five unmapped bytes pass through as C1
@@ -280,7 +314,11 @@ def fix_text_lite(text: str) -> str:
 
     The full ftfy default-fix list is now reproduced (lite semantics:
     acceptance by decode success rather than badness scoring); plain
-    ASCII and Thai pass through untouched, matching ftfy."""
+    ASCII and Thai pass through untouched, matching ftfy.
+
+    The four per-character fixes (C1 controls, ligatures, width, quotes)
+    are ``_fix_char``; they run as the one ``str.translate`` table built
+    from it at import, on texts that hold a character it changes."""
     if "&" in text and "<" not in text:  # ftfy's 'auto' gate
         text = unescape_html_lite(text)
     if "\x1b" in text:
@@ -297,20 +335,9 @@ def fix_text_lite(text: str) -> str:
             break
         text = repaired
     text = decode_inconsistent_utf8(text)
-    out = []
-    for ch in text:
-        cp = ord(ch)
-        if 0x80 <= cp <= 0x9F:  # fix_c1_controls
-            ch = _CP1252_GRAPHICS.get(cp, ch)
-        if ch in _LIGATURES:
-            out.append(_LIGATURES[ch])
-            continue
-        if 0xFF01 <= cp <= 0xFF5E:  # fullwidth ASCII block
-            ch = chr(cp - 0xFF01 + 0x21)
-        elif ch == "　":  # ideographic space
-            ch = " "
-        out.append(_CURLY_QUOTES.get(ch, ch))
-    return unicodedata.normalize("NFC", "".join(out))
+    if _CHAR_FIX_RE.search(text):
+        text = text.translate(_CHAR_FIXES)
+    return unicodedata.normalize("NFC", text)
 
 
 def cleanup_element_text(text: str) -> str:

@@ -10,7 +10,6 @@ import re
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _BYTE_UNITS = {
     "": 1, "b": 1,
@@ -52,13 +51,17 @@ def maybe_spread(df: DataFrame, key: str) -> DataFrame:
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
-        files = list(df.inputFiles())
+        # a JVM array: its length is one py4j round trip, listing it
+        # one per file, so a many-file input is never listed
+        files = df._jdf.inputFiles()
+        n_files = len(files)
     except Exception:
         return df
-    if not files or len(files) >= par:
+    if not n_files or n_files >= par:
         return df
     total = 0
-    for f in files:
+    for i in range(n_files):
+        f = files[i]
         if not f.startswith("file:"):
             return df  # remote store: trust its layout
         try:
@@ -70,4 +73,4 @@ def maybe_spread(df: DataFrame, key: str) -> DataFrame:
     )
     if total > par * max_pb:
         return df
-    return df.repartition(par, F.col(key))
+    return df.repartition(par, key)
