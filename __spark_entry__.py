@@ -629,7 +629,7 @@ def oracle_sql() -> dict[str, str]:
     sql["simhash_near_dups"] = f"WITH {sim_chain} {sim_pairs_select}"
     # components via transitive closure (recursive CTE): every label a
     # node can reach; component id = min reachable — the oracle twin of
-    # the engine's iterative min-label propagation
+    # the engine's min-root union-find
     sql["near_dup_clusters"] = (
         f"WITH RECURSIVE {sim_chain}, "
         f"pairs AS ({sim_pairs_select}), "

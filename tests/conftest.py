@@ -64,6 +64,25 @@ def warm_build_calls(monkeypatch):
     return count
 
 
+@pytest.fixture
+def job_count(spark):
+    """``count(fn)``: the Spark jobs ``fn()`` runs, counted by a job
+    group."""
+    import uuid
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def fixture_dir() -> str:
     """Smoke-tier fixture corpus (generated on first use)."""

@@ -218,9 +218,21 @@ def test_sampling_rate_one_keeps_everything(spark):
     assert len(kept) == 200 and all(r["lang"] == "th" for r in kept)
 
 
+def _cc_rows(spark, rows, ddl):
+    """connected_components over ``rows`` spread on 3 partitions:
+    (column types, sorted rows)."""
+    from typhoon_ocr_spark.operators.dedup import connected_components
+
+    got = connected_components(spark.createDataFrame(rows, ddl).repartition(3))
+    types = [f.dataType.simpleString() for f in got.schema]
+    return types, sorted(tuple(r) for r in got.collect())
+
+
 def test_connected_components_semantics(spark):
     """Chain, triangle-plus-tail, and disjoint pair resolve to min-id
-    components with correct sizes; convergence needs diameter rounds."""
+    components with correct sizes; so do a star, self-loops, null ends,
+    int and string ids and empty input. The expected rows are those of
+    the iterative label propagation this operator replaced."""
     from typhoon_ocr_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -239,37 +251,67 @@ def test_connected_components_semantics(spark):
         20: (20, 2), 21: (20, 2),
     }
 
+    longs = "doc_a bigint, doc_b bigint"
+    star = [(leaf, 1500) if leaf % 2 else (1500, leaf)
+            for leaf in range(3001) if leaf != 1500]
+    cases = [
+        # star: the center is not the min member
+        (star, longs, [(i, 0, 3001) for i in range(3001)]),
+        # self-loops: a node alone, or beside its other edges
+        ([(5, 5), (6, 6), (6, 7), (9, 9)], longs,
+         [(5, 5, 1), (6, 6, 2), (7, 6, 2), (9, 9, 1)]),
+        # a null end drops; the other end stays a node of its own
+        ([(30, None), (None, 31), (None, None), (32, 33), (33, None)], longs,
+         [(30, 30, 1), (31, 31, 1), (32, 32, 2), (33, 32, 2)]),
+        ([(3, 2), (2, 1), (7, 8)], "doc_a int, doc_b int",
+         [(1, 1, 3), (2, 1, 3), (3, 1, 3), (7, 7, 2), (8, 7, 2)]),
+        ([("b", "a"), ("c", "b"), ("x", "y")], "doc_a string, doc_b string",
+         [("a", "a", 3), ("b", "a", 3), ("c", "a", 3), ("x", "x", 2), ("y", "x", 2)]),
+        ([], longs, []),
+    ]
+    for rows, ddl, want in cases:
+        id_type = ddl.split()[1].rstrip(",")
+        assert _cc_rows(spark, rows, ddl) == ([id_type, id_type, "bigint"], want)
 
-def test_connected_components_matches_pair_transitive_closure(spark):
+
+def test_connected_components_matches_pair_transitive_closure(spark, job_count):
     """Against the corpus simhash pairs: every pair's two docs share a
-    cluster, and cluster ids are the min member."""
+    cluster, and cluster ids are the min member. Building the clusters
+    runs no Spark job, and the action leaves no persisted RDD behind
+    (label propagation ran 64 jobs while building and left its
+    checkpoints cached)."""
     from typhoon_ocr_spark.operators.dedup import (
         connected_components,
         simhash_near_dups,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    jsc = spark.sparkContext._jsc
+    cached = set(jsc.getPersistentRDDs().keySet())
+    built = []
+    jobs = job_count(lambda: built.append(connected_components(simhash_near_dups(docs))))
+    assert jobs == 0
+    comp = {r["doc_id"]: r["cluster_id"] for r in built[0].collect()}
+    assert set(jsc.getPersistentRDDs().keySet()) - cached == set()
+    assert len(comp) == 495
     pairs = simhash_near_dups(docs)
-    comp = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components(pairs).collect()}
     for a, b, _h in pairs.collect():
         assert comp[a] == comp[b]
     assert all(cid <= d for d, cid in comp.items())
     assert any(cid < d for d, cid in comp.items())  # non-trivial clusters
 
 
-def test_connected_components_long_chain_pointer_jumping(spark):
-    """A 40-node path has diameter 39 — plain 1-hop propagation would
-    need 39 rounds; pointer jumping must converge inside max_iter=15
-    (O(log diameter))."""
-    from typhoon_ocr_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 140)], "doc_a long, doc_b long"
+def test_connected_components_long_reversed_path(spark):
+    """A 1,201-node path (diameter 1,200) whose ids descend along it,
+    with some edges repeated and some reversed: one component rooted
+    at the min id, whatever order the edges arrive in."""
+    edges = (
+        [(n, n - 1) for n in range(2000, 800, -1)]
+        + [(n - 1, n) for n in range(2000, 800, -5)]
+        + [(n, n - 1) for n in range(1990, 800, -7)]
     )
-    got = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-           for r in connected_components(pairs, max_iter=15).collect()}
-    assert got == {i: (100, 41) for i in range(100, 141)}
+    _, rows = _cc_rows(spark, edges, "doc_a long, doc_b long")
+    assert rows == [(i, 800, 1201) for i in range(800, 2001)]
 
 
 def test_arrow_pass_degenerate_doc_semantics(spark):

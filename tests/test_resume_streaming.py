@@ -84,6 +84,17 @@ def test_layout_partition_pruning(spark, pages_path, tmp_path):
         assert frame.count() > 0  # fixture corpus hashes into every bucket
 
 
+def test_bucket_frames_share_one_layout_read(spark, pages_path, tmp_path, job_count):
+    """The staged layout is read once per run: building every bucket's
+    frame afterwards runs no Spark job (a schema-less read per bucket
+    ran one each)."""
+    job = ResumableExtractJob(spark, pages_path, str(tmp_path / "o"), n_buckets=8)
+    job.run()
+    frames = []
+    assert job_count(lambda: frames.extend(job._bucket_frame(b) for b in range(8))) == 0
+    assert sum(frame.count() for frame in frames) == 200
+
+
 def test_stale_snapshot_fails_then_invalidates(spark, fixture_dir, tmp_path):
     import shutil
     import time as _time

@@ -528,28 +528,14 @@ def test_ivf_probed_topk_build_takes_few_py4j_calls(spark, warm_build_calls):
     assert 0 < calls <= 15000, calls
 
 
-def _job_count(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted by a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_pq_training_runs_no_more_jobs_than_ivf(spark):
+def test_pq_training_runs_no_more_jobs_than_ivf(spark, job_count):
     """All PQ subspaces train in one Lloyd's run keyed by (m, cid), so
     training PQ_SUBSPACES codebooks fires no more jobs than training
     the IVF cells on the same frame (one run per subspace fired about
     PQ_SUBSPACES times as many)."""
     emb = _emb(spark)
-    ivf = _job_count(spark, lambda: similarity.train_ivf_centroids(emb, n_dims=64))
-    pq = _job_count(spark, lambda: similarity.train_pq_codebooks(emb, n_dims=64))
+    ivf = job_count(lambda: similarity.train_ivf_centroids(emb, n_dims=64))
+    pq = job_count(lambda: similarity.train_pq_codebooks(emb, n_dims=64))
     assert 0 < pq <= ivf, (pq, ivf)
 
 

@@ -23,7 +23,11 @@ Scale notes:
   chosen for engine-portability (no 64-bit int conversions);
 - SimHash fingerprints leave simhash_fingerprints as '0'/'1' strings
   (the oracle's column) and become a bigint inside the pair search,
-  where segments are shift/mask slices and Hamming is bit_count(xor).
+  where segments are shift/mask slices and Hamming is bit_count(xor);
+- connected components are a per-partition union-find (a spanning
+  forest per partition) then one union-find task over the forests, so
+  the last task holds every node with an edge (99 MB and 6-11 s end
+  to end at 10^6 nodes); the min-member root is the cluster id.
 """
 
 from __future__ import annotations
@@ -451,87 +455,78 @@ def decontamination_flags(
     )
 
 
+def _components(batches):
+    """Union-find over Arrow batches of (a, b) edges: one batch of
+    (doc_id, cluster_id, cluster_size), a row per non-null node. Union
+    by smaller root keeps every root the minimum member of its
+    component, and ``find`` compresses its path iteratively. A null end
+    adds no node (the pair's other end stays a node of its own); a
+    self-loop adds its node alone."""
+    from collections import Counter
+
+    import pyarrow as pa
+
+    parent = {}
+    id_type = None
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for batch in batches:
+        id_type = batch.schema.field(0).type
+        for a, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            for x in (a, b):
+                if x is not None:
+                    parent.setdefault(x, x)
+            if a is not None and b is not None:
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+    if parent:
+        nodes = list(parent)
+        roots = [find(x) for x in nodes]
+        size = Counter(roots)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(nodes, type=id_type),
+                pa.array(roots, type=id_type),
+                pa.array([size[r] for r in roots], type=pa.int64()),
+            ],
+            names=["doc_id", "cluster_id", "cluster_size"],
+        )
+
+
 def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 15,
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
 ) -> DataFrame:
     """Pairs → clusters: the stage every near-dup pipeline needs after
     candidate generation (MinHash/SimHash/embedding pairs are EDGES;
-    dedup keeps one doc per connected COMPONENT). Iterative min-label
-    propagation: each node adopts the smallest label among itself and
-    its neighbors until a fixpoint, with a POINTER-JUMPING shortcut
-    each round (labels adopt their label's label) — the combination
-    the large-star/small-star family formalizes (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond"): propagation moves
-    a label one hop, shortcutting then doubles the distance covered,
-    so convergence is O(log diameter) rounds — a 10^6-node path
-    component converges in ~20 rounds, not 10^6. Near-dup components
-    are dense, so single-digit rounds in practice.
+    dedup keeps one doc per connected COMPONENT). ``mapInArrow`` runs
+    the one union-find, _components, twice: per input partition, which
+    shrinks its edges to a spanning forest of one (node, root) edge per
+    node (the forest step of Kiveris et al., "Connected Components in
+    MapReduce and Beyond"), then once over all forests after
+    ``repartition(1)``. Building the frame runs no Spark job and caches
+    nothing. Union by smaller root makes cluster_id the min doc_id of
+    the component (Python orders ints, and strings by code point, as
+    Spark does).
 
-    Scale shape per round: one self-join of the label frame against the
-    symmetrized edge list (sort-merge on node id) + one groupBy min —
-    no collect of nodes or edges; the only driver-side value is the
-    per-round convergence COUNT. Labels persist across rounds and
-    lineage is cut each round (localCheckpoint) so the plan doesn't
-    deepen with iterations — the classic iterative-join trap.
-    Output: (doc_id, cluster_id, cluster_size); cluster_id = min doc_id
-    of the component."""
-    from pyspark import StorageLevel
+    The trade: that last task holds every node with an edge. At 10^6
+    nodes the union-find peaks at 99 MB (tracemalloc) and a one-
+    component graph runs end to end in 6-11 s (4 cores); the SimHash
+    graphs of sf0.001-sf0.1 have 34-65 edges per node and 493-3,828
+    nodes.
 
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        propagated = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select(
-            "node",
-            F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias("lbl"),
-        )
-        # pointer jumping: adopt the label's own label — doubles the
-        # hop distance covered per round (O(log diameter) total)
-        lbl_of_lbl = propagated.select(
-            F.col("node").alias("pnode"), F.col("lbl").alias("plbl")
-        )
-        new_labels = (
-            propagated.join(
-                lbl_of_lbl, propagated.lbl == lbl_of_lbl.pnode, "left"
-            )
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("plbl", F.col("lbl"))).alias("new_lbl"),
-            )
-        ).localCheckpoint()
-        changed = (
-            new_labels.join(labels, "node")
-            .filter(F.col("new_lbl") < F.col("lbl"))
-            .count()
-        )
-        labels = new_labels.withColumnRenamed("new_lbl", "lbl")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(f"components did not converge in {max_iter} rounds")
-    edges.unpersist(blocking=False)
-    sizes = labels.groupBy("lbl").agg(F.count("*").cast("long").alias("cluster_size"))
-    return labels.join(sizes, "lbl").select(
-        F.col("node").alias("doc_id"),
-        F.col("lbl").alias("cluster_id"),
-        "cluster_size",
-    )
+    Output: (doc_id, cluster_id, cluster_size bigint), ids in the common
+    type of ``a_col`` and ``b_col``. A null end adds no node; its
+    pair's other end stays a cluster of its own."""
+    t = pairs.select(F.coalesce(a_col, b_col)).schema[0].dataType.simpleString()
+    out = f"doc_id {t}, cluster_id {t}, cluster_size bigint"
+    edges = pairs.select(F.col(a_col).cast(t), F.col(b_col).cast(t))
+    forests = edges.mapInArrow(_components, out).select("doc_id", "cluster_id")
+    return forests.repartition(1).mapInArrow(_components, out)

@@ -637,14 +637,15 @@ def _quantized(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _py_norm(coords: list) -> float:
-    # mirrors sqrt(list_dot_product(x, x)): strict left-to-right fold
-    acc = 0.0
-    for x in coords:
-        acc += x * x
-    import math
+def _normed(cents: list) -> list:
+    """[(cid, coords)] → [(cid, coords, norm)], the norms by the
+    _np_row_norms fold (the JVM's sqrt(_dot(e, e)), bit for bit)."""
+    import numpy as np
 
-    return math.sqrt(acc)
+    if not cents:
+        return []
+    nrm = _np_row_norms(np.array([ce for _, ce in cents], dtype=np.float64))
+    return [(cid, ce, float(n)) for (cid, ce), n in zip(cents, nrm)]
 
 
 def _centroid_frame(spark, centroids: list) -> DataFrame:
@@ -753,12 +754,10 @@ def train_ivf_centroids(embeddings: DataFrame, n_dims: int | None = None) -> lis
         return []
     cents = _lloyd(
         base, _effective_every(embeddings), "e",
-        lambda cs: _assign_cosine(
-            base, [(cid, ce, _py_norm(ce)) for cid, ce in cs], carry=["qe"]
-        ),
+        lambda cs: _assign_cosine(base, _normed(cs), carry=["qe"]),
         ["centroid_id"], "qe", n_dims,
     )
-    return [(cid, ce, _py_norm(ce)) for cid, ce in cents]
+    return _normed(cents)
 
 
 def _l2_d2_q(se: Column, ce: Column) -> Column:

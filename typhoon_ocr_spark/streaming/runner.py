@@ -189,13 +189,9 @@ class ResumableExtractJob:
 
     def _bucket_frame(self, bucket: int) -> DataFrame:
         """Partition-pruned read: only bucket=N files are scanned
-        (explicit subdir filter on the partition column)."""
-        return (
-            self.spark.read.option("basePath", self.layout_dir)
-            .parquet(self.layout_dir)
-            .filter(F.col("bucket") == bucket)
-            .drop("bucket")
-        )
+        (explicit subdir filter on the partition column of the layout
+        frame ``run`` reads once after staging)."""
+        return self._layout.filter(F.col("bucket") == bucket).drop("bucket")
 
     # -- execution --------------------------------------------------------
     def run(self, fail_after: Optional[int] = None) -> dict:
@@ -204,6 +200,10 @@ class ResumableExtractJob:
         snapshot = _source_snapshot(self.pages_path)
         self._validate_committed(snapshot)
         self._stage_layout(snapshot)
+        # the layout is fixed for the run: list it and read its schema once
+        self._layout = self.spark.read.option("basePath", self.layout_dir).parquet(
+            self.layout_dir
+        )
         done = set(self.committed_buckets())
         processed = 0
         for bucket in range(self.n_buckets):
