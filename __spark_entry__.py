@@ -762,7 +762,8 @@ def oracle_sql() -> dict[str, str]:
     )
 
     # effective seed stride: cell count capped at IVF_MAX_CENTROIDS
-    # (integer arithmetic — bit-exact vs similarity._effective_every)
+    # (integer arithmetic — bit-exact vs the scalar subquery of
+    # similarity._lloyd)
     eff_every = (
         f"(SELECT greatest({IVF_CENTROID_EVERY}, (count(*) + "
         f"{IVF_MAX_CENTROIDS - 1}) // {IVF_MAX_CENTROIDS}) FROM embeddings)"

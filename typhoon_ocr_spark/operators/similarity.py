@@ -28,11 +28,18 @@ Scale notes:
   near-dup verify, the bucketed top-k and the IVF and PQ operators
   still score with the JVM higher-order-function fold ``_dot``
   (zip_with + aggregate);
-- the IVF cells and the PQ codebooks train in one integer-space
-  Lloyd's loop (``_lloyd``) keyed by a list of columns: all PQ
-  subspaces train together keyed by (m, cid), and IVF probes are the
-  ``_topk`` of the query cohort scored against the broadcast centroid
-  table, the shapes of their DuckDB twins.
+- the IVF cells and the PQ codebooks train by one integer-space
+  Lloyd's (``_lloyd``) keyed by a list of columns, unrolled into a lazy
+  frame from seed to search as the DuckDB twins write it (the seed
+  stride a scalar subquery, each round a broadcast assignment, integer
+  sums and a LEFT JOIN onto the previous centroids), so building an
+  IVF or PQ query runs no Spark job: all PQ subspaces train together
+  keyed by (m, cid), every assignment is one ``_assign``, and IVF
+  probes are the ``_topk`` of the query cohort scored against the
+  broadcast centroid table;
+- IVF and PQ drop null, null-element and wrong-width vectors at their
+  input (``_quantized``), the rule ``_list_col_matrix`` applies to the
+  NumPy passes.
 """
 
 from __future__ import annotations
@@ -550,14 +557,10 @@ IVF_CENTROID_EVERY = 50
 # curve measured the blowup at a mere 10x (ann_ivf_topk 1.6 s → 167 s:
 # 1000-centroid literal folds). Real IVF fixes the cell count, so the
 # effective stride grows with N: every = max(IVF_CENTROID_EVERY,
-# ceil(N / IVF_MAX_CENTROIDS)) — pure integer arithmetic, mirrored
+# ceil(N / IVF_MAX_CENTROIDS)) over the N vectors a quantizer keeps — a
+# scalar subquery of pure integer arithmetic (_lloyd), mirrored
 # bit-exactly by the DuckDB twins.
 IVF_MAX_CENTROIDS = 256
-
-
-def _effective_every(embeddings: DataFrame) -> int:
-    n = embeddings.count()
-    return max(IVF_CENTROID_EVERY, (n + IVF_MAX_CENTROIDS - 1) // IVF_MAX_CENTROIDS)
 
 # Lloyd's iterations for the IVF cells and PQ sub-codebooks (round-5
 # verdict #3: the quantizers were untrained sampled cohorts). Training
@@ -604,14 +607,15 @@ def _l2(a: Column, b: Column) -> Column:
 
 
 def _subspace_rows(frame: DataFrame, id_alias: str, n_dims: int) -> DataFrame:
-    """(id, m, se [, sq]): one row per (vector, subspace) with the
-    sub-vector of ``e``, and of the integer ``qe`` as ``sq`` when the
-    frame has it (training sums it). Requires n_dims % PQ_SUBSPACES == 0."""
+    """(id, m BIGINT, se [, sq]): one row per (vector, subspace) with
+    the sub-vector of ``e``, and of the integer ``qe`` as ``sq`` when
+    the frame has it (training sums it). Requires
+    n_dims % PQ_SUBSPACES == 0."""
     width = n_dims // PQ_SUBSPACES
     cols = [(c, a) for c, a in (("e", "se"), ("qe", "sq")) if c in frame.columns]
     subs = [
         F.struct(
-            F.lit(m).cast("int").alias("m"),
+            F.lit(m).cast("long").alias("m"),
             *[F.slice(F.col(c), m * width + 1, width).alias(a) for c, a in cols],
         )
         for m in range(PQ_SUBSPACES)
@@ -621,42 +625,26 @@ def _subspace_rows(frame: DataFrame, id_alias: str, n_dims: int) -> DataFrame:
     ).select(id_alias, "s.m", *[f"s.{a}" for _, a in cols])
 
 
-def _quantized(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, qe, e, nrm): coordinates floored to BIGINT micro-units
-    (qe) plus their exact double image (e, micro scale — cosine is
-    scale-invariant so all IVF/PQ math runs here). The integer column
-    is what makes Lloyd's centroid sums order-independent."""
+def _quantized(embeddings: DataFrame, n_dims: int) -> DataFrame:
+    """(vec_id, qe, e, nrm) of the vectors a quantizer keeps:
+    coordinates floored to BIGINT micro-units (qe) plus their exact
+    double image (e, micro scale — cosine is scale-invariant so all
+    IVF/PQ math runs here). The integer column is what makes Lloyd's
+    centroid sums order-independent. Null, null-element and
+    wrong-width vectors are dropped here, by the _list_col_matrix rule
+    as one SQL predicate, so they neither train, nor get a cell or
+    code, nor query."""
     q = F.transform(
         F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(MICRO) + F.lit(0.5)).cast("long"),
     )
+    kept = embeddings.filter(
+        F.expr(f"size(embedding) = {n_dims} AND forall(embedding, x -> x IS NOT NULL)")
+    )
     return (
-        embeddings.select("vec_id", q.alias("qe"))
+        kept.select("vec_id", q.alias("qe"))
         .withColumn("e", F.transform(F.col("qe"), lambda x: x.cast("double")))
         .withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
-    )
-
-
-def _normed(cents: list) -> list:
-    """[(cid, coords)] → [(cid, coords, norm)], the norms by the
-    _np_row_norms fold (the JVM's sqrt(_dot(e, e)), bit for bit)."""
-    import numpy as np
-
-    if not cents:
-        return []
-    nrm = _np_row_norms(np.array([ce for _, ce in cents], dtype=np.float64))
-    return [(cid, ce, float(n)) for (cid, ce), n in zip(cents, nrm)]
-
-
-def _centroid_frame(spark, centroids: list) -> DataFrame:
-    """Tiny (centroid_id, ce, cn) frame from [(cid, coords, norm)] —
-    the broadcast side of every assignment join."""
-    return spark.createDataFrame(
-        [
-            (int(cid), [float(x) for x in ce], float(cn))
-            for cid, ce, cn in centroids
-        ],
-        "centroid_id long, ce array<double>, cn double",
     )
 
 
@@ -668,98 +656,6 @@ def _cosine_score_q(e: Column, nrm: Column, ce: Column, cn: Column) -> Column:
     ).cast("long")
 
 
-def _assign_cosine(base: DataFrame, centroids: list, carry: list = ()) -> DataFrame:
-    """Nearest centroid by cosine: broadcast-join the C-row centroid
-    table against the (vec_id, e, nrm) frame and take the per-vector
-    argmax as min(struct(-score_q, cid)) — a HASH AGGREGATE with
-    map-side partials, so the N×C scored rows never leave their input
-    partitions; the only exchange carries N (vec_id, best) rows. (The
-    r4 row_number window shuffled all N×C rows; a literal-array argmax
-    fold avoids even the N-row exchange but runs on the interpreted
-    HOF path — measured 10-16× more CPU at 10x scale, the wrong
-    trade.) Ties break to the lowest centroid id via the struct
-    ordering; integer scores make that exact. Output: (vec_id,
-    centroid_id [, carry...])."""
-    cdf = _centroid_frame(base.sparkSession, centroids)
-    sc = F.struct(
-        (-_cosine_score_q(F.col("e"), F.col("nrm"), F.col("ce"), F.col("cn"))).alias("neg"),
-        F.col("centroid_id").alias("cid"),
-    )
-    aggs = [F.min("sc").alias("best")] + [F.first(c).alias(c) for c in carry]
-    return (
-        base.join(F.broadcast(cdf))
-        .select("vec_id", *carry, sc.alias("sc"))
-        .groupBy("vec_id")
-        .agg(*aggs)
-        .select(
-            "vec_id", F.col("best.cid").alias("centroid_id"), *carry
-        )
-    )
-
-
-def _lloyd(frame: DataFrame, every: int, seed_col: str, assign, key: list,
-           int_col: str, width: int) -> list:
-    """Integer-space Lloyd's shared by the IVF cells and the PQ
-    codebooks. Clusters are keyed by the columns ``key``: the last is
-    the cluster id, the seed vec_id of the deterministic cohort
-    (vec_id % every == 0), and any before it are columns of ``frame``
-    that train side by side in the same run (PQ's subspace m). Seeds
-    [(*key, coords)] come from the cohort's ``seed_col``; then
-    IVF_TRAIN_ITERS rounds of ``assign(cents)`` (a frame keyed by
-    ``key`` carrying the BIGINT ``int_col`` vector) followed by a
-    map-side-partial groupBy of exact INTEGER coordinate sums. Only the
-    C×(width+1) aggregate rows reach the driver — the per-iteration
-    driver materialization of C centroids is the k-means contract
-    (MLlib's KMeans does the same). Empty clusters keep their previous
-    centroid. Sorted by key; [] when the cohort is empty."""
-    seeds = (
-        frame.filter(F.col("vec_id") % every == 0)
-        .select(*key[:-1], "vec_id", seed_col)
-        .collect()
-    )
-    cents = sorted(
-        (*[int(x) for x in r[:-1]], [float(x) for x in r[-1]]) for r in seeds
-    )
-    if not cents:
-        return []
-    for _ in range(IVF_TRAIN_ITERS):
-        sums = (
-            assign(cents)
-            .groupBy(*key)
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                *[F.sum(F.col(int_col)[d]).alias(f"s{d}") for d in range(width)],
-            )
-            .collect()
-        )
-        upd = {
-            tuple(int(r[k]) for k in key):
-                [float(r[f"s{d}"]) / float(r["cnt"]) for d in range(width)]
-            for r in sums
-        }
-        cents = [(*c[:-1], upd.get(c[:-1], c[-1])) for c in cents]
-    return cents
-
-
-def train_ivf_centroids(embeddings: DataFrame, n_dims: int | None = None) -> list:
-    """Distributed Lloyd's for the IVF cells (cosine assignment, see
-    _lloyd). Returns [(cid, coords_micro, norm)] sorted by cid —
-    deterministic on any partitioning because every cross-row reduction
-    is integer. The seed stride is widened so the cell count never
-    exceeds IVF_MAX_CENTROIDS (see _effective_every)."""
-    base = _quantized(embeddings)
-    if n_dims is None:
-        n_dims = _probe_dims(embeddings)
-    if not n_dims:
-        return []
-    cents = _lloyd(
-        base, _effective_every(embeddings), "e",
-        lambda cs: _assign_cosine(base, _normed(cs), carry=["qe"]),
-        ["centroid_id"], "qe", n_dims,
-    )
-    return _normed(cents)
-
-
 def _l2_d2_q(se: Column, ce: Column) -> Column:
     """Quantized micro-scale L2 (whole integer units, BIGINT) — double
     ulp at the 1e12-1e13 magnitudes involved is ~1e-4, five orders
@@ -767,100 +663,155 @@ def _l2_d2_q(se: Column, ce: Column) -> Column:
     return F.floor(_l2(se, ce) + F.lit(0.5)).cast("long")
 
 
-def _assign_l2(sub: DataFrame, books, key_cols, carry: list = ()) -> DataFrame:
-    """Nearest codeword by L2 — the same join-then-partial-argmin shape
-    as _assign_cosine: broadcast the (m, cid, ce) codeword table, score
-    in place, take min(struct(d2_q, cid)) per ``key_cols`` group
-    (map-side partials; only id-rows exchange). ``books`` is
-    {m: [(cid, coords)]}. Output: (*key_cols, cid [, carry...])."""
-    bdf = _codebook_frame(sub.sparkSession, books)
-    sc = F.struct(
-        _l2_d2_q(F.col("se"), F.col("ce")).alias("d2"),
-        F.col("cid").alias("cid"),
-    )
+def _assign(frame: DataFrame, cents: DataFrame, key: list, cost: Column,
+            by: list, carry: list = ()) -> DataFrame:
+    """Nearest centroid of every ``by`` group of ``frame``: broadcast
+    the tiny ``cents`` frame keyed by ``key`` (rows join it on
+    ``key[:-1]``; the centroid id is ``key[-1]``), score each pair in
+    place with the BIGINT ``cost`` (lower is nearer) and take
+    min(struct(cost, id)) per group — a HASH AGGREGATE with map-side
+    partials, so the scored pairs never leave their input partitions;
+    the only exchange carries the id-rows. (The r4 row_number window
+    shuffled every scored pair; a literal-array argmax fold avoids even
+    the id-row exchange but runs on the interpreted HOF path — measured
+    10-16× more CPU at 10x scale, the wrong trade.) Ties break to the
+    lowest centroid id via the struct ordering; integer costs make that
+    exact. Output: (*by, key[-1] [, carry...])."""
+    sc = F.struct(cost.alias("cost"), F.col(key[-1]).alias("cid"))
     aggs = [F.min("sc").alias("best")] + [F.first(c).alias(c) for c in carry]
     return (
-        sub.join(F.broadcast(bdf), "m")
-        .select(*key_cols, *carry, sc.alias("sc"))
-        .groupBy(*key_cols)
+        frame.join(F.broadcast(cents), key[:-1] or None)
+        .select(*by, *carry, sc.alias("sc"))
+        .groupBy(*by)
         .agg(*aggs)
-        .select(*key_cols, F.col("best.cid").alias("cid"), *carry)
+        .select(*by, F.col("best.cid").alias(key[-1]), *carry)
     )
 
 
-def _codebook_frame(spark, books: dict) -> DataFrame:
-    """Tiny (m, cid, ce) codeword frame from {m: [(cid, coords)]} — the
-    broadcast side of PQ assignment and of the ADC lookup tables."""
-    return spark.createDataFrame(
-        [
-            (int(m), int(cid), [float(x) for x in ce])
-            for m, book in sorted(books.items())
-            for cid, ce in book
-        ],
-        "m long, cid long, ce array<double>",
+def _lloyd(vectors: DataFrame, frame: DataFrame, seed_col: str, key: list,
+           assign, int_col: str, width: int) -> DataFrame:
+    """Integer-space Lloyd's shared by the IVF cells and the PQ
+    codebooks, unrolled into one lazy frame the way the DuckDB twins
+    write it. Clusters are keyed by the columns ``key``: the last is
+    the cluster id, the seed vec_id of the deterministic cohort
+    (vec_id % every == 0, ``every`` a scalar subquery over the
+    ``vectors`` count), and any before it are columns of ``frame`` that
+    train side by side in the same run (PQ's subspace m). Seeds are the
+    cohort's ``seed_col`` rows of ``frame``; then IVF_TRAIN_ITERS
+    rounds of ``assign(cents)`` (a frame keyed by ``key`` carrying the
+    BIGINT ``int_col`` vector), a map-side-partial groupBy of exact
+    INTEGER coordinate sums in one ``array(sum(...), ...)`` expression,
+    CAST(sum AS DOUBLE) / CAST(cnt AS DOUBLE) per coordinate (the IEEE
+    division ``float(s) / float(cnt)`` does), and a LEFT JOIN onto the
+    previous centroids, so an empty cluster keeps its centroid. Nothing
+    runs until the caller's action. Output: (*key, ce)."""
+    every = vectors.select(F.expr(
+        f"greatest({IVF_CENTROID_EVERY}, "
+        f"(count(1) + {IVF_MAX_CENTROIDS - 1}) div {IVF_MAX_CENTROIDS})"
+    )).scalar()
+    cents = frame.filter(F.col("vec_id") % every == 0).select(
+        *key[:-1], F.col("vec_id").alias(key[-1]), F.col(seed_col).alias("ce")
     )
+    sums = F.expr(
+        "array(" + ", ".join(f"sum({int_col}[{d}])" for d in range(width)) + ")"
+    )
+    mean = F.expr("transform(s, x -> CAST(x AS DOUBLE) / CAST(cnt AS DOUBLE))")
+    for _ in range(IVF_TRAIN_ITERS):
+        means = (
+            assign(cents)
+            .groupBy(*key)
+            .agg(F.count(F.lit(1)).alias("cnt"), sums.alias("s"))
+            .select(*key, mean.alias("nc"))
+        )
+        cents = cents.join(means, key, "left").select(
+            *key, F.coalesce("nc", "ce").alias("ce")
+        )
+    return cents
 
 
-def train_pq_codebooks(embeddings: DataFrame, n_dims: int) -> dict:
-    """Integer-space Lloyd's over every subspace at once (L2 metric —
-    the standard PQ objective, see _lloyd): one run over the
-    (vec_id, m, se, sq) subspace rows pq_assign encodes, keyed by
-    (m, cid) and seeded from the cohort's sub-vectors, so its jobs do
-    not multiply with PQ_SUBSPACES. Same determinism contract as
-    train_ivf_centroids. Returns {m: [(cid, coords)]} for the
-    PQ_SUBSPACES subspaces; {} when the cohort is empty. Training is
-    the offline path; at scale it runs on a sample, never the full
-    corpus."""
+def _ivf(embeddings: DataFrame, n_dims: int | None):
+    """(base, cells, assign) of one IVF quantizer: the _quantized
+    vectors, their trained cells (centroid_id, ce, cn) — Lloyd's with
+    cosine assignment, the norms cn = sqrt(_dot(ce, ce)) taken in the
+    frame — and every vector's nearest cell (vec_id, centroid_id).
+    ``n_dims=None`` probes the width (_probe_dims, one driver job)."""
+    if n_dims is None:
+        n_dims = _probe_dims(embeddings)
+    base = _quantized(embeddings, n_dims)
+
+    def normed(cs):
+        return cs.withColumn("cn", F.sqrt(_dot(F.col("ce"), F.col("ce"))))
+
+    def nearest(cells, carry=()):
+        cost = -_cosine_score_q(F.col("e"), F.col("nrm"), F.col("ce"), F.col("cn"))
+        return _assign(base, cells, ["centroid_id"], cost, ["vec_id"], carry)
+
+    cells = normed(_lloyd(
+        base, base, "e", ["centroid_id"],
+        lambda cs: nearest(normed(cs), ["qe"]), "qe", n_dims,
+    ))
+    return base, cells, nearest(cells)
+
+
+def train_ivf_centroids(embeddings: DataFrame, n_dims: int | None = None) -> DataFrame:
+    """Distributed Lloyd's for the IVF cells (cosine assignment, see
+    _lloyd), as a lazy frame (centroid_id, ce, cn): the seed vec_id,
+    its micro-unit coordinates and their norm — deterministic on any
+    partitioning because every cross-row reduction is integer. The
+    seed stride is widened so the cell count never exceeds
+    IVF_MAX_CENTROIDS."""
+    return _ivf(embeddings, n_dims)[1]
+
+
+def _pq(embeddings: DataFrame, n_dims: int):
+    """(base, books, codes) of one product quantizer: the _quantized
+    vectors, the codebooks (m, cid, ce) of integer-space Lloyd's over
+    every subspace at once (L2 metric — the standard PQ objective, see
+    _lloyd) and every (vector, subspace)'s nearest codeword (vec_id, m,
+    code_cid). One run over the (vec_id, m, se, sq) subspace rows,
+    keyed by (m, cid) and seeded from the cohort's sub-vectors, so its
+    work does not multiply with PQ_SUBSPACES."""
     if n_dims % PQ_SUBSPACES:
         raise ValueError(
             f"n_dims must split evenly into {PQ_SUBSPACES} subspaces, got {n_dims!r}"
         )
-    sub = _subspace_rows(
-        _quantized(embeddings).select("vec_id", "qe", "e"), "vec_id", n_dims
-    ).withColumn("m", F.col("m").cast("long"))
-    cents = _lloyd(
-        sub, _effective_every(embeddings), "se",
-        lambda cs: _assign_l2(sub, _books(cs), ["vec_id", "m"], carry=["sq"]),
-        ["m", "cid"], "sq", n_dims // PQ_SUBSPACES,
+    base = _quantized(embeddings, n_dims)
+
+    def nearest(sub, books, carry=()):
+        cost = _l2_d2_q(F.col("se"), F.col("ce"))
+        return _assign(sub, books, ["m", "cid"], cost, ["vec_id", "m"], carry)
+
+    sub = _subspace_rows(base.select("vec_id", "qe", "e"), "vec_id", n_dims)
+    books = _lloyd(
+        base, sub, "se", ["m", "cid"],
+        lambda bs: nearest(sub, bs, ["sq"]), "sq", n_dims // PQ_SUBSPACES,
     )
-    return _books(cents)
+    codes = nearest(
+        _subspace_rows(base.select("vec_id", "e"), "vec_id", n_dims), books
+    ).select("vec_id", "m", F.col("cid").alias("code_cid"))
+    return base, books, codes
 
 
-def _books(cents: list) -> dict:
-    """{m: [(cid, coords)]} from _lloyd's sorted [(m, cid, coords)]."""
-    books: dict = {}
-    for m, cid, ce in cents:
-        books.setdefault(m, []).append((cid, ce))
-    return books
+def train_pq_codebooks(embeddings: DataFrame, n_dims: int) -> DataFrame:
+    """The PQ_SUBSPACES codebooks as a lazy frame (m, cid, ce) — same
+    determinism contract as train_ivf_centroids. Training is the
+    offline path; at scale it runs on a sample, never the full
+    corpus."""
+    return _pq(embeddings, n_dims)[1]
 
 
-def pq_assign(
-    embeddings: DataFrame, n_dims: int, codebooks: dict | None = None
-) -> DataFrame:
+def pq_assign(embeddings: DataFrame, n_dims: int) -> DataFrame:
     """Product-quantization encoding: per (vector, subspace) the id of
     the nearest TRAINED codeword by L2 (ties → lowest centroid id).
     Round-5 verdict #2 shape: one generate (subspace explode) + one
     broadcast join against the codeword table + a per-(vector,
     subspace) argmin as min(struct(d2_q, cid)) with MAP-SIDE partial
-    aggregation — the only exchange carries N·PQ_SUBSPACES id-rows,
-    never the N·PQ_SUBSPACES·C scored rows the old row_number window
-    shuffled. Zero Window (plan-asserted in
-    tests/test_similarity_scale.py).
-    Output: (vec_id, m, code_cid)."""
-    if codebooks is None:
-        codebooks = train_pq_codebooks(embeddings, n_dims)
-    if not codebooks:
-        return embeddings.select(
-            "vec_id",
-            F.lit(0).cast("long").alias("m"),
-            F.lit(0).cast("long").alias("code_cid"),
-        ).limit(0)
-    base = _quantized(embeddings)
-    vexp = _subspace_rows(base.select("vec_id", "e"), "vec_id", n_dims)
-    vexp = vexp.withColumn("m", F.col("m").cast("long"))
-    return _assign_l2(vexp, codebooks, ["vec_id", "m"]).select(
-        "vec_id", "m", F.col("cid").alias("code_cid")
-    )
+    aggregation — the only assignment exchange carries N·PQ_SUBSPACES
+    id-rows, never the N·PQ_SUBSPACES·C scored rows the old row_number
+    window shuffled. Zero Window (plan-asserted in
+    tests/test_similarity_scale.py). Vectors _quantized drops get no
+    code. Output: (vec_id, m, code_cid)."""
+    return _pq(embeddings, n_dims)[2]
 
 
 def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
@@ -884,18 +835,13 @@ def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
     Both scores are rounded to micro-units (BIGINT) so FP summation
     order can't flip equal-score neighbors; ties break by neighbor id.
     Codebooks are TRAINED (one integer-space Lloyd's over all
-    subspaces, train_pq_codebooks); codes come from pq_assign. Both
-    stages run in the micro scale (cosine is scale-invariant): the
-    exact re-rank scores the candidates' and queries' _quantized
-    micro-unit image e by its norm nrm, not the raw float vectors.
-    Queries are the vec_id % ANN_QUERY_EVERY cohort; ANN_TOP_K
-    neighbors each. Output: (query_id, rank, neighbor_id)."""
-    codebooks = train_pq_codebooks(embeddings, n_dims)
-    if not codebooks:
-        return _empty_topk(embeddings)
-    cexp = _codebook_frame(embeddings.sparkSession, codebooks)
-    codes = pq_assign(embeddings, n_dims, codebooks=codebooks)
-    base = _quantized(embeddings)
+    subspaces, _pq) and the codes are pq_assign's. Both stages run in
+    the micro scale (cosine is scale-invariant): the exact re-rank
+    scores the candidates' and queries' _quantized micro-unit image e
+    by its norm nrm, not the raw float vectors. Queries are the
+    vec_id % ANN_QUERY_EVERY cohort; ANN_TOP_K neighbors each.
+    Output: (query_id, rank, neighbor_id)."""
+    base, cexp, codes = _pq(embeddings, n_dims)
     qbase = base.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0)
     qexp = _subspace_rows(
         qbase.select("vec_id", "e"), "query_id", n_dims
@@ -946,30 +892,20 @@ def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: list | None = None,
-    n_dims: int | None = None,
-) -> DataFrame:
+def ivf_assign(embeddings: DataFrame, n_dims: int | None = None) -> DataFrame:
     """IVF coarse quantization against TRAINED centroids (Lloyd's,
     seeded from the vec_id % IVF_CENTROID_EVERY cohort; cluster ids stay
     the seed vec_ids): every vector goes to its nearest centroid by
     cosine (ties → lowest centroid id). Round-5 verdict #2 shape: the
     broadcast-join scores stay in their input partitions and the
     per-vector argmax is a hash aggregate with MAP-SIDE PARTIALS —
-    the only exchange carries N (vec_id, best) id-rows, never the N×C
-    scored rows the old row_number window shuffled (at 10^12 vectors
-    × 100 centroids that shuffle IS the job). Zero Window, a single
-    id-row Exchange — plan-asserted. Pass ``centroids`` (from
-    train_ivf_centroids) to share one trained table across assignment
-    + search. Output: (vec_id, centroid_id)."""
-    if centroids is None:
-        centroids = train_ivf_centroids(embeddings, n_dims=n_dims)
-    if not centroids:
-        return embeddings.select(
-            "vec_id", F.lit(0).cast("long").alias("centroid_id")
-        ).limit(0)
-    return _assign_cosine(_quantized(embeddings), centroids)
+    the only assignment exchange carries N (vec_id, best) id-rows,
+    never the N×C scored rows the old row_number window shuffled (at
+    10^12 vectors × 100 centroids that shuffle IS the job). Zero
+    Window — plan-asserted. Training is part of the same lazy plan, so
+    building this runs no Spark job when ``n_dims`` is given. Vectors
+    _quantized drops get no cell. Output: (vec_id, centroid_id)."""
+    return _ivf(embeddings, n_dims)[2]
 
 
 def ivf_probed_topk(embeddings: DataFrame, n_dims: int | None = None) -> DataFrame:
@@ -984,20 +920,13 @@ def ivf_probed_topk(embeddings: DataFrame, n_dims: int | None = None) -> DataFra
     joins on the cell id and broadcasts the query vectors back in, so
     no stage ever shuffles the full vector set against the queries.
     Output: (query_id, rank, neighbor_id)."""
-    centroids = train_ivf_centroids(embeddings, n_dims=n_dims)
-    if not centroids:
-        return _empty_topk(embeddings)
-    assign = ivf_assign(embeddings, centroids=centroids)
-    base = _quantized(embeddings)
-
+    base, cells, assign = _ivf(embeddings, n_dims)
     queries = base.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qv"),
         F.col("nrm").alias("qn"),
     )
-    cscored = queries.join(
-        F.broadcast(_centroid_frame(embeddings.sparkSession, centroids))
-    ).select(
+    cscored = queries.join(F.broadcast(cells)).select(
         "query_id", "centroid_id",
         _cosine_score_q(F.col("qv"), F.col("qn"), F.col("ce"), F.col("cn")).alias("score_q"),
     )
