@@ -1,6 +1,8 @@
 """ANN scale-path semantics (round 2): bucketed search actually
 searches, near-dups never go cartesian, recall is measured."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,6 +113,18 @@ def test_ivf_probed_topk_recall(spark):
     probed = {(r[0], r[2]) for r in similarity.ivf_probed_topk(emb).collect()}
     # 4-probe IVF on this corpus reaches near-exact recall
     assert len(probed & exact) / len(exact) >= 0.8
+
+
+def test_ivf_probed_topk_reads_the_query_cohort_once(spark):
+    """The probe rows carry each query's vector and norm through the
+    ``_topk`` tail (``keep``), so candidate scoring never joins the
+    query cohort back in: the plan holds no join on query_id (that
+    join-back read the embeddings a second time)."""
+    plan = (
+        similarity.ivf_probed_topk(_emb(spark), n_dims=64)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert not re.search(r"Join \w+, \(query_id#\d+L? = query_id#\d+L?\)", plan)
 
 
 def test_lsh_sign_buckets_no_driver_probe(spark):
@@ -267,7 +281,7 @@ def test_cosine_topk_bit_parity_with_jvm_fold(spark):
             F.broadcast(queries), F.col("vec_id") != F.col("query_id")
         ).withColumn(
             "score",
-            similarity._dot(F.col("qe"), F.col("e"))
+            F.expr(similarity._dot("qe", "e"))
             / (F.col("qn") * F.col("nrm")),
         )
         w = Window.partitionBy("query_id").orderBy(
@@ -504,7 +518,7 @@ def test_lsh_routing_bit_parity_with_jvm_fold(spark):
     def jvm_reference(flip_cells):
         e = F.transform("embedding", lambda x: x.cast("double"))
         projs = [
-            similarity._dot(F.col("e"), F.array(*[F.lit(s) for s in signs]))
+            F.expr(similarity._dot("e", f"array({', '.join(f'{s!r}D' for s in signs)})"))
             for signs in planes
         ]
 

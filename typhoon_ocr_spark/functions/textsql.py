@@ -11,7 +11,23 @@ Determinism-across-engines rules used throughout:
   lexicographic string minima — no integer hash conversions;
 - float outputs are avoided or pre-rounded and cast to BIGINT;
 - ties are always broken by an id column.
+
+Spark SQL texts built from these constants (the operators' selectExpr
+/ F.expr projections) quote every string constant with ``sql_string``.
 """
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal, for SQL texts built from
+    constants. A backslash reads differently under
+    ``spark.sql.parser.escapedStringLiterals`` and a quote ends or
+    escapes the literal, so a value holding either raises ValueError:
+    such a constant stays a Column literal (``F.lit``, a pattern
+    argument), which no parser reads."""
+    if "\\" in value or "'" in value or '"' in value:
+        raise ValueError(f"not a plain SQL string literal: {value!r}")
+    return f"'{value}'"
+
 
 # Word tokens: lowercase alnum runs (ASCII); empties filtered.
 WORD_SPLIT_PATTERN = "[^a-z0-9]+"

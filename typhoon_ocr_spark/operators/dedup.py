@@ -28,11 +28,20 @@ Scale notes:
   forest per partition) then one union-find task over the forests, so
   the last task holds every node with an edge (99 MB and 6-11 s end
   to end at 10^6 nodes); the min-member root is the cluster id.
+
+Build cost: the token, bucket-pair and SimHash projections are Spark
+SQL texts (``selectExpr`` / ``where`` / ``F.expr``) holding constant
+literals only — never values read from the data — with every string
+constant quoted by ``textsql.sql_string``; the JVM parses each text in
+one call, where the same Column expression is built node by node over
+py4j. Each text is written to analyze to the plan the Column form gave
+(a bare ``1000.0`` in Spark SQL is DECIMAL, so doubles carry ``D``).
+Patterns that hold a backslash stay Column literals.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textsql import (
@@ -46,16 +55,20 @@ from ..functions.textsql import (
     SIMHASH_MAX_HAMMING,
     WORD_SPLIT_PATTERN,
     simhash_segment_bounds,
+    sql_string,
 )
 from ..functions.udfs import row_map
 from ..plans.spread import maybe_spread
 
 
-def word_tokens(col: Column) -> Column:
-    """Lowercase alnum word tokens, empties dropped."""
-    return F.filter(
-        F.split(F.lower(col), WORD_SPLIT_PATTERN), lambda x: x != F.lit("")
-    )
+def word_tokens(col: str) -> str:
+    """Lowercase alnum word tokens of the column ``col``, empties
+    dropped, as a SQL text."""
+    return f"filter({_split_lower(col)}, x -> x != '')"
+
+
+def _split_lower(col: str) -> str:
+    return f"split(lower({col}), {sql_string(WORD_SPLIT_PATTERN)})"
 
 
 def exact_dup_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -125,9 +138,9 @@ def _raw_tokens(documents: DataFrame, text_col: str) -> DataFrame:
     per-document cores drop them). The one input shape of the
     token-level row_map passes (MinHash bands, Jaccard sets, shingle
     hashes, SimHash, top bigram)."""
-    return maybe_spread(documents.select("doc_id", text_col), "doc_id").select(
-        "doc_id",
-        F.split(F.lower(F.col(text_col)), WORD_SPLIT_PATTERN).alias("_rawtoks"),
+    narrow = documents.selectExpr("doc_id", text_col)
+    return maybe_spread(narrow, "doc_id", source=documents).selectExpr(
+        "doc_id", f"{_split_lower(text_col)} AS _rawtoks"
     )
 
 
@@ -183,28 +196,23 @@ def _bucket_pairs(frame, bucket_cols, member_col, max_bucket, payload_cols=None)
     """(bucket → members) → distinct within-bucket pairs, OOM-safe:
     bucket sizes come from a window count so oversized buckets are
     dropped before collect_list buffers anything; the subsequent
-    groupBy reuses the window exchange."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*bucket_cols)
-    member = F.struct(member_col, *(payload_cols or []))
-    capped = (
-        frame.withColumn("_bsz", F.count(F.lit(1)).over(w))
-        .filter((F.col("_bsz") > 1) & (F.col("_bsz") <= max_bucket))
-    )
-    buckets = capped.groupBy(*bucket_cols).agg(
-        F.array_sort(F.collect_list(member)).alias("ms")
-    )
+    groupBy reuses the window exchange. With ``payload_cols`` the
+    output is the (a, b) member structs, else (doc_a, doc_b)."""
+    keys = ", ".join(bucket_cols)
+    member = ", ".join([member_col, *(payload_cols or [])])
     pairs = (
-        buckets.select(F.explode("ms").alias("a"), "ms")
-        .select("a", F.explode("ms").alias("b"))
-        .filter(F.col(f"a.{member_col}") < F.col(f"b.{member_col}"))
+        frame.selectExpr("*", f"count(1) OVER (PARTITION BY {keys}) AS _bsz")
+        .where(f"_bsz > 1 AND _bsz <= {max_bucket:d}")
+        .groupBy(*bucket_cols)
+        .agg(F.expr(f"array_sort(collect_list(struct({member}))) AS ms"))
+        .selectExpr("explode(ms) AS a", "ms")
+        .selectExpr("a", "explode(ms) AS b")
+        .where(f"a.{member_col} < b.{member_col}")
     )
     if payload_cols:
         return pairs
-    return pairs.select(
-        F.col(f"a.{member_col}").alias("doc_a"),
-        F.col(f"b.{member_col}").alias("doc_b"),
+    return pairs.selectExpr(
+        f"a.{member_col} AS doc_a", f"b.{member_col} AS doc_b"
     ).distinct()
 
 
@@ -281,34 +289,27 @@ def simhash_pairs_from_fingerprints(
     it, the bigint is the bucket payload, and Hamming distance is one
     ``bit_count(a ^ b)``. Null fingerprints are dropped at entry, so
     they never pair."""
-    fp = sh.filter(F.col("simhash").isNotNull()).select(
-        "doc_id", F.conv("simhash", 2, 10).cast("long").alias("simhash")
-    )
-    segs = [
-        F.struct(
-            F.lit(i).alias("seg"),
-            F.shiftrightunsigned("simhash", SIMHASH_BITS - start + 1 - length)
-            .bitwiseAND((1 << length) - 1)
-            .alias("seg_val"),
-        )
+    segs = ", ".join(
+        f"struct({i} AS seg, shiftrightunsigned(simhash, "
+        f"{SIMHASH_BITS - start + 1 - length}) & {(1 << length) - 1} AS seg_val)"
         for i, (start, length) in enumerate(simhash_segment_bounds())
-    ]
-    exploded = fp.select(
-        "doc_id", "simhash", F.explode(F.array(*segs)).alias("s")
-    ).select("doc_id", "simhash", "s.seg", "s.seg_val")
-
+    )
+    exploded = (
+        sh.where("simhash IS NOT NULL")
+        .selectExpr("doc_id", "CAST(conv(simhash, 2, 10) AS BIGINT) AS simhash")
+        .selectExpr("doc_id", "simhash", f"explode(array({segs})) AS s")
+        .selectExpr("doc_id", "simhash", "s.seg", "s.seg_val")
+    )
     pairs = _bucket_pairs(
         exploded, ["seg", "seg_val"], "doc_id", max_bucket, payload_cols=["simhash"]
     )
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        pairs.withColumn("hamming", hamming.cast("long"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            "hamming",
+        pairs.selectExpr(
+            "a.doc_id AS doc_a",
+            "b.doc_id AS doc_b",
+            "CAST(bit_count(a.simhash ^ b.simhash) AS BIGINT) AS hamming",
         )
+        .where(f"hamming <= {max_hamming:d}")
         .distinct()
     )
 
@@ -316,8 +317,7 @@ def simhash_pairs_from_fingerprints(
 def simhash_near_dups(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """SimHash near-dup pairs over a document corpus (fingerprints +
     pigeonhole blocking). Output: (doc_a, doc_b, hamming)."""
-    sh = simhash_fingerprints(documents, text_col).select("doc_id", "simhash")
-    return simhash_pairs_from_fingerprints(sh)
+    return simhash_pairs_from_fingerprints(simhash_fingerprints(documents, text_col))
 
 
 def jaccard_pairs(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -348,12 +348,11 @@ def jaccard_pairs(documents: DataFrame, text_col: str = "text") -> DataFrame:
     pairs = _bucket_pairs(
         rows, ["band", "band_hash"], "doc_id", MINHASH_MAX_BUCKET, payload_cols=["shset"]
     )
-    inter = F.size(F.array_intersect(F.col("a.shset"), F.col("b.shset")))
-    union = F.size(F.array_union(F.col("a.shset"), F.col("b.shset")))
-    return pairs.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.round(F.lit(100.0) * inter / union).cast("long").alias("jaccard_pct"),
+    return pairs.selectExpr(
+        "a.doc_id AS doc_a",
+        "b.doc_id AS doc_b",
+        "CAST(round(100.0D * size(array_intersect(a.shset, b.shset))"
+        " / size(array_union(a.shset, b.shset))) AS BIGINT) AS jaccard_pct",
     ).distinct()
 
 

@@ -185,7 +185,7 @@ def sequence_pack_plan(
 
     if shards is None:
         shards = auto_pack_shards(documents.sparkSession)
-    toks = F.size(word_tokens(F.col(text_col))).cast("long")
+    toks = F.expr(f"CAST(size({word_tokens(text_col)}) AS BIGINT)")
     frame = documents.select(
         "doc_id", (F.col("doc_id") % shards).cast("long").alias("shard"),
         toks.alias("n_tokens"),

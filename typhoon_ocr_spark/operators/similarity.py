@@ -39,15 +39,18 @@ Scale notes:
   broadcast centroid table;
 - IVF and PQ drop null, null-element and wrong-width vectors at their
   input (``_quantized``), the rule ``_list_col_matrix`` applies to the
-  NumPy passes.
+  NumPy passes;
+- the folds, scores, windows and projections are SQL texts of
+  constant literals (``selectExpr`` / ``where`` / ``F.expr``), as in
+  dedup.py: each text is parsed in one JVM call and analyzes to the
+  plan the Column form gave.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-from pyspark.sql.window import Window
 
 from ..functions.textsql import ANN_QUERY_EVERY, ANN_TOP_K
 from ..plans.spread import maybe_spread
@@ -89,19 +92,19 @@ def _common_width(counts) -> int:
     return max(counts, key=lambda n: (counts[n], n), default=0)
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
+def _dot(a: str, b: str) -> str:
+    """The JVM fold a·b over two array columns, as a SQL text: one
+    rounded multiply and one rounded add per dimension, in order."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
+        "(acc, v) -> acc + v)"
     )
 
 
 def _with_norm(embeddings: DataFrame) -> DataFrame:
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    return embeddings.select(
-        "vec_id", e.alias("e")
-    ).withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
+    return embeddings.selectExpr(
+        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS e"
+    ).selectExpr("*", f"sqrt({_dot('e', 'e')}) AS nrm")
 
 
 def cosine_topk(
@@ -130,8 +133,8 @@ def cosine_topk(
     join build side it replaces (at 10^12 vectors the driver batches
     the query set, as for the ANN LUTs)."""
     rows = (
-        embeddings.filter(F.col("vec_id") % query_every == 0)
-        .select("vec_id", "embedding")
+        embeddings.where(f"vec_id % {query_every:d} = 0")
+        .selectExpr("vec_id", "embedding")
         .collect()
     )
     rows = _clean_query_rows(rows)
@@ -152,30 +155,29 @@ def cosine_topk(
         yield from _topk_stream(batches, ids_b, qm_b, qn_b, k, _np)
 
     parts = maybe_spread(
-        embeddings.select("vec_id", "embedding"), "vec_id"
+        embeddings.selectExpr("vec_id", "embedding"), "vec_id", source=embeddings
     ).mapInArrow(score_partition, out_schema)
     return _topk(parts, "score", "neighbor_id", k)
 
 
-def _topk(scored: DataFrame, score: str, id_col: str, k: int) -> DataFrame:
+def _topk(scored: DataFrame, score: str, id_col: str, k: int,
+          keep: tuple = ()) -> DataFrame:
     """The ranking tail of every search operator: the best ``k`` rows
-    per query_id by (``score`` DESC, ``id_col`` ASC).
-    Output: (query_id, rank BIGINT, id_col)."""
-    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(id_col))
+    per query_id by (``score`` DESC, ``id_col`` ASC), as SQL texts.
+    Output: (query_id, rank BIGINT, id_col, *keep)."""
+    order = f"PARTITION BY query_id ORDER BY {score} DESC, {id_col} ASC"
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"), id_col)
+        scored.selectExpr("*", f"row_number() OVER ({order}) AS rank")
+        .where(f"rank <= {k:d}")
+        .selectExpr("query_id", "CAST(rank AS BIGINT) AS rank", id_col, *keep)
     )
 
 
 def _empty_topk(embeddings: DataFrame) -> DataFrame:
     """The 0-row (query_id, rank, neighbor_id) search result: no query
     survived, or there is no trained quantizer to search with."""
-    return embeddings.select(
-        F.col("vec_id").alias("query_id"),
-        F.lit(0).cast("long").alias("rank"),
-        F.col("vec_id").alias("neighbor_id"),
+    return embeddings.selectExpr(
+        "vec_id AS query_id", "CAST(0 AS BIGINT) AS rank", "vec_id AS neighbor_id"
     ).limit(0)
 
 
@@ -329,18 +331,18 @@ def embedding_near_dups_exact(embeddings: DataFrame) -> DataFrame:
     """Exact all-pairs near-dup reference (O(N^2) — verification-grade
     only; never run this at scale). Output: (vec_a, vec_b, cos_pct)."""
     base = _with_norm(embeddings)
-    a = base.select(
-        F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"), F.col("nrm").alias("na")
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb")
-    )
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+    a = base.selectExpr("vec_id AS vec_a", "e AS ea", "nrm AS na")
+    b = base.selectExpr("vec_id AS vec_b", "e AS eb", "nrm AS nb")
+    return _near_dup_rows(a.join(b, F.expr("vec_a < vec_b")))
+
+
+def _near_dup_rows(joined: DataFrame) -> DataFrame:
+    """(vec_a, vec_b, cos_pct) of the joined (ea, na, eb, nb) pairs
+    whose cosine is above NEAR_DUP_COSINE."""
     return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos", cos)
-        .filter(F.col("cos") > NEAR_DUP_COSINE)
-        .select("vec_a", "vec_b", F.floor(F.col("cos") * 100).cast("long").alias("cos_pct"))
+        joined.selectExpr("*", f"{_dot('ea', 'eb')} / (na * nb) AS cos")
+        .where(f"cos > {NEAR_DUP_COSINE!r}D")
+        .selectExpr("vec_a", "vec_b", "CAST(FLOOR(cos * 100) AS BIGINT) AS cos_pct")
     )
 
 
@@ -362,7 +364,7 @@ def _lsh_routing(embeddings: DataFrame, n_dims: int | None, n_tables: int,
     (_probe_dims). A 0-width frame routes nothing."""
     import numpy as np
 
-    src = embeddings.select(F.col("vec_id").alias(id_col), "embedding")
+    src = embeddings.selectExpr(f"vec_id AS {id_col}", "embedding")
     dims = _probe_dims(src) if n_dims is None else n_dims
     planes = np.array(lsh_plane_signs(dims, n_tables * planes_per_table))
     schema = StructType([
@@ -434,7 +436,7 @@ def lsh_query_probes(
     if multiprobe not in (0, 1):
         raise ValueError(f"multiprobe must be 0 or 1, got {multiprobe!r}")
     return _lsh_routing(
-        embeddings.filter(F.col("vec_id") % query_every == 0), n_dims,
+        embeddings.where(f"vec_id % {query_every:d} = 0"), n_dims,
         ANN_LSH_TABLES, ANN_LSH_PLANES_PER_TABLE, multiprobe, id_col="query_id",
     )
 
@@ -455,19 +457,13 @@ def embedding_near_dups(
     # guess here is an unbounded driver-memory build at scale (observed
     # OOM at 50k vectors with correlated buckets); sort-merge never
     # builds anything in one memory
-    pairs = _bucket_pairs(buckets, ["t", "bucket"], "vec_id", EMB_MAX_BUCKET).select(
-        F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b")
+    pairs = _bucket_pairs(buckets, ["t", "bucket"], "vec_id", EMB_MAX_BUCKET).selectExpr(
+        "doc_a AS vec_a", "doc_b AS vec_b"
     ).hint("merge")
     base = _with_norm(embeddings)
-    a = base.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"), F.col("nrm").alias("na"))
-    b = base.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"), F.col("nrm").alias("nb"))
-    cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    return (
-        pairs.join(a, "vec_a").join(b, "vec_b")
-        .withColumn("cos", cos)
-        .filter(F.col("cos") > NEAR_DUP_COSINE)
-        .select("vec_a", "vec_b", F.floor(F.col("cos") * 100).cast("long").alias("cos_pct"))
-    )
+    a = base.selectExpr("vec_id AS vec_a", "e AS ea", "nrm AS na")
+    b = base.selectExpr("vec_id AS vec_b", "e AS eb", "nrm AS nb")
+    return _near_dup_rows(pairs.join(a, "vec_a").join(b, "vec_b"))
 
 
 def lsh_bucketed_topk(
@@ -498,29 +494,28 @@ def lsh_bucketed_topk(
     qb = lsh_query_probes(
         embeddings, query_every=query_every, n_dims=n_dims, multiprobe=multiprobe
     )
-    w = Window.partitionBy("t", "bucket")
-    capped = buckets.withColumn("_csz", F.count(F.lit(1)).over(w)).filter(
-        F.col("_csz") <= max_bucket
-    )
+    capped = buckets.selectExpr(
+        "*", "count(1) OVER (PARTITION BY t, bucket) AS _csz"
+    ).where(f"_csz <= {max_bucket:d}")
     # broadcast the tiny query-side routing rows; candidate ids dedupe
     # before any vector is joined back in
     cand = (
         capped.join(F.broadcast(qb), ["t", "bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+        .where("vec_id != query_id")
+        .selectExpr("query_id", "vec_id AS neighbor_id")
         .distinct()
         # candidate cardinality is planner-opaque: never let it be the
         # broadcast-build side of the vector join (see embedding_near_dups)
         .hint("merge")
     )
     base = _with_norm(embeddings)
-    queries = base.filter(F.col("vec_id") % query_every == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
+    queries = base.where(f"vec_id % {query_every:d} = 0").selectExpr(
+        "vec_id AS query_id", "e AS qe", "nrm AS qn"
     )
     scored = (
         cand.join(base.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
         .join(F.broadcast(queries), "query_id")
-        .withColumn("score", _dot(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm")))
+        .selectExpr("*", f"{_dot('qe', 'e')} / (qn * nrm) AS score")
     )
     return _topk(scored, "score", "neighbor_id", k)
 
@@ -598,11 +593,12 @@ PQ_SUBSPACES = 4
 PQ_RERANK_C = 192
 
 
-def _l2(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
+def _l2(a: str, b: str) -> str:
+    """The squared L2 distance fold of two array columns, as a SQL
+    text (the order of ``_dot``)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+        "0.0D, (acc, v) -> acc + v)"
     )
 
 
@@ -613,16 +609,15 @@ def _subspace_rows(frame: DataFrame, id_alias: str, n_dims: int) -> DataFrame:
     n_dims % PQ_SUBSPACES == 0."""
     width = n_dims // PQ_SUBSPACES
     cols = [(c, a) for c, a in (("e", "se"), ("qe", "sq")) if c in frame.columns]
-    subs = [
-        F.struct(
-            F.lit(m).cast("long").alias("m"),
-            *[F.slice(F.col(c), m * width + 1, width).alias(a) for c, a in cols],
-        )
+    subs = ", ".join(
+        f"struct(CAST({m} AS BIGINT) AS m"
+        + "".join(f", slice({c}, {m * width + 1}, {width}) AS {a}" for c, a in cols)
+        + ")"
         for m in range(PQ_SUBSPACES)
-    ]
-    return frame.select(
-        F.col("vec_id").alias(id_alias), F.explode(F.array(*subs)).alias("s")
-    ).select(id_alias, "s.m", *[f"s.{a}" for _, a in cols])
+    )
+    return frame.selectExpr(
+        f"vec_id AS {id_alias}", f"explode(array({subs})) AS s"
+    ).selectExpr(id_alias, "s.m", *[f"s.{a}" for _, a in cols])
 
 
 def _quantized(embeddings: DataFrame, n_dims: int) -> DataFrame:
@@ -634,36 +629,32 @@ def _quantized(embeddings: DataFrame, n_dims: int) -> DataFrame:
     wrong-width vectors are dropped here, by the _list_col_matrix rule
     as one SQL predicate, so they neither train, nor get a cell or
     code, nor query."""
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * F.lit(MICRO) + F.lit(0.5)).cast("long"),
-    )
-    kept = embeddings.filter(
-        F.expr(f"size(embedding) = {n_dims} AND forall(embedding, x -> x IS NOT NULL)")
-    )
+    q = f"transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * {MICRO!r}D + 0.5D) AS BIGINT))"
     return (
-        kept.select("vec_id", q.alias("qe"))
-        .withColumn("e", F.transform(F.col("qe"), lambda x: x.cast("double")))
-        .withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
+        embeddings.where(f"size(embedding) = {n_dims:d} AND forall(embedding, x -> x IS NOT NULL)")
+        .selectExpr("vec_id", f"{q} AS qe")
+        .selectExpr("*", "transform(qe, x -> CAST(x AS DOUBLE)) AS e")
+        .selectExpr("*", f"sqrt({_dot('e', 'e')}) AS nrm")
     )
 
 
-def _cosine_score_q(e: Column, nrm: Column, ce: Column, cn: Column) -> Column:
-    """Quantized cosine (1e-12 units, BIGINT) — integer comparisons, so
-    a sub-ulp engine difference can never flip an argmax."""
-    return F.floor(
-        _dot(e, ce) / (nrm * cn) * F.lit(SCORE_SCALE) + F.lit(0.5)
-    ).cast("long")
+def _cosine_score_q(e: str, nrm: str, ce: str, cn: str) -> str:
+    """Quantized cosine (1e-12 units, BIGINT) as a SQL text — integer
+    comparisons, so a sub-ulp engine difference can never flip an
+    argmax."""
+    return (
+        f"CAST(FLOOR({_dot(e, ce)} / ({nrm} * {cn}) * {SCORE_SCALE!r}D + 0.5D) AS BIGINT)"
+    )
 
 
-def _l2_d2_q(se: Column, ce: Column) -> Column:
-    """Quantized micro-scale L2 (whole integer units, BIGINT) — double
-    ulp at the 1e12-1e13 magnitudes involved is ~1e-4, five orders
-    below the quantum, so the argmin is engine-exact."""
-    return F.floor(_l2(se, ce) + F.lit(0.5)).cast("long")
+def _l2_d2_q(se: str, ce: str) -> str:
+    """Quantized micro-scale L2 (whole integer units, BIGINT) as a SQL
+    text — double ulp at the 1e12-1e13 magnitudes involved is ~1e-4,
+    five orders below the quantum, so the argmin is engine-exact."""
+    return f"CAST(FLOOR({_l2(se, ce)} + 0.5D) AS BIGINT)"
 
 
-def _assign(frame: DataFrame, cents: DataFrame, key: list, cost: Column,
+def _assign(frame: DataFrame, cents: DataFrame, key: list, cost: str,
             by: list, carry: list = ()) -> DataFrame:
     """Nearest centroid of every ``by`` group of ``frame``: broadcast
     the tiny ``cents`` frame keyed by ``key`` (rows join it on
@@ -676,15 +667,14 @@ def _assign(frame: DataFrame, cents: DataFrame, key: list, cost: Column,
     the id-row exchange but runs on the interpreted HOF path — measured
     10-16× more CPU at 10x scale, the wrong trade.) Ties break to the
     lowest centroid id via the struct ordering; integer costs make that
-    exact. Output: (*by, key[-1] [, carry...])."""
-    sc = F.struct(cost.alias("cost"), F.col(key[-1]).alias("cid"))
-    aggs = [F.min("sc").alias("best")] + [F.first(c).alias(c) for c in carry]
+    exact. ``cost`` is a SQL text. Output: (*by, key[-1] [, carry...])."""
+    aggs = [F.expr("min(sc) AS best")] + [F.expr(f"first({c}) AS {c}") for c in carry]
     return (
         frame.join(F.broadcast(cents), key[:-1] or None)
-        .select(*by, *carry, sc.alias("sc"))
+        .selectExpr(*by, *carry, f"struct({cost} AS cost, {key[-1]} AS cid) AS sc")
         .groupBy(*by)
         .agg(*aggs)
-        .select(*by, F.col("best.cid").alias(key[-1]), *carry)
+        .selectExpr(*by, f"best.cid AS {key[-1]}", *carry)
     )
 
 
@@ -709,23 +699,20 @@ def _lloyd(vectors: DataFrame, frame: DataFrame, seed_col: str, key: list,
         f"greatest({IVF_CENTROID_EVERY}, "
         f"(count(1) + {IVF_MAX_CENTROIDS - 1}) div {IVF_MAX_CENTROIDS})"
     )).scalar()
-    cents = frame.filter(F.col("vec_id") % every == 0).select(
-        *key[:-1], F.col("vec_id").alias(key[-1]), F.col(seed_col).alias("ce")
+    cents = frame.filter(F.col("vec_id") % every == 0).selectExpr(
+        *key[:-1], f"vec_id AS {key[-1]}", f"{seed_col} AS ce"
     )
-    sums = F.expr(
-        "array(" + ", ".join(f"sum({int_col}[{d}])" for d in range(width)) + ")"
-    )
-    mean = F.expr("transform(s, x -> CAST(x AS DOUBLE) / CAST(cnt AS DOUBLE))")
+    sums = "array(" + ", ".join(f"sum({int_col}[{d}])" for d in range(width)) + ") AS s"
     for _ in range(IVF_TRAIN_ITERS):
         means = (
             assign(cents)
             .groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("cnt"), sums.alias("s"))
-            .select(*key, mean.alias("nc"))
+            .agg(F.expr("count(1) AS cnt"), F.expr(sums))
+            .selectExpr(
+                *key, "transform(s, x -> CAST(x AS DOUBLE) / CAST(cnt AS DOUBLE)) AS nc"
+            )
         )
-        cents = cents.join(means, key, "left").select(
-            *key, F.coalesce("nc", "ce").alias("ce")
-        )
+        cents = cents.join(means, key, "left").selectExpr(*key, "coalesce(nc, ce) AS ce")
     return cents
 
 
@@ -740,10 +727,10 @@ def _ivf(embeddings: DataFrame, n_dims: int | None):
     base = _quantized(embeddings, n_dims)
 
     def normed(cs):
-        return cs.withColumn("cn", F.sqrt(_dot(F.col("ce"), F.col("ce"))))
+        return cs.selectExpr("*", f"sqrt({_dot('ce', 'ce')}) AS cn")
 
     def nearest(cells, carry=()):
-        cost = -_cosine_score_q(F.col("e"), F.col("nrm"), F.col("ce"), F.col("cn"))
+        cost = f"-{_cosine_score_q('e', 'nrm', 'ce', 'cn')}"
         return _assign(base, cells, ["centroid_id"], cost, ["vec_id"], carry)
 
     cells = normed(_lloyd(
@@ -778,17 +765,17 @@ def _pq(embeddings: DataFrame, n_dims: int):
     base = _quantized(embeddings, n_dims)
 
     def nearest(sub, books, carry=()):
-        cost = _l2_d2_q(F.col("se"), F.col("ce"))
+        cost = _l2_d2_q("se", "ce")
         return _assign(sub, books, ["m", "cid"], cost, ["vec_id", "m"], carry)
 
-    sub = _subspace_rows(base.select("vec_id", "qe", "e"), "vec_id", n_dims)
+    sub = _subspace_rows(base.selectExpr("vec_id", "qe", "e"), "vec_id", n_dims)
     books = _lloyd(
         base, sub, "se", ["m", "cid"],
         lambda bs: nearest(sub, bs, ["sq"]), "sq", n_dims // PQ_SUBSPACES,
     )
     codes = nearest(
-        _subspace_rows(base.select("vec_id", "e"), "vec_id", n_dims), books
-    ).select("vec_id", "m", F.col("cid").alias("code_cid"))
+        _subspace_rows(base.selectExpr("vec_id", "e"), "vec_id", n_dims), books
+    ).selectExpr("vec_id", "m", "cid AS code_cid")
     return base, books, codes
 
 
@@ -842,30 +829,27 @@ def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
     vec_id % ANN_QUERY_EVERY cohort; ANN_TOP_K neighbors each.
     Output: (query_id, rank, neighbor_id)."""
     base, cexp, codes = _pq(embeddings, n_dims)
-    qbase = base.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0)
+    qbase = base.where(f"vec_id % {ANN_QUERY_EVERY:d} = 0")
     qexp = _subspace_rows(
-        qbase.select("vec_id", "e"), "query_id", n_dims
+        qbase.selectExpr("vec_id", "e"), "query_id", n_dims
     ).withColumnRenamed("se", "qe")
-    qnorm = qbase.select(F.col("vec_id").alias("query_id"), F.col("nrm").alias("qn"))
-    lut = qexp.join(cexp, "m").select(
-        "query_id", "m", "cid",
-        _dot(F.col("qe"), F.col("ce")).alias("part"),
-        _dot(F.col("ce"), F.col("ce")).alias("cn2"),
+    qnorm = qbase.selectExpr("vec_id AS query_id", "nrm AS qn")
+    lut = qexp.join(cexp, "m").selectExpr(
+        "query_id", "m", "cid", f"{_dot('qe', 'ce')} AS part", f"{_dot('ce', 'ce')} AS cn2"
     )
     scored = (
         codes.join(F.broadcast(lut),
                    (codes.m == lut.m) & (codes.code_cid == lut.cid))
-        .filter(F.col("vec_id") != F.col("query_id"))
+        .where("vec_id != query_id")
         .groupBy("query_id", "vec_id")
-        .agg(F.sum("part").alias("num"), F.sum("cn2").alias("rn2"))
+        .agg(F.expr("sum(part) AS num"), F.expr("sum(cn2) AS rn2"))
         .join(F.broadcast(qnorm), "query_id")
-        .select(
+        .selectExpr(
             "query_id", "vec_id",
-            F.round(F.col("num") / (F.col("qn") * F.sqrt("rn2")) * 1e6)
-            .cast("long").alias("score_u"),
+            "CAST(round(num / (qn * sqrt(rn2)) * 1000000.0D) AS BIGINT) AS score_u",
         )
     )
-    cand = _topk(scored, "score_u", "vec_id", PQ_RERANK_C).select(
+    cand = _topk(scored, "score_u", "vec_id", PQ_RERANK_C).selectExpr(
         "query_id", "vec_id"
     )
     # Exact re-rank: the candidate list is hard-capped at C rows per
@@ -874,17 +858,13 @@ def pq_adc_topk(embeddings: DataFrame, n_dims: int) -> DataFrame:
     # scan — the big side still never shuffles. (At 10^12 scale the
     # driver batches queries, keeping C·Q bounded — same contract as
     # the broadcast LUT.)
-    qfull = qbase.select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
+    qfull = qbase.selectExpr("vec_id AS query_id", "e AS qe", "nrm AS qn")
     exact = (
-        base.select("vec_id", "e", "nrm").join(F.broadcast(cand), "vec_id")
+        base.selectExpr("vec_id", "e", "nrm").join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(qfull), "query_id")
-        .select(
+        .selectExpr(
             "query_id", "vec_id",
-            F.round(
-                _dot(F.col("e"), F.col("qe")) / (F.col("nrm") * F.col("qn")) * 1e6
-            ).cast("long").alias("exact_u"),
+            f"CAST(round({_dot('e', 'qe')} / (nrm * qn) * 1000000.0D) AS BIGINT) AS exact_u",
         )
     )
     return _topk(exact, "exact_u", "vec_id", ANN_TOP_K).withColumnRenamed(
@@ -916,27 +896,26 @@ def ivf_probed_topk(embeddings: DataFrame, n_dims: int | None = None) -> DataFra
     argmin (only id-rows exchange); probing scores the tiny query
     cohort against the broadcast centroid table and keeps the
     IVF_PROBES best cells per query with the ``_topk`` tail (score
-    DESC, centroid id ASC), as the DuckDB twin does. Candidate scoring
-    joins on the cell id and broadcasts the query vectors back in, so
-    no stage ever shuffles the full vector set against the queries.
-    Output: (query_id, rank, neighbor_id)."""
+    DESC, centroid id ASC), as the DuckDB twin does. The probe rows
+    carry each query's vector and norm (``_topk`` keep), so candidate
+    scoring joins on the cell id with no second read of the query
+    cohort, and no stage ever shuffles the full vector set against the
+    queries. Output: (query_id, rank, neighbor_id)."""
     base, cells, assign = _ivf(embeddings, n_dims)
-    queries = base.filter(F.col("vec_id") % ANN_QUERY_EVERY == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qv"),
-        F.col("nrm").alias("qn"),
+    queries = base.where(f"vec_id % {ANN_QUERY_EVERY:d} = 0").selectExpr(
+        "vec_id AS query_id", "e AS qv", "nrm AS qn"
     )
-    cscored = queries.join(F.broadcast(cells)).select(
-        "query_id", "centroid_id",
-        _cosine_score_q(F.col("qv"), F.col("qn"), F.col("ce"), F.col("cn")).alias("score_q"),
+    cscored = queries.join(F.broadcast(cells)).selectExpr(
+        "query_id", "centroid_id", "qv", "qn",
+        f"{_cosine_score_q('qv', 'qn', 'ce', 'cn')} AS score_q",
     )
-    probes = _topk(cscored, "score_q", "centroid_id", IVF_PROBES)
+    probes = _topk(cscored, "score_q", "centroid_id", IVF_PROBES, keep=("qv", "qn"))
 
-    cand = assign.join(F.broadcast(probes.drop("rank")), "centroid_id").filter(
-        F.col("vec_id") != F.col("query_id")
+    cand = assign.join(F.broadcast(probes.drop("rank")), "centroid_id").where(
+        "vec_id != query_id"
     ).hint("merge")  # planner-opaque cardinality; see embedding_near_dups
-    scored = cand.join(base, "vec_id").join(F.broadcast(queries), "query_id").withColumn(
-        "score_q", _cosine_score_q(F.col("qv"), F.col("qn"), F.col("e"), F.col("nrm"))
+    scored = cand.join(base, "vec_id").selectExpr(
+        "*", f"{_cosine_score_q('qv', 'qn', 'e', 'nrm')} AS score_q"
     )
     return _topk(scored, "score_q", "vec_id", ANN_TOP_K).withColumnRenamed(
         "vec_id", "neighbor_id"

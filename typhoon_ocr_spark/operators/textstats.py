@@ -6,6 +6,17 @@ whose per-document argmax is one functions.udfs.row_map pass.
 
 Cross-engine determinism: ratios are emitted as rounded per-mille
 BIGINTs, hashes as md5 hex strings (see functions/textsql.py).
+
+Build cost: projections are Spark SQL texts (``selectExpr`` /
+``F.expr``) holding constant literals only — never values read from
+the data — with every string constant quoted by
+``textsql.sql_string``; the JVM parses each text in one call, where
+the same Column expression is built node by node over py4j. Each text
+is written to analyze to the plan the Column form gave: doubles carry
+``D`` (a bare ``1000.0`` is DECIMAL in Spark SQL) and AND chains are
+parenthesized left-deep, as ``&`` builds them. Split patterns that
+hold a backslash (line, paragraph, whitespace, PII) stay Column
+literals, and so do the expressions built on them.
 """
 
 from __future__ import annotations
@@ -34,14 +45,22 @@ from ..functions.textsql import (
     STOPWORDS,
     THAI_NEGATED_CLASS,
     WS_SPLIT_PATTERN,
+    sql_string,
 )
 from ..functions.udfs import row_map
 from ..plans.spread import maybe_spread
 from .dedup import _raw_tokens, word_tokens
 
 
-def _per_mille(num: Column, den: Column) -> Column:
-    return F.round(F.lit(1000.0) * num / F.greatest(den, F.lit(1))).cast("long")
+def _per_mille(num: str, den: str) -> str:
+    """round(1000 · num / max(den, 1)) as a BIGINT, over SQL texts."""
+    return f"CAST(round(1000.0D * ({num}) / greatest({den}, 1)) AS BIGINT)"
+
+
+def _and(*preds: str) -> str:
+    """The conjunction of SQL predicates, left-deep as ``&`` chains
+    Columns (the SQL parser would balance a bare AND chain)."""
+    return functools.reduce(lambda p, q: f"({p}) AND ({q})", preds)
 
 
 def _spread_docs(
@@ -51,24 +70,23 @@ def _spread_docs(
     spread (plans.spread.maybe_spread): every operator below is map-only (or
     map-heavy before its first exchange), so a single-row-group input
     file would serialize it onto one task (r6 measurement: the whole
-    textstats family ran single-core at bench scale)."""
-    cols = [F.col("doc_id")]
-    for name, expr in (extra or {}).items():
-        cols.append(expr.alias(name))
-    cols.append(F.col(text_col))
-    return maybe_spread(documents.select(*cols), "doc_id")
+    textstats family ran single-core at bench scale). ``extra`` maps
+    names to SQL texts over the input."""
+    cols = [f"{expr} AS {name}" for name, expr in (extra or {}).items()]
+    narrow = documents.selectExpr("doc_id", *cols, text_col)
+    return maybe_spread(narrow, "doc_id", source=documents)
 
 
 def language_id(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """n-gram-free language ID heuristic: Thai-codepoint density.
     Output: (doc_id, thai_per_mille, pred_lang)."""
-    n = F.length(F.col(text_col))
-    thai = F.length(F.regexp_replace(F.col(text_col), THAI_NEGATED_CLASS, ""))
-    per_mille = _per_mille(thai, n)
-    return _spread_docs(documents, text_col).select(
+    t = text_col
+    thai = f"length(regexp_replace({t}, {sql_string(THAI_NEGATED_CLASS)}, ''))"
+    per_mille = _per_mille(thai, f"length({t})")
+    return _spread_docs(documents, t).selectExpr(
         "doc_id",
-        per_mille.alias("thai_per_mille"),
-        F.when(per_mille >= 100, F.lit("th")).otherwise(F.lit("en")).alias("pred_lang"),
+        f"{per_mille} AS thai_per_mille",
+        f"CASE WHEN {per_mille} >= 100 THEN 'th' ELSE 'en' END AS pred_lang",
     )
 
 
@@ -76,28 +94,23 @@ def quality_scores(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality gate: length / punctuation / digit / stopword ratios.
     Output: (doc_id, n_chars, n_tokens, punct_per_mille,
     digit_per_mille, stop_per_mille, keep)."""
-    text = F.col(text_col)
-    n_chars = F.length(text)
-    toks = word_tokens(text)
-    n_tokens = F.size(toks).cast("long")
-    punct = F.length(text) - F.length(F.regexp_replace(text, PUNCT_CLASS, ""))
-    digits = F.length(text) - F.length(F.regexp_replace(text, "[0-9]", ""))
-    stops = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS))).cast("long")
-    punct_pm = _per_mille(punct, n_chars)
-    digit_pm = _per_mille(digits, n_chars)
-    stop_pm = _per_mille(stops, n_tokens)
-    return _spread_docs(documents, text_col).select(
+    t = text_col
+    toks = word_tokens(t)
+    n_tokens = f"CAST(size({toks}) AS BIGINT)"
+    punct = f"length({t}) - length(regexp_replace({t}, {sql_string(PUNCT_CLASS)}, ''))"
+    digits = f"length({t}) - length(regexp_replace({t}, '[0-9]', ''))"
+    stopwords = ", ".join(map(sql_string, STOPWORDS))
+    stops = f"CAST(size(filter({toks}, x -> x IN ({stopwords}))) AS BIGINT)"
+    punct_pm = _per_mille(punct, f"length({t})")
+    digit_pm = _per_mille(digits, f"length({t})")
+    return _spread_docs(documents, t).selectExpr(
         "doc_id",
-        n_chars.cast("long").alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        punct_pm.alias("punct_per_mille"),
-        digit_pm.alias("digit_per_mille"),
-        stop_pm.alias("stop_per_mille"),
-        (
-            (n_tokens >= 5)
-            & (punct_pm <= 300)
-            & (digit_pm <= 500)
-        ).alias("keep"),
+        f"CAST(length({t}) AS BIGINT) AS n_chars",
+        f"{n_tokens} AS n_tokens",
+        f"{punct_pm} AS punct_per_mille",
+        f"{digit_pm} AS digit_per_mille",
+        f"{_per_mille(stops, n_tokens)} AS stop_per_mille",
+        _and(f"{n_tokens} >= 5", f"{punct_pm} <= 300", f"{digit_pm} <= 500") + " AS keep",
     )
 
 
@@ -123,12 +136,10 @@ def _nonempty_lines(text: Column, pattern: str = LINE_SPLIT_PATTERN) -> Column:
     )
 
 
-def _charsum(arr: Column) -> Column:
-    """Total characters across a string array (0 for empty arrays —
-    mirrored by coalesce(...,0) in the DuckDB twin)."""
-    return F.aggregate(
-        arr, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
+def _charsum(arr: str) -> str:
+    """Total characters across a string array, as a SQL text (0 for
+    empty arrays — mirrored by coalesce(...,0) in the DuckDB twin)."""
+    return f"aggregate({arr}, CAST(0 AS BIGINT), (acc, x) -> acc + length(x))"
 
 
 def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -153,32 +164,24 @@ def repetition_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
             )
         ).alias("a"),
     )
-    b = a.select(
+    b = a.selectExpr(
         "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("a.lines").alias("lines"),
-                    F.array_distinct("a.lines").alias("dlines"),
-                    F.size("a.paras").cast("long").alias("n_paras"),
-                    F.size(F.array_distinct("a.paras")).cast("long").alias("n_dparas"),
-                )
-            )
-        ).alias("b"),
+        "explode(array(struct(a.lines AS lines, array_distinct(a.lines) AS dlines, "
+        "CAST(size(a.paras) AS BIGINT) AS n_paras, "
+        "CAST(size(array_distinct(a.paras)) AS BIGINT) AS n_dparas))) AS b",
     )
-    n_lines = F.size("b.lines").cast("long")
-    n_dlines = F.size("b.dlines").cast("long")
-    line_chars = _charsum(F.col("b.lines"))
-    dline_chars = _charsum(F.col("b.dlines"))
-    return b.select(
+    n_lines = "CAST(size(b.lines) AS BIGINT)"
+    n_dlines = "CAST(size(b.dlines) AS BIGINT)"
+    line_chars = _charsum("b.lines")
+    dline_chars = _charsum("b.dlines")
+    return b.selectExpr(
         "doc_id",
-        n_lines.alias("n_lines"),
-        _per_mille(n_lines - n_dlines, n_lines).alias("dup_line_per_mille"),
-        _per_mille(line_chars - dline_chars, line_chars).alias("dup_line_char_per_mille"),
-        F.col("b.n_paras").alias("n_paras"),
-        _per_mille(
-            F.col("b.n_paras") - F.col("b.n_dparas"), F.col("b.n_paras")
-        ).alias("dup_para_per_mille"),
+        f"{n_lines} AS n_lines",
+        f"{_per_mille(f'{n_lines} - {n_dlines}', n_lines)} AS dup_line_per_mille",
+        f"{_per_mille(f'{line_chars} - {dline_chars}', line_chars)}"
+        " AS dup_line_char_per_mille",
+        "b.n_paras AS n_paras",
+        f"{_per_mille('b.n_paras - b.n_dparas', 'b.n_paras')} AS dup_para_per_mille",
     )
 
 
@@ -189,7 +192,7 @@ def gopher_quality(
     frozen in functions/textsql.py): mean word length window,
     ellipsis-line and bullet-line caps, minimum alphabetic-word
     fraction, duplicate-line caps. Map-only column expressions.
-    ``passthrough`` ({name: expression-over-the-input}) columns ride
+    ``passthrough`` ({name: SQL text over the input}) columns ride
     along so composers stay single-scan.
     Output: (doc_id, [passthrough...,] mean_word_len_centi,
     ellipsis_line_per_mille, bullet_line_per_mille,
@@ -205,72 +208,61 @@ def gopher_quality(
         F.explode(
             F.array(
                 F.struct(
-                    word_tokens(text).alias("toks"),
+                    F.expr(word_tokens(text_col)).alias("toks"),
                     ws.alias("ws"),
                     _nonempty_lines(text).alias("lines"),
                 )
             )
         ).alias("a"),
     )
-    b = a.select(
+    b = a.selectExpr(
         "doc_id",
         *pass_names,
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("a.toks").alias("toks"),
-                    F.col("a.ws").alias("ws"),
-                    F.col("a.lines").alias("lines"),
-                    F.array_distinct("a.lines").alias("dlines"),
-                )
-            )
-        ).alias("b"),
+        "explode(array(struct(a.toks AS toks, a.ws AS ws, a.lines AS lines, "
+        "array_distinct(a.lines) AS dlines))) AS b",
     )
-    n_toks = F.size("b.toks").cast("long")
-    n_ws = F.size("b.ws").cast("long")
-    n_lines = F.size("b.lines").cast("long")
-    line_chars = _charsum(F.col("b.lines"))
-    dline_chars = _charsum(F.col("b.dlines"))
-    mean_centi = F.round(
-        F.lit(100.0) * _charsum(F.col("b.toks")) / F.greatest(n_toks, F.lit(1))
-    ).cast("long")
-    ellipsis = F.size(
-        F.filter(
-            F.col("b.lines"),
-            lambda x: functools.reduce(
-                lambda p, q: p | q, [x.endswith(s) for s in ELLIPSIS_SUFFIXES]
-            ),
-        )
-    ).cast("long")
-    bullet = F.size(
-        F.filter(F.col("b.lines"), lambda x: x.substr(1, 1).isin(*BULLET_PREFIXES))
-    ).cast("long")
-    alpha = F.size(
-        F.filter(F.col("b.ws"), lambda x: x.rlike(ALPHA_WORD_CLASS))
-    ).cast("long")
+    n_toks = "CAST(size(b.toks) AS BIGINT)"
+    n_ws = "CAST(size(b.ws) AS BIGINT)"
+    n_lines = "CAST(size(b.lines) AS BIGINT)"
+    line_chars = _charsum("b.lines")
+    dline_chars = _charsum("b.dlines")
+    mean_centi = (
+        f"CAST(round(100.0D * {_charsum('b.toks')} / greatest({n_toks}, 1)) AS BIGINT)"
+    )
+    ends = functools.reduce(
+        lambda p, q: f"({p}) OR ({q})",
+        [f"endswith(x, {sql_string(s)})" for s in ELLIPSIS_SUFFIXES],
+    )
+    bullets = ", ".join(map(sql_string, BULLET_PREFIXES))
+    ellipsis = f"CAST(size(filter(b.lines, x -> {ends})) AS BIGINT)"
+    bullet = f"CAST(size(filter(b.lines, x -> substr(x, 1, 1) IN ({bullets}))) AS BIGINT)"
+    alpha = (
+        f"CAST(size(filter(b.ws, x -> x RLIKE {sql_string(ALPHA_WORD_CLASS)})) AS BIGINT)"
+    )
     ellipsis_pm = _per_mille(ellipsis, n_lines)
     bullet_pm = _per_mille(bullet, n_lines)
     alpha_pm = _per_mille(alpha, n_ws)
-    dup_line_pm = _per_mille(n_lines - F.size("b.dlines").cast("long"), n_lines)
-    dup_char_pm = _per_mille(line_chars - dline_chars, line_chars)
-    return b.select(
+    dup_line_pm = _per_mille(f"{n_lines} - CAST(size(b.dlines) AS BIGINT)", n_lines)
+    dup_char_pm = _per_mille(f"{line_chars} - {dline_chars}", line_chars)
+    keep = _and(
+        f"{mean_centi} >= {GOPHER_MIN_MEAN_WORD_LEN_CENTI:d}",
+        f"{mean_centi} <= {GOPHER_MAX_MEAN_WORD_LEN_CENTI:d}",
+        f"{ellipsis_pm} <= {GOPHER_MAX_ELLIPSIS_LINE_PM:d}",
+        f"{bullet_pm} <= {GOPHER_MAX_BULLET_LINE_PM:d}",
+        f"{alpha_pm} >= {GOPHER_MIN_ALPHA_WORD_PM:d}",
+        f"{dup_line_pm} <= {GOPHER_MAX_DUP_LINE_PM:d}",
+        f"{dup_char_pm} <= {GOPHER_MAX_DUP_LINE_CHAR_PM:d}",
+    )
+    return b.selectExpr(
         "doc_id",
         *pass_names,
-        mean_centi.alias("mean_word_len_centi"),
-        ellipsis_pm.alias("ellipsis_line_per_mille"),
-        bullet_pm.alias("bullet_line_per_mille"),
-        alpha_pm.alias("alpha_word_per_mille"),
-        dup_line_pm.alias("dup_line_per_mille"),
-        dup_char_pm.alias("dup_line_char_per_mille"),
-        (
-            (mean_centi >= GOPHER_MIN_MEAN_WORD_LEN_CENTI)
-            & (mean_centi <= GOPHER_MAX_MEAN_WORD_LEN_CENTI)
-            & (ellipsis_pm <= GOPHER_MAX_ELLIPSIS_LINE_PM)
-            & (bullet_pm <= GOPHER_MAX_BULLET_LINE_PM)
-            & (alpha_pm >= GOPHER_MIN_ALPHA_WORD_PM)
-            & (dup_line_pm <= GOPHER_MAX_DUP_LINE_PM)
-            & (dup_char_pm <= GOPHER_MAX_DUP_LINE_CHAR_PM)
-        ).alias("keep"),
+        f"{mean_centi} AS mean_word_len_centi",
+        f"{ellipsis_pm} AS ellipsis_line_per_mille",
+        f"{bullet_pm} AS bullet_line_per_mille",
+        f"{alpha_pm} AS alpha_word_per_mille",
+        f"{dup_line_pm} AS dup_line_per_mille",
+        f"{dup_char_pm} AS dup_line_char_per_mille",
+        f"{keep} AS keep",
     )
 
 
@@ -314,25 +306,20 @@ def training_corpus_keep(documents: DataFrame, text_col: str = "text") -> DataFr
     scan (lang + md5 ride through gopher_quality's passthrough), one
     shuffle (the text_md5 window). Output: (doc_id, quality_keep,
     is_keeper, lang_ok, kept)."""
-    from pyspark.sql import Window
-
     q = gopher_quality(
         documents,
         text_col,
-        passthrough={
-            "lang": F.col("lang"),
-            "text_md5": F.md5(F.col(text_col)),
-        },
+        passthrough={"lang": "lang", "text_md5": f"md5({text_col})"},
     )
-    keeper_id = F.min("doc_id").over(Window.partitionBy("text_md5"))
-    flagged = q.select(
+    langs = ", ".join(map(sql_string, KNOWN_LANGS))
+    flagged = q.selectExpr(
         "doc_id",
-        F.col("keep").alias("quality_keep"),
-        (F.col("doc_id") == keeper_id).alias("is_keeper"),
-        F.col("lang").isin(*KNOWN_LANGS).alias("lang_ok"),
+        "keep AS quality_keep",
+        "doc_id = min(doc_id) OVER (PARTITION BY text_md5) AS is_keeper",
+        f"lang IN ({langs}) AS lang_ok",
     )
-    return flagged.withColumn(
-        "kept", F.col("quality_keep") & F.col("is_keeper") & F.col("lang_ok")
+    return flagged.selectExpr(
+        "*", _and("quality_keep", "is_keeper", "lang_ok") + " AS kept"
     )
 
 
@@ -373,11 +360,11 @@ def top_bigram(documents: DataFrame, text_col: str = "text") -> DataFrame:
         _top_bigram_of_tokens,
         "bigram string, occurrences long, n_bigrams long",
     )
-    return picked.select(
+    return picked.selectExpr(
         "doc_id",
         "bigram",
         "occurrences",
-        _per_mille(F.col("occurrences"), F.col("n_bigrams")).alias("top_per_mille"),
+        f"{_per_mille('occurrences', 'n_bigrams')} AS top_per_mille",
     )
 
 
@@ -425,11 +412,7 @@ def model_quality_score(documents: DataFrame, text_col: str = "text") -> DataFra
     Output: (doc_id, n_tokens, logit_pm, keep)."""
     from ..functions.textsql import MODEL_BUCKETS
 
-    toks = word_tokens(F.col(text_col))
-    bucket = lambda t: (  # noqa: E731
-        F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
-        % MODEL_BUCKETS
-    )
+    toks = word_tokens(text_col)
     # The placeholder model is computed from its generating formula
     # (model_weights_pm's Knuth hash) instead of an element_at over a
     # 1024-literal array: a literal array inside a HOF lambda is
@@ -438,23 +421,19 @@ def model_quality_score(documents: DataFrame, text_col: str = "text") -> DataFra
     # broadcast-table lookup. Integer per-mille weights sum EXACTLY —
     # a double fold would land on round-half boundaries differently
     # than the oracle's list_sum.
-    weight_pm = lambda t: (  # noqa: E731
-        (bucket(t) * F.lit(2654435761)) % 2001 - 1000
+    bucket = f"CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % {MODEL_BUCKETS:d}"
+    weight_pm = f"({bucket} * 2654435761) % 2001 - 1000"
+    wsum_pm = (
+        f"aggregate(transform({toks}, x -> {weight_pm}), CAST(0 AS BIGINT), "
+        "(acc, x) -> acc + x)"
     )
-    wsum_pm = F.aggregate(
-        F.transform(toks, weight_pm),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    n_tokens = F.size(toks).cast("long")
-    logit_pm = F.floor(
-        wsum_pm / F.greatest(n_tokens, F.lit(1)) + F.lit(0.5)
-    ).cast("long")
-    return _spread_docs(documents, text_col).select(
+    n_tokens = f"CAST(size({toks}) AS BIGINT)"
+    logit_pm = f"CAST(floor({wsum_pm} / greatest({n_tokens}, 1) + 0.5D) AS BIGINT)"
+    return _spread_docs(documents, text_col).selectExpr(
         "doc_id",
-        n_tokens.alias("n_tokens"),
-        logit_pm.alias("logit_pm"),
-        (logit_pm > 0).alias("keep"),
+        f"{n_tokens} AS n_tokens",
+        f"{logit_pm} AS logit_pm",
+        f"{logit_pm} > 0 AS keep",
     )
 
 
@@ -522,9 +501,8 @@ def vocab_topk(
     orderBy().limit() = TakeOrderedAndProject: parallel per-partition
     top-k, never a global sort of the vocabulary. Ties break on the
     token string. Output: (token, occurrences, doc_freq)."""
-    toks = word_tokens(F.col(text_col))
-    rows = _spread_docs(documents, text_col).select(
-        "doc_id", F.explode(toks).alias("token")
+    rows = _spread_docs(documents, text_col).selectExpr(
+        "doc_id", f"explode({word_tokens(text_col)}) AS token"
     )
     counts = rows.groupBy("token").agg(
         F.count("*").cast("long").alias("occurrences"),

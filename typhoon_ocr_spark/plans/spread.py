@@ -31,7 +31,7 @@ def _byte_string_as_bytes(value: str) -> int:
     return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
 
 
-def maybe_spread(df: DataFrame, key: str) -> DataFrame:
+def maybe_spread(df: DataFrame, key: str, source: DataFrame | None = None) -> DataFrame:
     """Adaptive unsplittable-input guard (r6). Parquet can only split
     at row-group boundaries: a single-row-group file plans N byte-range
     splits but all rows land in ONE task, serializing every downstream
@@ -45,7 +45,13 @@ def maybe_spread(df: DataFrame, key: str) -> DataFrame:
     one task-sized split per core — at 100 TB the gate never fires and
     no exchange is added). Frames the gate cannot inspect (no input
     files: in-memory, JDBC, catalog providers) and non-local stores are
-    left untouched."""
+    left untouched.
+
+    ``source`` is the frame ``df`` projects, which reads the same
+    files: its input files are listed instead of ``df``'s. Listing them
+    runs the optimizer over the frame once and a frame keeps its
+    optimized plan, so a source read once and projected by many
+    operators is not optimized again at every build."""
     if df.isStreaming:  # micro-batch twins keep their own partitioning
         return df
     spark = df.sparkSession
@@ -53,7 +59,7 @@ def maybe_spread(df: DataFrame, key: str) -> DataFrame:
     try:
         # a JVM array: its length is one py4j round trip, listing it
         # one per file, so a many-file input is never listed
-        files = df._jdf.inputFiles()
+        files = (df if source is None else source)._jdf.inputFiles()
         n_files = len(files)
     except Exception:
         return df

@@ -279,10 +279,7 @@ def streaming_corpus_keep(doc_stream: DataFrame) -> DataFrame:
 
     flagged = gopher_quality(
         doc_stream,
-        passthrough={
-            "lang": F.col("lang"),
-            "text_md5": F.md5(F.col("text")),
-        },
+        passthrough={"lang": "lang", "text_md5": "md5(text)"},
     )
     kept = flagged.filter(F.col("keep") & F.col("lang").isin(*KNOWN_LANGS))
     return streaming_first_seen(
@@ -365,7 +362,7 @@ def streaming_sequence_pack(doc_stream: DataFrame, budget: int = None,
     frame = doc_stream.select(
         "doc_id",
         (F.col("doc_id") % shards).cast("long").alias("shard"),
-        F.size(word_tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        F.expr(f"CAST(size({word_tokens('text')}) AS BIGINT) AS n_tokens"),
     )
     return frame.groupBy("shard").applyInPandasWithState(
         _make_pack_fn(budget),
